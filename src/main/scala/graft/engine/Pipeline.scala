@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Pipeline control-plane parity (SURVEY.md §2.1, §2.10): the
@@ -74,9 +75,22 @@ object Pipeline {
     }
 
   /** D2 at the sink — conflict-ignoring append into a parquet "table"
-    * directory: dedup the batch, anti-join existing keys, append only
-    * novel rows. First write creates the table. This is the
-    * `ON CONFLICT (pk) DO NOTHING` idempotency story against files.
+    * directory: dedup the batch ([[Star.firstPerKey]]), anti-join
+    * existing keys, append only novel rows. First write creates the
+    * table. This is the `ON CONFLICT (pk) DO NOTHING` idempotency story
+    * against files. Returns the number of rows appended.
+    *
+    * One write action: the novel-row count is an `Observation` on the
+    * write job itself, so nothing is cached and no count job runs. A
+    * zero-novel append still leaves the table as it was (an
+    * unconditional append would otherwise leave empty part files behind
+    * on every scheduled no-op re-run): when the observed count is 0, a
+    * table directory this call created is deleted, and on an existing
+    * table the data files missing from the listing taken before the
+    * write are deleted. A crash between the write and that cleanup
+    * leaves at most one zero-row part file behind, which is harmless:
+    * reads see no rows from it, and a later append treats the table as
+    * existing.
     */
   def conflictIgnoringAppend(
       spark: SparkSession, batch: DataFrame, dir: String, keys: Seq[String]): Long = {
@@ -88,30 +102,26 @@ object Pipeline {
     // holding only _temporary/_SUCCESS debris (a crashed first append)
     // must count as first-write, or every retry would wedge on an
     // unreadable empty table.
-    val exists = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        !(n.startsWith("_") || n.startsWith("."))
-      }
-    }
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataFiles(): Set[String] = fs.listStatus(p).iterator.map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    val dirExisted = fs.exists(p)
+    val before = if (dirExisted) dataFiles() else Set.empty[String]
     val novel =
-      if (!exists) batch.dropDuplicates(keys)
+      if (before.isEmpty) Star.firstPerKey(batch, keys)
       else Star.conflictIgnoreAppend(batch, spark.read.parquet(dir), keys)
     // Append is not atomic with respect to the existence check —
     // single-writer semantics assumed, matching the reference's single
     // loader process (src/load.py runs alone).
-    // Cache the novel rows across count + write so the anti-join runs
-    // once AND a zero-novel rerun writes nothing — an unconditional
-    // append would leave empty part files behind on every scheduled
-    // no-op re-run, degrading the table directory over time.
-    novel.persist()
-    try {
-      val n = novel.count()
-      if (n > 0) novel.write.mode(SaveMode.Append).parquet(dir)
-      n
-    } finally novel.unpersist()
+    val obs = Observation()
+    novel.observe(obs, count(lit(1)).as("rows")).write.mode(SaveMode.Append).parquet(dir)
+    val n = obs.get("rows").asInstanceOf[Long]
+    if (n == 0) {
+      if (!dirExisted) fs.delete(p, true)
+      else (dataFiles() -- before).foreach(f => fs.delete(new Path(p, f), false))
+    }
+    n
   }
 
   /** O1/O2 — the full extract → transform → load flow over directories
@@ -128,8 +138,7 @@ object Pipeline {
     // Per-stage row telemetry (A2/O4) rides each stage's OWN write job
     // as Observation metrics — the reference's per-chunk progress prints
     // (src/load.py:61-66) without any extra count jobs or re-scans:
-    // the whole pipeline is exactly one job per stage.
-    import org.apache.spark.sql.Observation
+    // the whole pipeline is exactly one write action per stage.
 
     // extract: source scan → raw parquet (S3)
     val obsExtract = Observation()

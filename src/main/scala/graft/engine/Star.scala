@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
 
@@ -45,18 +46,30 @@ object Star {
 
   /** D2: conflict-ignoring append (`ON CONFLICT (pk) DO NOTHING`,
     * reference `IowaLiquor-RDS.session.sql:94,...,182`): dedup the batch
-    * on the key, then keep only rows whose key is absent from
-    * `existing`. PG keeps the first arriving row; Spark's
-    * `dropDuplicates` keeps an arbitrary row per key — set-equal on the
-    * keys, documented in SURVEY.md §7.4 risk 2. The anti-join
-    * broadcasts whichever side is under the broadcast threshold;
-    * at scale, `existing` should be the keys-only projection.
+    * on the key with [[firstPerKey]], then keep only rows whose key is
+    * absent from `existing`. PG keeps the first arriving row; the dedup
+    * keeps an arbitrary row per key — set-equal on the keys, documented
+    * in SURVEY.md §7.4 risk 2. The anti-join broadcasts whichever side
+    * is under the broadcast threshold; at scale, `existing` should be
+    * the keys-only projection.
     */
   def conflictIgnoreAppend(newRows: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame = {
     val existingKeys = existing.select(keys.map(col).toIndexedSeq: _*).distinct()
-    newRows
-      .dropDuplicates(keys)
-      .join(existingKeys, keys, "left_anti")
+    firstPerKey(newRows, keys).join(existingKeys, keys, "left_anti")
+  }
+
+  /** One arbitrary row per distinct key tuple, null keys included —
+    * `dropDuplicates(keys)`'s contract. On a wide row `dropDuplicates`
+    * plans as partial + final SortAggregate carrying a `first` buffer
+    * per non-key column (string buffers are not fixed-width, so no hash
+    * aggregate); the rank-1 window is one key shuffle plus a spillable
+    * sort, which Spark cuts short with a WindowGroupLimit.
+    */
+  def firstPerKey(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col).toIndexedSeq
+    df.withColumn("__rn", row_number().over(Window.partitionBy(k: _*).orderBy(k: _*)))
+      .where(col("__rn") === 1)
+      .drop("__rn")
   }
 
   /** J1 violation audit: fact rows whose FK has no match in the dim

@@ -388,10 +388,14 @@ class PagedScan(required: StructType, lo: Long, hi: Long, pageSize: Int,
     * the build side's date values at RUNTIME; monotone dates → narrow
     * the page range to [min, max] before planning partitions — the
     * page-grain analog of dynamic partition pruning (exact predicate
-    * re-applied by Spark above the scan).
+    * re-applied by Spark above the scan). Only a scan that still reads
+    * `date` can name it: a pruned one offers no runtime filter, or
+    * analysis of a join over it fails to resolve the column.
     */
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column("date"))
+    if (required.fieldNames.contains("date"))
+      Array(org.apache.spark.sql.connector.expressions.Expressions.column("date"))
+    else Array.empty
 
   override def filter(filters: Array[Filter]): Unit = if (indexPruning) filters.foreach {
     case In("date", vs) if vs.nonEmpty =>

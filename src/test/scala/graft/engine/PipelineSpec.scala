@@ -1,9 +1,15 @@
 package graft.engine
 
 import graft.SparkSpecBase
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline parity: extract→transform→load over temp dirs,
   * CSV \N round-trip, conflict-ignoring idempotent re-run.
@@ -68,6 +74,64 @@ class PipelineSpec extends SparkSpecBase {
     val n2 = Pipeline.conflictIgnoringAppend(spark, b2, dir, Seq("k"))
     assert(n2 == 1) // only key 3 is novel
     assert(spark.read.parquet(dir).select("k").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+  }
+
+  test("conflictIgnoringAppend: a zero-novel append leaves the table unchanged") {
+    val dir = tmp() + "/table"
+    def dataFiles(d: String) = new java.io.File(d).list()
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted.toSeq
+    val b = Seq((1, "v1"), (2, "v2")).toDF("k", "v")
+    assert(Pipeline.conflictIgnoringAppend(spark, b, dir, Seq("k")) == 2)
+    val files = dataFiles(dir)
+    assert(Pipeline.conflictIgnoringAppend(spark, b, dir, Seq("k")) == 0)
+    assert(dataFiles(dir) == files)
+    assert(spark.read.parquet(dir).count() == 2)
+
+    val fresh = tmp() + "/fresh"
+    assert(Pipeline.conflictIgnoringAppend(spark, b.limit(0), fresh, Seq("k")) == 0)
+    assert(!new java.io.File(fresh).exists())
+  }
+
+  test("conflictIgnoringAppend: one write job, no cache scan and no SortAggregate") {
+    val src = tmp() + "/batch"
+    Seq((1, "a", "x"), (1, "a", "y"), (2, "b", "z")).toDF("k", "s", "t")
+      .write.parquet(src)
+    val batch = spark.read.parquet(src)
+    val plans = jobPlans {
+      assert(Pipeline.conflictIgnoringAppend(spark, batch, tmp() + "/table", Seq("k")) == 2)
+    }
+    assert(plans.size == 1, plans.mkString("\n----\n")) // the write; no count action
+    assert(plans.head.contains("InsertIntoHadoopFsRelationCommand"), plans.head)
+    for (bad <- Seq("InMemoryTableScan", "SortAggregate"))
+      assert(!plans.head.contains(bad), plans.head)
+    assert(plans.head.contains("WindowGroupLimit"), plans.head) // rank-1 dedup cut short
+  }
+
+  /** The plan texts (initial and adaptive re-plans) of every SQL
+    * execution that submitted a job while `body` ran; a job outside any
+    * execution counts with an empty plan.
+    */
+  private def jobPlans(body: => Unit): Seq[String] = {
+    val plans = new ConcurrentHashMap[Long, String]
+    val executions = ConcurrentHashMap.newKeySet[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        executions.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .fold(-1L)(_.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.merge(s.executionId, s.physicalPlanDescription, _ + _)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.merge(u.executionId, u.physicalPlanDescription, _ + _)
+        case _ => ()
+      }
+    }
+    ListenerDrain.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerDrain.drain(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    executions.asScala.toSeq.map(plans.getOrDefault(_, ""))
   }
 
   test("registerTable makes the directory addressable from SQL (S8)") {

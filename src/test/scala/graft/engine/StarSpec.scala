@@ -2,6 +2,7 @@ package graft.engine
 
 import graft.SparkSpecBase
 import graft.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Star-schema semantics: PG DOW convention (F7/F8), distinct dims (D1),
@@ -42,6 +43,22 @@ class StarSpec extends SparkSpecBase {
     val out = Star.conflictIgnoreAppend(fresh, existing, Seq("k"))
       .orderBy("k").collect()
     assert(out.map(_.getInt(0)).toSeq == Seq(2, 3)) // 1 skipped; 2 deduped to one row
+
+    // a two-column key, a null key tuple twice, a key repeating with
+    // different non-key values: the pick per key is arbitrary, but the
+    // key set is dropDuplicates' and each tuple yields exactly one row
+    val keys = Seq("a", "b")
+    val batch = Seq[(Option[Int], String, String)](
+      (Some(1), "p", "v1"), (Some(1), "p", "v2"), (Some(1), "q", "v3"),
+      (None, "p", "n1"), (None, "p", "n2"), (Some(2), "p", "v4"), (Some(9), "z", "v5"))
+      .toDF("a", "b", "v")
+    val loaded = Seq((Some(9), "z", "old")).toDF("a", "b", "v")
+    val got = Star.conflictIgnoreAppend(batch, loaded, keys)
+    def keySet(df: DataFrame) = df.select(keys.map(col): _*).collect().toSet
+    val want = keySet(batch.dropDuplicates(keys).join(loaded, keys, "left_anti"))
+    assert(want.size == 4 && keySet(got) == want)
+    assert(got.count() == want.size)
+    assert(got.except(batch).isEmpty) // every survivor is a batch row
   }
 
   test("fkViolations and fkRetain partition the fact") {

@@ -4,6 +4,7 @@ import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
 class PagedProviderSpec extends SparkSpecBase {
+  import spark.implicits._
 
   private def feed(total: Long = 1000, page: Int = 100) =
     spark.read.format("graft.sources.PagedProvider")
@@ -74,6 +75,13 @@ class PagedProviderSpec extends SparkSpecBase {
     assert(parts.length == 1)
     val p = parts.head.asInstanceOf[PagedPartition]
     assert(p.start == 20 && p.end == 50, s"got [${p.start},${p.end})")
+  }
+
+  test("joins over a scan pruned of date plan without a runtime date filter") {
+    val lines = feed(1000, 100).select("invoice_line_no")
+    val keys = Seq("INV1", "INV42", "INV999", "nope").toDF("invoice_line_no")
+    assert(lines.join(keys, Seq("invoice_line_no"), "left_anti").count() == 997)
+    assert(lines.join(keys, Seq("invoice_line_no")).count() == 3)
   }
 
   test("COUNT(*) pushes to the source: closed-form, no row generation") {
