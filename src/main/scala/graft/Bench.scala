@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR
-  * and prints ONE JSON line. A short warm-up action first absorbs
-  * session/JIT/codegen startup so per-query numbers measure the query,
-  * not JVM warm-up.
+  * after one untimed warm-up pass ([[Harness.warmUp]]) and prints ONE
+  * JSON line. Settable env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS and
+  * SPARK_GRAFT_BENCH_ONLY.
   */
 object Bench {
 
@@ -168,13 +166,18 @@ object Bench {
     * case — keeps the record at its floor length).
     */
   def trendJson(drifted: Seq[String]): String =
-    if (drifted.isEmpty) ""
+    cappedList("trend", drifted, MaxNamedTrend)
+
+  /** `"key":[...],` naming at most `cap` entries, then
+    * `"key_more":N,` for the rest; "" when `names` is empty.
+    */
+  private def cappedList(key: String, names: Seq[String], cap: Int): String =
+    if (names.isEmpty) ""
     else {
-      val named = drifted.take(MaxNamedTrend)
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-      val more = if (drifted.size > MaxNamedTrend)
-        s""""trend_more":${drifted.size - MaxNamedTrend},""" else ""
-      s""""trend":$named,$more"""
+      val named = names.take(cap).map("\"" + _ + "\"").mkString("[", ",", "]")
+      val more =
+        if (names.size > cap) s""""${key}_more":${names.size - cap},""" else ""
+      s""""$key":$named,$more"""
     }
 
   /** Short per-query key: the `qN…` prefix before the first
@@ -197,14 +200,18 @@ object Bench {
     * compact line at its floor length on clean runs).
     */
   def outliersJson(flagged: Seq[String]): String =
-    if (flagged.isEmpty) ""
-    else {
-      val named = flagged.take(MaxNamedOutliers)
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-      val more = if (flagged.size > MaxNamedOutliers)
-        s""""outliers_more":${flagged.size - MaxNamedOutliers},""" else ""
-      s""""outliers":$named,$more"""
-    }
+    cappedList("outliers", flagged, MaxNamedOutliers)
+
+  /** Bounded like [[outliersJson]]: per-query attribution for the
+    * few-failure case, an overflow count past the cap.
+    */
+  val MaxNamedFailed: Int = 4
+
+  /** `"failed":[...],` fragment naming the queries that threw; "" on a
+    * clean run (keeps the record at its floor length).
+    */
+  def failedJson(failed: Seq[String]): String =
+    cappedList("failed", failed, MaxNamedFailed)
 
   /** The machine-read stdout record. ONE SHORT line: the driver
     * captures only the last ~2 KB of stdout, and rounds 1-3 all lost
@@ -220,13 +227,18 @@ object Bench {
     * that was almost certainly box contention, and the artifact could
     * not prove it because the sentinel never reached the parsed line.
     * ~70 bytes buys a self-defending artifact.
+    *
+    * A query in `failed` threw: its time is left out of `totalSec` and
+    * `paritySec` by the caller, and it keeps its per-query value only
+    * so the positional array stays one entry per query.
     */
   def compactRecord(results: Seq[(String, Double)], totalSec: Double,
       paritySec: Double, ingestSec: Double, only: Option[Seq[String]],
       sfDir: String, calibStartSec: Double = -1.0, calibEndSec: Double = -1.0,
       load1Start: Double = -1.0, load1End: Double = -1.0,
       flagged: Seq[String] = Seq.empty,
-      trend: Seq[String] = Seq.empty): String = {
+      trend: Seq[String] = Seq.empty,
+      failed: Seq[String] = Seq.empty): String = {
     // r11 restructure (the r10 record was ~5 bytes from the window on
     // a fully-contended run — registration itself was about to stall):
     //   - per-query map renamed `queries` → `queries_ds`, values are
@@ -273,10 +285,27 @@ object Bench {
     val sfBase = sfDir.stripSuffix("/").split('/').last
     s"""{"metric":"total","value":${r2(totalSec)},"unit":"sec",""" +
       s""""parity_sec":${r2(paritySec)},"ingest_sec":${r2(ingestSec)},""" +
-      s"""${onlyJson(only)}${outliersJson(flagged)}${trendJson(trend)}""" +
+      s"""${onlyJson(only)}${failedJson(failed)}${outliersJson(flagged)}${trendJson(trend)}""" +
       s""""calib_sec":[${r2(calibStartSec)},${r2(calibEndSec)}],""" +
       s""""load1":[${r2(load1Start)},${r2(load1End)}],""" +
       s"""$qs,"sf":"$sfBase"}"""
+  }
+
+  /** `value` and `parity_sec`: sums over the queries that did not
+    * throw (a failed query measured nothing; the record names it
+    * instead). Parity is q01-q15, the reference's own operator surface
+    * that BASELINE.md compares against; the rest are the LLM-pipeline /
+    * analytics extensions the reference does not have. NUMERIC key
+    * compare — the old lexicographic `<= "q15_zz"` bound silently swept
+    * q100+ into the parity slice once three-digit query numbers existed
+    * (r9 finding; r8's parity_sec was inflated).
+    */
+  def totals(runs: Seq[Harness.Run]): (Double, Double) = {
+    val ok = runs.filterNot(_.failed)
+    val parity = ok.filter { r =>
+      shortKey(r.name).drop(1).toIntOption.exists(i => i >= 1 && i <= 15)
+    }
+    (ok.map(_.sec).sum, parity.map(_.sec).sum)
   }
 
   def main(args: Array[String]): Unit = {
@@ -284,85 +313,17 @@ object Bench {
     val load1StartV = load1()
     val calibStart = calibrationSec()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Optional ingest stage (reference-parity: the extract stage
-    // re-chunks its source for downstream parallelism): re-lay the
-    // tables as cluster-width part-files once, query the engine's own
-    // layout. Default OFF: measured twice at sf0.1, the relayout jobs
-    // cost ~10 s to save ~3 s of query time — the tables are only
-    // 17 MB, so scan parallelism barely matters; at production SF the
-    // same stage is what makes scans wide at all. Enable with
-    // SPARK_GRAFT_BENCH_RELAYOUT=1 (ingest_sec is reported and counted
-    // into total either way).
-    val tIngest0 = System.nanoTime()
-    val benchDir =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_RELAYOUT", "0") == "1")
-        graft.engine.Layout.relayout(spark, sfDir,
-          s"/tmp/graft_bench_layout_${cpus}", targetFiles = cpus.toInt)
-      else sfDir
-    val ingestSec = (System.nanoTime() - tIngest0) / 1e9
-    // Warm-up: a small scan+shuffle+write-free pipeline touching the
-    // main code paths (parquet reader, hash agg, sort) on tiny data.
-    SparkEntry.entry(spark).count()
-    // JMH-style warm-up: one untimed pass of the full inventory at the
-    // bench SF before the timed pass, so measurements report
-    // steady-state query latency (codegen compiled, page cache warm)
-    // rather than first-run JIT/classloading — the throughput
-    // definition BASELINE.md's reference numbers use (its pandas loop
-    // is warm after the first of 285 chunks). Disable with
-    // SPARK_GRAFT_BENCH_WARMUP=0.
-    val warmupPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Local-profiling filter: SPARK_GRAFT_BENCH_ONLY=q64,q41 restricts
-    // the inventory to the named query prefixes (driver runs unfiltered).
+    // the inventory to the named queries (Harness.selects).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    for (_ <- 1 to warmupPasses; (name, fn) <- selected)
-      try fn(spark, benchDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-      }
-    // noop sink, not count(): count() lets Catalyst prune every column
-    // the count doesn't need, silently skipping projection work (token
-    // counts, coercions) — noop materializes the full output rows.
-    // SPARK_GRAFT_BENCH_REPEAT > 1 (local profiling only; driver runs
-    // the default 1) re-runs each query and reports the MIN — the
-    // steady-state plan cost with one-time codegen/IO and GC noise
-    // stripped out.
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "1").toInt
-    val results = selected.map { case (name, fn) =>
-      val times = (1 to repeat).map { _ =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, benchDir).write.format("noop").mode("overwrite").save()
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> times.min
-    }
-    // total includes the one-time ingest/relayout cost — the queries
-    // run against the layout that stage produced.
-    val total = results.map(_._2).sum + ingestSec
-    // Subtotals: q01-q15 cover the reference's own operator surface
-    // (BASELINE.md compares against that); the rest are the LLM-
-    // pipeline / analytics extensions the reference does not have.
-    // NUMERIC key compare — the old lexicographic `<= "q15_zz"` bound
-    // silently swept q100+ into the parity slice once three-digit
-    // query numbers existed (r9 finding; r8's parity_sec was inflated).
-    val parity = results.filter { case (n, _) =>
-      shortKey(n).drop(1).toIntOption.exists(i => i >= 1 && i <= 15)
-    }.map(_._2).sum
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).filter(_.nonEmpty)
+    val selected = Harness.select(only.getOrElse(Nil))
+    Harness.warmUp(spark, sfDir, selected)
+    val runs = Harness.measure(spark,
+      selected.map { case (name, fn) => name -> (() => fn(spark, sfDir)) })
+    val (total, parity) = totals(runs)
+    val failed = runs.filter(_.failed).map(r => shortKey(r.name))
     // Contention sentinel: loadavg + a fixed CPU calibration sampled at
     // start and end. If calib_sec here is ≫ its idle-box value (or
     // loadavg ≫ this process's core count), the numbers above measured
@@ -372,27 +333,30 @@ object Bench {
     val sentinel =
       s""""sentinel":{"loadavg_start":$loadStart,"loadavg_end":${loadavgJson()},""" +
         s""""calib_sec_start":${r3(calibStart)},"calib_sec_end":${r3(calibEnd)}}"""
-    // Long-form record (full query names, sentinel) → stderr for
-    // humans. A filtered (SPARK_GRAFT_BENCH_ONLY) run must be
-    // distinguishable from a real full round in both records.
-    val qsLong = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
+    // Long-form record (full query names, per-query Spark counters,
+    // sentinel) → stderr for humans. A filtered (SPARK_GRAFT_BENCH_ONLY)
+    // run must be distinguishable from a real full round in both records.
+    val qsLong = runs.map(r => Harness.jsonString(r.name) + ":" + r.detailJson)
       .mkString("{", ",", "}")
     System.err.println(s"""[bench-detail] {"metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""parity_sec":${r3(parity)},"extensions_sec":${r3(total - ingestSec - parity)},""" +
-      s""""ingest_sec":${r3(ingestSec)},${onlyJson(only)}$sentinel,""" +
+      s""""parity_sec":${r3(parity)},"extensions_sec":${r3(total - parity)},""" +
+      s""""ingest_sec":${r3(0.0)},${onlyJson(only)}${failedJson(failed)}$sentinel,""" +
       s""""queries":$qsLong,"sf":"$sfDir"}""")
     // Outlier flags only apply under the conditions the pins were
-    // measured: sf0.1, warmed, default layout, single pass (a cold or
-    // relaid run exceeding a warm pin is a measurement-condition
-    // difference, not positional noise; REPEAT>1 already reports minima).
+    // measured: sf0.1, warmed, single pass. A failed query's time is no
+    // measurement, so it never flags.
     val flagged =
-      if (sfDir.endsWith("sf0.1") && repeat == 1 &&
-          warmupPasses >= 1 && benchDir == sfDir) outliers(results)
+      if (sfDir.endsWith("sf0.1"))
+        outliers(runs.collect { case r if !r.failed => r.name -> r.sec })
       else Seq.empty
-    println(compactRecord(results, total, parity, ingestSec, only, sfDir,
+    // ingest_sec keeps its place in the record's shape; no ingest stage
+    // runs any more, so it always reads 0.0
+    println(compactRecord(runs.map(r => r.name -> r.sec), total, parity,
+      ingestSec = 0.0, only, sfDir,
       calibStartSec = calibStart, calibEndSec = calibEnd,
       load1Start = load1StartV, load1End = load1EndV, flagged = flagged,
-      trend = trendRegressions(PinnedMinSf01, PinnedMinSf01Prev)))
+      trend = trendRegressions(PinnedMinSf01, PinnedMinSf01Prev),
+      failed = failed))
     spark.stop()
   }
 }

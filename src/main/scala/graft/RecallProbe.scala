@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import graft.ops.{Dedup, Similarity}
 
-/** Diagnostic main (like ScaleProbe): prints the measured recall of
+/** Diagnostic main: prints the measured recall of
   * the approximate paths vs their exact twins at a given SF dir, so
   * the contract-oracle floors in PipelineQueries are pinned to
   * evidence, not guesses. Run per scale:
@@ -19,13 +18,7 @@ object RecallProbe {
     // (nCells, nProbe) grid — the section users iterate on when
     // picking an operating point at the big scales
     val onlyGrid = args.lift(1).contains("grid")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     import spark.implicits._
 
     // MinHash LSH vs exact Jaccard pairs

@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
   * (reference `src/load.py:37-44`).
   *
   * The Spark-native shape: each PARTITION formats its rows into one
-  * COPY-ready byte payload (`copyPayloads`), and a writer callback
-  * streams payloads connection-per-partition (`foreachCopyPartition`) —
+  * COPY-ready byte payload (`copyPayloads`), and a caller-supplied
+  * transport streams payloads connection-per-partition (`load`) —
   * exactly where `pgjdbc`'s `CopyManager.copyIn(sql, stream)` plugs in.
   * No database or pg driver exists in this environment, so the
   * transport is caller-supplied; the wire FORMAT — the verifiable
@@ -65,20 +65,6 @@ object CopySink {
     */
   def copyStatement(df: DataFrame, table: String): String =
     s"""COPY $table (${df.columns.mkString(", ")}) FROM STDIN WITH (FORMAT CSV, NULL '\\N')"""
-
-  /** Partition-parallel load driver: `writer` receives the COPY
-    * statement and one payload per invocation and owns the connection
-    * (pgjdbc CopyManager in production; a collector in tests). Runs on
-    * executors — `writer` must be serializable.
-    */
-  def foreachCopyPartition(
-      df: DataFrame, table: String,
-      writer: (String, Array[Byte]) => Unit): Unit = {
-    val stmt = copyStatement(df, table)
-    copyPayloads(df).foreachPartition { (it: Iterator[Array[Byte]]) =>
-      it.foreach(p => writer(stmt, p))
-    }
-  }
 
   /** Caller-supplied COPY transport with the full connection lifecycle
     * pgjdbc's CopyManager expects: one transport per PARTITION

@@ -124,9 +124,7 @@ object Tables {
     * timestamp (MICROS-era fixtures). False on the TIMESTAMP(NANOS)
     * inference refusal — only NonFatal failures count as "refusal";
     * an OOM/interrupt during the footer read must propagate, not
-    * silently pick the int64 arm. Shared by [[events]] and
-    * [[Layout.relayout]] so the two readers can never disagree on
-    * the encoding.
+    * silently pick the int64 arm.
     */
   private[engine] def eventsTsIsNative(spark: SparkSession, path: String): Boolean = {
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}

@@ -672,8 +672,8 @@ object AnnIndex {
     * quantizer was trained on a corpus that no longer looks like the
     * index — rebuild with fresh centroids rather than just folding
     * generations. 20%: centroid assignment quality degrades with
-    * corpus drift, not file layout, and the CurationScaleProbe r11
-    * datum (NOTES.md) shows a fold alone already restores the seek
+    * corpus drift, not file layout, and the r11 16×-scale datum
+    * (NOTES.md, r11 build log) shows a fold alone already restores the seek
     * cost — 9 generations fragmented the 32k-vector/64-cell tree to
     * 544 part files with a 3.8 s probe search, one 3.0 s fold
     * returned it to 64 files and 1.4 s — so layout pays for itself

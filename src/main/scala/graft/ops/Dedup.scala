@@ -232,7 +232,8 @@ object Dedup {
     * |A∩B| from the shingle join, |A∪B| = |A|+|B|-|A∩B|.
     * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
     *
-    * Scale contract (measured, ScaleProbe 16×): linear in corpus size
+    * Scale contract (measured on a 16× replicated corpus, NOTES.md
+    * round 4 "Scale probe"): linear in corpus size
     * but QUADRATIC in duplicate-cluster size — exact all-pair output
     * necessarily generates C(cluster, 2) pairs per shared shingle. On
     * corpora

@@ -73,7 +73,7 @@ object LanguageModel {
     // vocab²-bounded, orders of magnitude smaller than the corpus —
     // localCheckpoint materializes it ONCE for its two consumers
     // (neither static exchange reuse nor AQE stage reuse fires across
-    // these subtrees — measured r17, JobProfile q131: the derived
+    // these subtrees — measured r17 per-query job profile of q131: the derived
     // total WITHOUT the checkpoint re-ran the whole explode+agg).
     val pairCAll = grams.groupBy("a", "b").agg(count(lit(1)).as("n_pair"))
       .localCheckpoint(false)
@@ -125,7 +125,7 @@ object LanguageModel {
     // marginal below) would otherwise each re-run the whole
     // tokenize+explode+aggregate corpus pass — neither static
     // exchange reuse nor AQE stage reuse fires across these subtrees
-    // (measured, JobProfile q83/q89).
+    // (measured, per-query job profiles of q83/q89).
     val c2 = grams.groupBy("lang", "a", "b").agg(count(lit(1)).as("c2"))
       .localCheckpoint(false)
     // prefix counts are the exact integer marginal of the bigram
@@ -209,7 +209,7 @@ object LanguageModel {
     // vocab-bounded count tables are localCheckpoint-materialized once
     // instead of re-running the train-corpus tokenize+explode+agg per
     // consumer (r17; no exchange/stage reuse fires across the
-    // subtrees — measured, JobProfile q93)
+    // subtrees — measured, per-query job profile of q93)
     val c2 = trainToks.where(size(col("w")) >= 2)
       .select(col("lang"), explode(expr(
         "transform(sequence(1, size(w) - 1), " +

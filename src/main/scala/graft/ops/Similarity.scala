@@ -264,7 +264,7 @@ object Similarity {
   /** Adaptive ANN dispatch over all three paths:
     *
     * - |Q| ≤ nPlanes·nTables → BRUTE FORCE. Encodes the measured
-    *   crossover (ScaleProbe, NOTES round 4): brute does |Q| exact
+    *   crossover (NOTES.md round 4, "ANN scale probe"): brute does |Q| exact
     *   dots per corpus vector with the query batch broadcast —
     *   corpus-linear and faster than LSH while |Q| is below the
     *   bucketing overhead of nPlanes×nTables plane dots per vector.
@@ -291,7 +291,7 @@ object Similarity {
     *   shortlist instead of LSH: LSH pays dim in both its stages
     *   (plane dots and full-dim candidate scoring) while the
     *   projected shortlist scores pairs at fixed projDim — measured
-    *   crossover at [[HighDimProjectionFloor]] (ShortlistProbe).
+    *   crossover at [[HighDimProjectionFloor]] (NOTES.md round 8).
     * - stored `q_codes`/`q_scale` on the corpus (or
     *   `quantizedCandidates = true`) route candidate scoring through
     *   [[quantizedDot]] — [[ivfTopKQuantizedRerank]] on the IVF
@@ -369,7 +369,7 @@ object Similarity {
         // high-dim mid-corpus: LSH pays dim twice — nPlanes·nTables
         // plane dots per vector AND full-dim candidate scoring — while
         // the JL shortlist caps per-pair work at projDim regardless of
-        // dim (the ShortlistProbe crossover backing HighDimProjectionFloor).
+        // dim (the NOTES.md r8 crossover backing HighDimProjectionFloor).
         // Stored/forced int8 codes stack the quantized mid-stage on top.
         if (useQuant)
           projectedQuantizedRerankTopK(queries, corpus, idCol, vecCol, k,
@@ -384,8 +384,8 @@ object Similarity {
     * LSH for the JL-projected shortlist: LSH cost scales with dim in
     * BOTH its stages (plane dots and full-dim candidate scoring);
     * the projected shortlist scores pairs at fixed projDim after a
-    * dim-linear map-only projection pass. Measured (ShortlistProbe,
-    * NOTES r8): LSH 8×4 vs projected(32, ×8) on a 20k-vector
+    * dim-linear map-only projection pass. Measured (NOTES.md round 8,
+    * "Shortlist family"): LSH 8×4 vs projected(32, ×8) on a 20k-vector
     * clustered corpus, 256-query batch — break-even at dim 128
     * (1.02×), projected 2.3–2.6× faster at dim 256/512; at dim 64
     * LSH is ~1.3× faster. 256 sits one power of two above the

@@ -522,7 +522,7 @@ object PipelineQueries {
     // q75's codes STACKED behind adaptiveTopK). Dispatch forcing:
     // querySideRows past the brute crossover, the fixture corpus
     // under the IVF floor, highDimFloor=1 (the fixtures are dim 64 —
-    // the honest floor is 256, ShortlistProbe), quantized candidates
+    // the honest floor is 256, NOTES.md round 8), quantized candidates
     // on. CONTRACT oracle (q103 shape): mean recall@5 vs the in-plan
     // exact twin ≥ the r8-measured floor, every returned score equals
     // the recomputed full-precision cosine (the int8 approximation

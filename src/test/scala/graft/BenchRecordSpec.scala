@@ -219,4 +219,36 @@ class BenchRecordSpec extends AnyFunSuite {
     assert(Bench.dsInt(88.888) == "889")
     assert(Bench.dsInt(-1.0) == "0")
   }
+
+  test("a query that throws is named as failed and its time is not in value") {
+    def run(name: String, sec: Double, failed: Boolean) =
+      Harness.Run(name, sec, failed, jobs = 1, stages = 1, tasks = 1,
+        cpuSec = 0.0, gcSec = 0.0, sites = Nil)
+    // the parent summed q02's short time into value and parity_sec
+    val (total, parity) = Bench.totals(Seq(run("q01_clean_coerce", 1.0, false),
+      run("q02_dim_vendor", 0.2, true), run("q64_pipeline_run", 5.0, false)))
+    assert(total == 6.0 && parity == 1.0)
+    val rec = Bench.compactRecord(Seq("q01_clean_coerce" -> 1.0,
+        "q02_dim_vendor" -> 0.2), totalSec = 1.0, paritySec = 1.0,
+      ingestSec = 0.0, only = None, sfDir = "sf0.1",
+      failed = Seq("q02"))
+    assert(rec.contains(""""failed":["q02"],"""))
+    assert(!recordFor(SparkEntry.queries.keys.toSeq).contains("failed"),
+      "absent on clean runs")
+    val frag = Bench.failedJson((1 to 9).map(i => f"q$i%02d"))
+    assert(frag.contains(""""failed":["q01","q02","q03","q04"],"""))
+    assert(frag.contains(""""failed_more":5,"""))
+    // worst case: half the +40 inventory fails, the other half flags
+    val inv = SparkEntry.queries.keys.toSeq
+    val maxQ = inv.map(n => Bench.shortKey(n).drop(1).toInt).max
+    val all = (inv ++ (maxQ + 1 to maxQ + 40).map(i => s"q${i}_future_op"))
+      .map(Bench.shortKey).sorted
+    val (bad, slow) = all.splitAt(all.size / 2)
+    val worst = Bench.compactRecord(all.map(_ -> 88.888), totalSec = 888.888,
+      paritySec = 88.888, ingestSec = 8.888, only = None,
+      sfDir = "sf0.1", calibStartSec = 88.888,
+      calibEndSec = 88.888, load1Start = 888.888, load1End = 888.888,
+      flagged = slow, trend = Bench.PinnedMinSf01.keys.toSeq.sorted, failed = bad)
+    assert(worst.length < 1900, s"record is ${worst.length} bytes:\n$worst")
+  }
 }

@@ -29,17 +29,4 @@ class CopySinkSpec extends SparkSpecBase {
     val lines = text.split("\n").filter(_.nonEmpty).sorted
     assert(lines.toSeq == Seq("INV1,ok,12", "INV2,\\N,\\N", "INV3,\"a,b\",7"))
   }
-
-  test("foreachCopyPartition invokes the writer once per non-empty partition") {
-    val df = Seq.tabulate(10)(i => (i, s"r$i")).toDF("k", "v").repartition(4)
-    val acc = spark.sparkContext.collectionAccumulator[Int]("payloads")
-    CopySink.foreachCopyPartition(df, "t", (stmt, payload) => {
-      require(stmt.startsWith("COPY t (k, v)"))
-      acc.add(payload.length)
-    })
-    assert(acc.value.size() <= 4 && acc.value.size() >= 1)
-    val totalBytes = acc.value.toArray.map(_.asInstanceOf[Int]).sum
-    val expected = CopySink.copyPayloads(df).collect().map(_.length).sum
-    assert(totalBytes == expected)
-  }
 }

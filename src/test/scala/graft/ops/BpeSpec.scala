@@ -195,7 +195,7 @@ class BpeSpec extends SparkSpecBase {
     // the regime the registered queries (q87/q88/q102) and any corpus
     // whose vocabulary fits DefaultVocabSampleCap run in: the sample
     // IS the vocabulary, so discovery output is identical merge for
-    // merge (BpeTrainProbe records the sub-cap divergence behavior)
+    // merge (NOTES.md, r9 build log, records the sub-cap divergence behavior)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
