@@ -61,13 +61,41 @@ object IowaStar {
   /** FK-integrity audit of a built fact against the five dims
     * (reference `IowaLiquor-RDS.session.sql:68-72`): returns
     * (dimension name → violating-row count); all zeros = loadable.
+    * Each count is `Star.fkViolations(fact.where(col(k).isNotNull), dim,
+    * k, k).count()`: a fact row counts once per copy, a null FK never.
+    *
+    * One Spark action: one scan of the fact; per dim one correlated
+    * `NOT EXISTS`, which plans as a BroadcastHashJoin ExistenceJoin
+    * built from the dim's key column as it is (existence ignores
+    * duplicate keys, so nothing shuffles on the dim side); one global
+    * aggregate of `count_if`s, read with one `head()`. The frames are
+    * visible to the statement as uniquely named temp views, dropped
+    * afterwards whether it throws or not. `NOT IN` and
+    * `Dataset.exists()` spellings of the same audit plan a nested loop
+    * or lose the correlation on Spark 4.1 (NOTES.md, "FK audit plan
+    * traps").
     */
   def fkAudit(fact: DataFrame, store: DataFrame, date: DataFrame,
-      item: DataFrame, vendor: DataFrame, category: DataFrame): Map[String, Long] =
-    Map(
-      "dim_store" -> Star.fkViolations(fact.where(col("store").isNotNull), store, "store", "store").count(),
-      "dim_date" -> Star.fkViolations(fact.where(col("date").isNotNull), date, "date", "date").count(),
-      "dim_item" -> Star.fkViolations(fact.where(col("itemno").isNotNull), item, "itemno", "itemno").count(),
-      "dim_vendor" -> Star.fkViolations(fact.where(col("vendor_no").isNotNull), vendor, "vendor_no", "vendor_no").count(),
-      "dim_category" -> Star.fkViolations(fact.where(col("category").isNotNull), category, "category", "category").count())
+      item: DataFrame, vendor: DataFrame, category: DataFrame): Map[String, Long] = {
+    val fks = Seq(
+      ("dim_store", store, "store"),
+      ("dim_date", date, "date"),
+      ("dim_item", item, "itemno"),
+      ("dim_vendor", vendor, "vendor_no"),
+      ("dim_category", category, "category"))
+    val spark = fact.sparkSession
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
+    val factView = s"fk_audit_fact_$tag"
+    val dimViews = fks.map { case (name, _, _) => s"fk_audit_${name}_$tag" }
+    try {
+      fact.createTempView(factView)
+      fks.zip(dimViews).foreach { case ((_, dim, _), v) => dim.createTempView(v) }
+      val counts = fks.zip(dimViews).map { case ((_, _, k), v) =>
+        s"count_if(f.`$k` IS NOT NULL AND NOT EXISTS " +
+          s"(SELECT /*+ BROADCAST(d) */ 1 FROM $v d WHERE d.`$k` = f.`$k`))"
+      }
+      val row = spark.sql(s"SELECT ${counts.mkString(", ")} FROM $factView f").head()
+      fks.zipWithIndex.map { case ((name, _, _), i) => name -> row.getLong(i) }.toMap
+    } finally (factView +: dimViews).foreach(spark.catalog.dropTempView)
+  }
 }

@@ -13,8 +13,10 @@ import graft.functions._
   * Scale notes (100 TB): every dim derivation is
   * project → filter → hash-aggregate — partial aggregation runs
   * map-side, so the shuffle carries only distinct keys (tiny for real
-  * dimensions). FK audits broadcast the dim side; the fact table never
-  * shuffles for them.
+  * dimensions). FK audits broadcast the dim's key column as it is:
+  * anti-, semi- and existence joins ignore duplicate build keys, so the
+  * dim side never shuffles and neither does the fact. The five-FK
+  * audit `IowaStar.fkAudit` is one action over one fact scan.
   */
 object Star {
 
@@ -29,19 +31,23 @@ object Star {
 
   /** dim_date derivation (reference `IowaLiquor-RDS.session.sql:104-126`):
     * date_trunc-to-day (F3), year/quarter/month (F4-F6), PG-convention
-    * day-of-week (F7), weekend flag (F8).
+    * day-of-week (F7), weekend flag (F8). The distinct runs on the day
+    * alone and the calendar parts are derived over the distinct days:
+    * each is a function of the date, so the rows are the same and the
+    * aggregate key is one column, not six.
     */
   def dimDate(base: DataFrame, tsCol: String): DataFrame = {
-    val d = to_date(col(tsCol))
+    val d = col("date")
     base.where(col(tsCol).isNotNull)
+      .select(to_date(col(tsCol)).as("date"))
+      .distinct()
       .select(
-        d.as("date"),
+        d,
         year(d).as("year"),
         quarter(d).as("quarter"),
         month(d).as("month"),
         pgDow(d).as("day_of_week"),
         isWeekend(d).as("is_weekend"))
-      .distinct()
   }
 
   /** D2: conflict-ignoring append (`ON CONFLICT (pk) DO NOTHING`,
@@ -75,19 +81,18 @@ object Star {
   /** J1 violation audit: fact rows whose FK has no match in the dim
     * (Postgres would reject these at insert,
     * reference `IowaLiquor-RDS.session.sql:68-72`). Dim side is
-    * broadcast — keys-only projection keeps the broadcast tiny even
-    * for big dimensions.
+    * broadcast as a keys-only projection, which keeps the broadcast tiny
+    * even for big dimensions; a left-anti join ignores duplicate build
+    * keys, so the keys need no `distinct()` (and no shuffle).
     */
   def fkViolations(fact: DataFrame, dimTable: DataFrame, factKey: String, dimKey: String): DataFrame =
-    fact.join(
-      broadcast(dimTable.select(col(dimKey).as(factKey)).distinct()),
-      Seq(factKey), "left_anti")
+    fact.join(broadcast(dimTable.select(col(dimKey).as(factKey))), Seq(factKey), "left_anti")
 
-  /** J1 retention: keep only fact rows whose FK resolves (left-semi). */
+  /** J1 retention: keep only fact rows whose FK resolves (left-semi,
+    * which like the anti-join ignores duplicate dim keys).
+    */
   def fkRetain(fact: DataFrame, dimTable: DataFrame, factKey: String, dimKey: String): DataFrame =
-    fact.join(
-      broadcast(dimTable.select(col(dimKey).as(factKey)).distinct()),
-      Seq(factKey), "left_semi")
+    fact.join(broadcast(dimTable.select(col(dimKey).as(factKey))), Seq(factKey), "left_semi")
 
   /** D3: PK-uniqueness audit — keys appearing more than once
     * (reference `include/sql/create_table.sql:2` PRIMARY KEY contract).

@@ -84,7 +84,9 @@ final class TopKBuf(val k: Int, val distinctKeys: Boolean) {
   }
 
   /** Loose-regime compaction: sort (value desc, key asc), drop
-    * adjacent exact duplicates when distinct, cut to k.
+    * adjacent exact duplicates when distinct, cut to k. "Exact" is the
+    * sort's own total order ([[TopKBuf.cmp]] == 0), as in the sorted
+    * regime: IEEE `==` would keep NaN duplicates (NaN != NaN).
     */
   def trim(): Unit = {
     if (!loose) return
@@ -93,7 +95,7 @@ final class TopKBuf(val k: Int, val distinctKeys: Boolean) {
       var w = 1
       var i = 1
       while (i < n) {
-        if (!(values(i) == values(w - 1) && keys(i) == keys(w - 1))) {
+        if (cmp(values(i), keys(i), values(w - 1), keys(w - 1)) != 0) {
           values(w) = values(i); keys(w) = keys(i); w += 1
         }
         i += 1

@@ -170,9 +170,9 @@ object OrchestrationQueries {
         val dimVendor = IowaStar.dimVendor(base)
         val dimCategory = IowaStar.dimCategory(base)
         val fact = IowaStar.factSales(base)
-        // the fkAudit composition (same Star.fkViolations frames), but
-        // unioned with the dim counts into ONE job over the cached base
-        // instead of ten sequential driver-side count() actions
+        // fkAudit's five FK checks as Star.fkViolations frames, unioned
+        // with the dim counts into ONE job over the cached base instead
+        // of ten sequential driver-side count() actions
         val fks = Seq(
           ("store", dimStore), ("date", dimDate), ("itemno", dimItem),
           ("vendor_no", dimVendor), ("category", dimCategory)).map {

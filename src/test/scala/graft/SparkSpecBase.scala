@@ -1,14 +1,47 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for specs (one JVM-wide session; tests fork). */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
 
   override def afterAll(): Unit = super.afterAll()
+
+  /** The plan texts (initial and adaptive re-plans) of every SQL
+    * execution that submitted a job while `body` ran; a job outside any
+    * execution counts with an empty plan.
+    */
+  protected def jobPlans(body: => Unit): Seq[String] = {
+    val plans = new ConcurrentHashMap[Long, String]
+    val executions = ConcurrentHashMap.newKeySet[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        executions.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .fold(-1L)(_.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.merge(s.executionId, s.physicalPlanDescription, _ + _)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.merge(u.executionId, u.physicalPlanDescription, _ + _)
+        case _ => ()
+      }
+    }
+    ListenerDrain.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerDrain.drain(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    executions.asScala.toSeq.map(plans.getOrDefault(_, ""))
+  }
 }
 
 object SparkSpecBase {

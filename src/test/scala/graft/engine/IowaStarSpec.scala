@@ -1,8 +1,9 @@
 package graft.engine
 
 import graft.SparkSpecBase
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import java.sql.Date
 
 /** End-to-end Iowa parity on the REAL 24-column schema with the
   * representative rows FIXTURES.md A.2 calls for: an unparseable date,
@@ -76,5 +77,68 @@ class IowaStarSpec extends SparkSpecBase {
       IowaStar.dimStore(base), IowaStar.dimDate(base).select(col("date")),
       IowaStar.dimItem(base), IowaStar.dimVendor(base), IowaStar.dimCategory(base))
     assert(audit.values.forall(_ == 0L), s"audit: $audit")
+  }
+
+  /** A fact with at least one violating row per dim, a row whose five
+    * FKs are all null (never a violation), and a duplicated violating
+    * row (counted twice); dim_store repeats a key, which must not
+    * inflate a count.
+    */
+  private def auditFixture: (DataFrame, Seq[(String, DataFrame, String)]) = {
+    import spark.implicits._
+    def d(s: String) = Date.valueOf(s)
+    val fact = Seq[(String, Date, String, String, String, String)](
+      ("F1", d("2024-03-15"), "S1", "I1", "V1", "C1"),
+      ("F2", d("2024-03-15"), "SX", "I1", "V1", "C1"),
+      ("F2", d("2024-03-15"), "SX", "I1", "V1", "C1"),
+      ("F3", d("2024-01-01"), "S2", "IX", "V1", "C1"),
+      ("F4", d("2024-03-16"), "S1", "I2", "VX", "CX"),
+      ("F5", null, null, null, null, null),
+      ("F6", d("2024-03-16"), "S2", "IY", "V2", null))
+      .toDF("invoice_line_no", "date", "store", "itemno", "vendor_no", "category")
+    val dims = Seq(
+      ("dim_store", Seq(("S1", "One"), ("S1", "One again"), ("S2", "Two"), (null, "none"))
+        .toDF("store", "name"), "store"),
+      ("dim_date", Seq(d("2024-03-15"), d("2024-03-16")).toDF("date"), "date"),
+      ("dim_item", Seq("I1", "I2").toDF("itemno"), "itemno"),
+      ("dim_vendor", Seq("V1", "V2").toDF("vendor_no"), "vendor_no"),
+      ("dim_category", Seq("C1", "C2").toDF("category"), "category"))
+    (fact, dims)
+  }
+
+  private def audit(fact: DataFrame, dims: Seq[(String, DataFrame, String)]) = {
+    val byName = dims.map { case (n, dim, _) => n -> dim }.toMap
+    IowaStar.fkAudit(fact, byName("dim_store"), byName("dim_date"),
+      byName("dim_item"), byName("dim_vendor"), byName("dim_category"))
+  }
+
+  test("fkAudit counts each dim's violations: nulls excluded, duplicate fact rows twice, duplicate dim keys once") {
+    val (fact, dims) = auditFixture
+    val got = audit(fact, dims)
+    val expected = Map("dim_store" -> 2L, "dim_date" -> 1L, "dim_item" -> 2L,
+      "dim_vendor" -> 1L, "dim_category" -> 1L)
+    assert(got == expected)
+    for ((name, dim, k) <- dims)
+      assert(got(name) == Star.fkViolations(fact.where(col(k).isNotNull), dim, k, k).count(), name)
+  }
+
+  test("fkAudit is one SQL execution of five broadcast existence probes, no shuffle of keys, catalog untouched") {
+    val (fact, dims) = auditFixture
+    def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables()
+    val plans = jobPlans { audit(fact, dims) }
+    assert(plans.size == 1, plans.mkString("\n----\n"))
+    val plan = plans.head
+    val probes = plan.linesIterator.filter(_.contains("BroadcastHashJoin"))
+      .flatMap("ExistenceJoin\\((exists#\\d+)\\)".r.findFirstMatchIn(_).map(_.group(1)))
+      .toSet
+    assert(probes.size == 5, plan)
+    for (bad <- Seq("BroadcastNestedLoopJoin", "hashpartitioning"))
+      assert(!plan.contains(bad), plan)
+    assert(tables() == before)
+    // a fact without one of the FK columns fails to analyze after the
+    // views are registered; they are still dropped
+    assertThrows[AnalysisException](audit(fact.drop("category"), dims))
+    assert(tables() == before)
   }
 }

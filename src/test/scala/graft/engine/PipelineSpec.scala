@@ -1,15 +1,9 @@
 package graft.engine
 
 import graft.SparkSpecBase
-import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
-import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline parity: extract→transform→load over temp dirs,
   * CSV \N round-trip, conflict-ignoring idempotent re-run.
@@ -105,33 +99,6 @@ class PipelineSpec extends SparkSpecBase {
     for (bad <- Seq("InMemoryTableScan", "SortAggregate"))
       assert(!plans.head.contains(bad), plans.head)
     assert(plans.head.contains("WindowGroupLimit"), plans.head) // rank-1 dedup cut short
-  }
-
-  /** The plan texts (initial and adaptive re-plans) of every SQL
-    * execution that submitted a job while `body` ran; a job outside any
-    * execution counts with an empty plan.
-    */
-  private def jobPlans(body: => Unit): Seq[String] = {
-    val plans = new ConcurrentHashMap[Long, String]
-    val executions = ConcurrentHashMap.newKeySet[Long]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        executions.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
-          .fold(-1L)(_.toLong))
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          plans.merge(s.executionId, s.physicalPlanDescription, _ + _)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
-          plans.merge(u.executionId, u.physicalPlanDescription, _ + _)
-        case _ => ()
-      }
-    }
-    ListenerDrain.drain(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; ListenerDrain.drain(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    executions.asScala.toSeq.map(plans.getOrDefault(_, ""))
   }
 
   test("registerTable makes the directory addressable from SQL (S8)") {

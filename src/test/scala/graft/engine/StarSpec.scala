@@ -62,12 +62,18 @@ class StarSpec extends SparkSpecBase {
   }
 
   test("fkViolations and fkRetain partition the fact") {
-    val fact = Seq((1, 10), (2, 20), (3, 30)).toDF("fk", "m")
-    val dim = Seq((1, "a"), (3, "c")).toDF("dk", "attr")
-    val viol = Star.fkViolations(fact, dim, "fk", "dk").collect()
-    assert(viol.map(_.getInt(0)).toSeq == Seq(2))
-    val kept = Star.fkRetain(fact, dim, "fk", "dk").orderBy("fk").collect()
-    assert(kept.map(_.getInt(0)).toSeq == Seq(1, 3))
+    // a repeated fact key is kept or reported once per row; repeated dim
+    // keys neither repeat a fact row nor need a dim-side shuffle
+    val fact = Seq((1, 10), (2, 20), (3, 30), (3, 31)).toDF("fk", "m")
+    val dim = Seq((1, "a"), (1, "a2"), (3, "c"), (3, "c"), (3, "c3")).toDF("dk", "attr")
+    val viol = Star.fkViolations(fact, dim, "fk", "dk")
+    assert(viol.collect().map(_.getInt(1)).toSeq == Seq(20))
+    val kept = Star.fkRetain(fact, dim, "fk", "dk")
+    assert(kept.orderBy("m").collect().map(_.getInt(1)).toSeq == Seq(10, 30, 31))
+    for (df <- Seq(viol, kept)) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("hashpartitioning"), plan)
+    }
   }
 
   test("pkDuplicates finds multiplicity > 1") {

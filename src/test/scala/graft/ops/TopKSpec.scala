@@ -123,14 +123,29 @@ class TopKSpec extends SparkSpecBase {
       ("a", Double.NegativeInfinity, 6L), ("a", Double.NaN, 7L),
       ("b", Double.NaN, 1L), ("b", Double.NaN, 2L))
       .toDF("g", "v", "id").repartition(4)
-    // Scala tuple == on Double is IEEE (NaN != NaN): compare on
-    // canonical bits, which also distinguishes -0.0 from 0.0
-    def bits(s: Seq[(String, Double, Long, Long)]) =
-      s.map(t => (t._1, java.lang.Double.doubleToLongBits(t._2), t._3, t._4))
-        .sorted
     for (k <- Seq(3, 5, 100)) {
       val (n, l) = runBoth(edge, k, distinct = false)
       assert(bits(n) == bits(l), s"k=$k")
+    }
+  }
+
+  // Scala tuple == on Double is IEEE (NaN != NaN): compare on
+  // canonical bits, which also distinguishes -0.0 from 0.0
+  private def bits(s: Seq[(String, Double, Long, Long)]) =
+    s.map(t => (t._1, java.lang.Double.doubleToLongBits(t._2), t._3, t._4))
+      .sorted
+
+  test("native == legacy: distinct mode collapses NaN-valued duplicates, both regimes") {
+    // every key carries one value (NaN for three of them) and repeats
+    // four times across partitions: the distinct-mode caller contract
+    val edge = Seq.fill(4)(Seq(
+      ("a", Double.NaN, 1L), ("a", 1.0, 2L), ("a", Double.NaN, 3L),
+      ("a", -0.0, 4L), ("b", Double.NaN, 1L), ("b", Double.NaN, 2L))).flatten
+      .toDF("g", "v", "id").repartition(4)
+    for (k <- Seq(3, 100)) {
+      val (n, l) = runBoth(edge, k, distinct = true)
+      assert(bits(n) == bits(l), s"k=$k")
+      assert(n.map(t => (t._1, t._3)).distinct.size == n.size, s"k=$k: $n")
     }
   }
 
