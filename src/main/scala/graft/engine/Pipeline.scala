@@ -35,44 +35,37 @@ object Pipeline {
 
   /** S6 — CSV serialization with the reference's NULL sentinel `\N`
     * and no header (reference `src/load.py:37-38`), the COPY-ready
-    * interchange format.
+    * interchange format. It speaks PostgreSQL's COPY CSV, as
+    * [[CopySink.encodeField]] does: an embedded quote is doubled (CSV
+    * mode has no backslash escape), edge spaces are kept, and an empty
+    * string is written `""` to tell it from a null. Known gap, shared
+    * with [[CopySink]] and the reference's pandas writer: a literal
+    * `\N` string is written unquoted and so reads back as null.
     */
   def writeCsvForCopy(df: DataFrame, dir: String): Unit =
     df.write.mode(SaveMode.Overwrite)
       .option("nullValue", "\\N")
       .option("emptyValue", "\"\"")
+      .option("escape", "\"")
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
       .option("header", "false")
       .csv(dir)
 
-  /** Read back COPY-format CSV (inverse of [[writeCsvForCopy]]) given
-    * the schema — used by the round-trip spec.
+  /** Read back COPY-format CSV (inverse of [[writeCsvForCopy]], and
+    * the reader of [[CopySink]]'s payloads) given the schema: doubled
+    * quotes and quoted embedded newlines parse back to the original
+    * field. Known gap: an unquoted empty field (how [[CopySink]]
+    * encodes "") reads as null, where PostgreSQL reads an empty string.
     */
   def readCsvForCopy(spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema)
       .option("nullValue", "\\N")
+      .option("escape", "\"")
+      .option("multiLine", "true")
       .option("header", "false")
       .csv(dir)
-
-  /** S7 — bulk relational sink. The idiomatic Spark path is
-    * `df.write.format("jdbc")` with a large batchsize; exact
-    * COPY-protocol parity would use `foreachPartition` + pgjdbc
-    * CopyManager. No database exists in this environment, so this
-    * builds the writer fully configured and only `.save()`s when a URL
-    * is supplied — the structure is real, the connection is the stub.
-    */
-  def jdbcSink(df: DataFrame, url: Option[String], table: String,
-      batchSize: Int = 50000): Unit =
-    url match {
-      case Some(u) =>
-        df.write.format("jdbc")
-          .option("url", u)
-          .option("dbtable", table)
-          .option("batchsize", batchSize)
-          .mode(SaveMode.Append)
-          .save()
-      case None => () // no live database in the sandbox (SURVEY.md §7.4 risk 4)
-    }
 
   /** D2 at the sink — conflict-ignoring append into a parquet "table"
     * directory: dedup the batch ([[Star.firstPerKey]]), anti-join

@@ -5,6 +5,8 @@ import java.time.{Duration, Instant}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.ops.FsLock
+
 /** Schedule/catchup control plane (SURVEY §2.10) — the reference DAG
   * declares `schedule=None, catchup=False`
   * (reference `dags/iowa_liquor_dag.py:53-54`): manual triggering, and
@@ -117,65 +119,6 @@ object Schedule {
   private def claimPath(markerDir: String, tick: Instant) =
     new org.apache.hadoop.fs.Path(markerDir, s"_claim_${tick.toEpochMilli}")
 
-  /** Atomic create-exclusive of `p` with `payload`. Hadoop's LOCAL
-    * create(overwrite=false) is check-then-create (a TOCTOU window
-    * between JVM-concurrent claimants), so the local branch uses nio
-    * O_CREAT|O_EXCL — the posix equivalent of HDFS's server-side
-    * exclusive create. If create succeeds but the payload write
-    * fails, the ORPHANED file is best-effort deleted before the error
-    * propagates (otherwise our own half-claim would gate the tick for
-    * a whole lease with nobody running it).
-    *
-    * A create failure with the file absent (not a lost race) is a
-    * genuine I/O error and PROPAGATES, mirroring [[readMarker]].
-    */
-  private def createExclusive(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, payload: String): Boolean = {
-    val isLocalFs = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    if (isLocalFs) {
-      val nioPath = java.nio.file.Paths.get(p.toUri.getPath)
-      Option(nioPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      try {
-        java.nio.file.Files.write(nioPath,
-          payload.getBytes(StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case e: Throwable =>
-          // CREATE_NEW succeeded but the write failed partway (disk
-          // full): the orphaned half-claim is OURS — best-effort
-          // delete it before propagating, exactly as the HDFS branch
-          // below does, so it can't gate the tick for a whole lease
-          // with nobody running it.
-          try java.nio.file.Files.deleteIfExists(nioPath)
-          catch { case _: Throwable => () }
-          throw e
-      }
-    } else {
-      val created =
-        try Some(fs.create(p, false))
-        catch {
-          case e: java.io.IOException =>
-            if (fs.exists(p)) None else throw e // lost race vs real I/O error
-        }
-      created match {
-        case None => false
-        case Some(out) =>
-          try {
-            try out.write(payload.getBytes(StandardCharsets.UTF_8))
-            finally out.close()
-            true
-          } catch {
-            case e: Throwable =>
-              try fs.delete(p, false) catch { case _: Throwable => () }
-              throw e
-          }
-      }
-    }
-  }
-
   /** Atomic rename of `src` away to `dest` (no overwrite): of N
     * concurrent movers of one src, exactly one succeeds — the
     * exclusive-takeover primitive (delete-then-create would let two
@@ -190,8 +133,9 @@ object Schedule {
       true
     } catch { case _: java.io.IOException => false } // src gone: lost the takeover
 
-  /** Per-tick claim via [[createExclusive]]: of N schedulers racing on
-    * one tick, exactly one wins. A claim whose holder crashed before
+  /** Per-tick claim via [[FsLock.tryAcquire]]'s exclusive create (in
+    * an existing `markerDir`): of N schedulers racing on one tick,
+    * exactly one wins. A claim whose holder crashed before
     * advancing the marker would wedge the tick forever, so a claim
     * OLDER than `leaseTimeout` (file mtime) with its tick still due
     * may be taken over — via atomic RENAME of the stale claim to a
@@ -210,7 +154,7 @@ object Schedule {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = claimPath(markerDir, tick)
     val fs = p.getFileSystem(conf)
-    if (createExclusive(fs, p, owner)) true
+    if (FsLock.tryAcquire(fs, p, owner)) true
     else {
       val stale =
         try now.toEpochMilli - fs.getFileStatus(p).getModificationTime >
@@ -220,10 +164,10 @@ object Schedule {
       else {
         val tomb = new org.apache.hadoop.fs.Path(markerDir,
           s".${p.getName}.tomb.${System.nanoTime()}")
-        if (!fs.exists(p)) createExclusive(fs, p, owner) // vanished: plain re-race
+        if (!fs.exists(p)) FsLock.tryAcquire(fs, p, owner) // vanished: plain re-race
         else if (renameAway(conf, p, tomb)) {
           try fs.delete(tomb, false) catch { case _: Throwable => () }
-          createExclusive(fs, p, owner)
+          FsLock.tryAcquire(fs, p, owner)
         } else false // another recoverer won the takeover
       }
     }
@@ -258,7 +202,7 @@ object Schedule {
     // replacement lock a peer created — that would let a third
     // scheduler into the critical section alongside the peer.
     val token = s"${tick.toEpochMilli}:${java.util.UUID.randomUUID()}"
-    while (!createExclusive(fs, lock, token)) {
+    while (!FsLock.tryAcquire(fs, lock, token)) {
       val stale =
         try System.currentTimeMillis() - fs.getFileStatus(lock).getModificationTime >
           MarkerLockLease.toMillis
@@ -273,25 +217,8 @@ object Schedule {
     try {
       if (!readMarker(spark, markerDir).exists(_.toEpochMilli >= tick.toEpochMilli))
         writeMarker(spark, markerDir, tick)
-    } finally releaseLockIfOwner(fs, lock, token)
+    } finally FsLock.releaseOwned(fs, lock, token)
   }
-
-  /** Delete `lock` only if its payload still equals `token` (the
-    * read-then-delete pair is not atomic, but it shrinks the
-    * unconditional-delete hazard to the instant between the two calls;
-    * a non-matching payload means the lock was stolen and re-acquired
-    * by a peer — leave it alone, the peer releases its own). A lock we
-    * cannot read is left for the stale-steal path to collect.
-    */
-  private[engine] def releaseLockIfOwner(fs: org.apache.hadoop.fs.FileSystem,
-      lock: org.apache.hadoop.fs.Path, token: String): Unit =
-    try {
-      val in = fs.open(lock)
-      val payload =
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      if (payload == token) fs.delete(lock, false)
-    } catch { case _: java.io.IOException => () }
 
   private def donePath(markerDir: String, tickMillis: Long) =
     new org.apache.hadoop.fs.Path(markerDir, s"_done_$tickMillis")
@@ -371,6 +298,7 @@ object Schedule {
       }
     val ticks = (recovered ++ due)
       .distinctBy(_.scheduled).sortBy(_.scheduled.toEpochMilli)
+    fs.mkdirs(dir) // the claim and lock files' exclusive create needs the dir
     val ran = ticks.count { t =>
       val claimed = claimTick(spark, markerDir, t.scheduled, owner, leaseTimeout, now)
       if (claimed) {

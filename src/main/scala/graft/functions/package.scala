@@ -65,14 +65,6 @@ package object functions {
     try_divide(dot(a, b), sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
-  /** Fast double dot product (order-dependent rounding — NOT oracle
-    * safe; use as a prefilter with a margin, then confirm with
-    * [[decimalDot]]).
-    */
-  def doubleDot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Exact dot product over float-array columns with every element
     * rounded to DECIMAL(12,6): decimal multiplication and summation are
     * exact and order-independent, so the result is bit-identical across
@@ -259,9 +251,4 @@ package object functions {
   def subseqStartsNative(haystack: Column, needle: Column): Column =
     GraftSqlBridge.column(graft.expressions.SubseqStarts(
       GraftSqlBridge.expression(haystack), GraftSqlBridge.expression(needle)))
-
-  /** L2 norm of a float-array column. */
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
 }

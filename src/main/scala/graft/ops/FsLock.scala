@@ -7,11 +7,12 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSyst
   * lock, [[AnnIndex]]'s index-writer lock): a lock is an
   * exclusively-created file — server-side `create(overwrite=false)`
   * on HDFS, nio O_CREAT|O_EXCL on local filesystems (Hadoop's local
-  * `create(false)` is a check-then-create TOCTOU, the
-  * `graft.engine.Schedule.createExclusive` lesson). The guarantee is
-  * HDFS/posix-only; object stores lack server-side exclusive create
-  * (see [[Versioning]]'s scheme guard for the protocol that refuses
-  * them outright).
+  * `create(false)` is a check-then-create TOCTOU between
+  * JVM-concurrent claimants). [[graft.engine.Schedule]]'s tick claims
+  * and marker lock ride it too. The guarantee is HDFS/posix-only;
+  * object stores lack server-side exclusive create (see
+  * [[Versioning]]'s scheme guard for the protocol that refuses them
+  * outright).
   *
   * CRASH RECOVERY. A crashed holder (kill -9, OOM, node loss — the
   * cluster norm) skips its `finally` and leaves the lock behind.
@@ -132,48 +133,40 @@ private[graft] object FsLock {
     * therefore owns the lock). The create is the atomic claim; the
     * content write rides the same call (CREATE_NEW locally, the
     * exclusive create's own stream on HDFS), so a visible lock file
-    * always carries its holder line.
+    * always carries its holder line. Two failure modes, two owners: a
+    * failed create with the file present is ANOTHER writer's lock
+    * (false), one with the file absent is a genuine I/O error
+    * (rethrown); a failed stamp write AFTER our create is OUR lock —
+    * it must not be mistaken for a foreign holder (the caller would
+    * back off forever from a lock nobody will ever release), so it is
+    * deleted and the error rethrown.
     */
-  def tryAcquire(fs: FileSystem, lock: Path, info: String = ""): Boolean =
-    if (fs.isInstanceOf[LocalFileSystem] ||
-        fs.isInstanceOf[RawLocalFileSystem]) {
-      try {
-        java.nio.file.Files.write(
+  def tryAcquire(fs: FileSystem, lock: Path, info: String = ""): Boolean = {
+    val created: Option[java.io.OutputStream] =
+      if (fs.isInstanceOf[LocalFileSystem] || fs.isInstanceOf[RawLocalFileSystem])
+        try Some(java.nio.file.Files.newOutputStream(
           java.nio.file.Paths.get(lock.toUri.getPath),
-          info.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else {
-      // two failure modes, two owners: a failed CREATE with the file
-      // present is ANOTHER writer's lock (return false); a failed
-      // stamp write AFTER our create succeeded is OUR lock — it must
-      // not be mistaken for a foreign holder (the caller would back
-      // off forever from a lock nobody will ever release), so delete
-      // it and rethrow
-      val created =
+          java.nio.file.StandardOpenOption.CREATE_NEW,
+          java.nio.file.StandardOpenOption.WRITE))
+        catch { case _: java.nio.file.FileAlreadyExistsException => None }
+      else
         try Some(fs.create(lock, false))
         catch {
           case e: java.io.IOException =>
             if (fs.exists(lock)) None else throw e
         }
-      created match {
-        case None => false
-        case Some(out) =>
-          try {
-            try out.write(
-              info.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-          } catch {
-            case e: java.io.IOException =>
-              fs.delete(lock, false)
-              throw e
-          }
-          true
+    created.exists { out =>
+      try {
+        try out.write(info.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      } catch {
+        case e: java.io.IOException =>
+          try fs.delete(lock, false) catch { case _: java.io.IOException => () }
+          throw e
       }
+      true
     }
+  }
 
   /** The holder line of a held lock — the comparator for
     * [[Fence.verify]], [[releaseOwned]] and [[heartbeat]], so the

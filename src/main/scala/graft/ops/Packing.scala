@@ -237,15 +237,6 @@ object Packing {
     }(Encoders.product[Packed]).toDF()
   }
 
-  /** Packing quality report: sequences, mean fill ratio, max overflow. */
-  def packingStats(packed: DataFrame, budget: Long): DataFrame =
-    packed.groupBy("seq_id")
-      .agg(sum(col("n_tokens")).as("seq_tokens"), count(lit(1)).as("n_docs"))
-      .agg(
-        count(lit(1)).as("n_sequences"),
-        avg(col("seq_tokens").cast("double") / budget).as("mean_fill"),
-        max(when(col("n_docs") > 1, col("seq_tokens")).otherwise(0L)).as("max_packed_tokens"))
-
   /** GPT-style token-stream layout: documents laid end-to-end in
     * `idCol` order form ONE contiguous token stream; doc i occupies
     * [start_offset, start_offset + n_tokens). The stream is then cut

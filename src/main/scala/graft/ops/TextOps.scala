@@ -223,12 +223,6 @@ object TextOps {
     "de" -> Seq("der", "und", "die", "das", "ist"),
     "zh" -> Seq("的", "是", "了", "在", "我"))
 
-  /** Per-language marker-hit counts as one struct column. */
-  def langScores(c: Column): Column =
-    struct(LangMarkers.map { case (lang, words) =>
-      stopwordHits(c, words).as(s"score_$lang")
-    }: _*)
-
   /** Argmax language with deterministic first-wins tie-break in
     * `LangMarkers` order; "und" (undetermined) when no marker hits.
     */

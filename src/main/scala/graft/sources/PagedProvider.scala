@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -21,44 +22,36 @@ import org.apache.spark.unsafe.types.UTF8String
   *   serial cursor loop;
   * - the `$where=date BETWEEN …` server-side predicate (reference
   *   `src/extract.py:21`) becomes `SupportsPushDownFilters`: date
-  *   bounds translate to generator index bounds, so non-matching pages
-  *   are never planned;
+  *   bounds translate to row index bounds, so non-matching pages are
+  *   never planned;
   * - `$select` (reference `src/extract.py:20`) becomes
   *   `SupportsPushDownRequiredColumns`;
   * - LIMIT pushdown (`SupportsPushDownLimit`) truncates the row range.
   *
-  * The "endpoint" is a deterministic row generator (no network in this
-  * environment): row i has a monotonically non-decreasing date (10 rows
-  * per day from 2020-01-01), a cyclic store id, and an arithmetic
-  * sale_dollars — pure closed-form, so a SQL oracle can reproduce the
-  * feed exactly. Options: `totalRows` (default 100000), `pageSize`
-  * (default 50000 = the reference's CHUNK_ROWS, `src/config.py:19`),
-  * `failFirstAttempt` (default false — O3 test hook: every task's
-  * FIRST attempt throws mid-page, so a session with task maxFailures>1
-  * must retry every page; models the transient HTTP failures the
-  * reference absorbs with Airflow `retries=1`,
-  * `dags/iowa_liquor_dag.py:24-25`, `task_extract.log:3` try_number=2).
+  * Every page is read through a [[PageFetcher]]. Options:
+  * - `totalRows` (default 100000) and `pageSize` (default 50000 = the
+  *   reference's CHUNK_ROWS, `src/config.py:19`);
+  * - `fetcher`: the page transport's class name. Without it the feed
+  *   is the built-in [[GeneratorFetcher]]: row i has a monotonically
+  *   non-decreasing date (10 rows per day from 2020-01-01), a cyclic
+  *   store id and an arithmetic sale_dollars — closed-form, so a SQL
+  *   oracle reproduces the feed exactly;
+  * - `monotonicDates` (default false): an external fetcher declares its
+  *   offsets follow that date layout, turning page pruning on for it.
+  * Every option also reaches the fetcher's `init`.
   */
 class PagedProvider extends TableProvider {
-  // The generator feed never produces nulls (nullable=false lets
-  // Catalyst elide null checks); an external endpoint can serve empty
-  // fields, so a fetcher-backed table must declare honest nullability —
-  // Catalyst TRUSTS nullable=false and optimizes isNotNull filters away.
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    if (options.containsKey("fetcher")) PagedSource.schemaNullable
-    else PagedSource.schema
+  private def feed(opts: Map[String, String]): PagedFeed =
+    PagedFeed(opts.getOrElse("totalrows", "100000").toLong,
+      opts.getOrElse("pagesize", "50000").toInt, opts.get("fetcher"), opts)
 
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    feed(options.asScala.toMap).schema
+
+  // getTable receives the original case-sensitive option keys
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table = {
-    // getTable receives the original case-sensitive option keys
-    val opts = properties.asScala.map { case (k, v) => k.toLowerCase -> v }
-    new PagedTable(
-      opts.getOrElse("totalrows", "100000").toLong,
-      opts.getOrElse("pagesize", "50000").toInt,
-      opts.getOrElse("failfirstattempt", "false").toBoolean,
-      opts.get("fetcher"),
-      opts.toMap)
-  }
+      properties: JMap[String, String]): Table =
+    new PagedTable(feed(properties.asScala.map { case (k, v) => k.toLowerCase -> v }.toMap))
 }
 
 /** One page request — the reference's Socrata query-parameter tuple
@@ -85,7 +78,8 @@ case class PageRecord(invoiceLineNo: String, dateMicros: java.lang.Long,
   *
   * With an external fetcher the closed-form COUNT/MIN/MAX aggregate
   * pushdown is DISABLED: the engine can only answer closed-form for
-  * its own generator feed, not for an arbitrary endpoint.
+  * its own generator feed ([[GeneratorFetcher]]), not for an
+  * arbitrary endpoint.
   */
 trait PageFetcher extends Serializable {
   def init(options: Map[String, String]): Unit = ()
@@ -125,84 +119,110 @@ object PagedSource {
   def saleDollars(i: Long): Double = ((i * 7 + 13) % 10000) / 100.0
 
   /** Smallest row index whose date >= t (micros), given monotone dates. */
-  def lowerIndexForDateGte(t: Long): Long = {
+  def lowerIndexForDateGte(t: Long): Long =
     if (t <= EpochMicros) 0L
-    else {
-      val d = (t - EpochMicros + DayMicros - 1) / DayMicros // ceil
-      d * RowsPerDay
-    }
-  }
+    else (t - EpochMicros + DayMicros - 1) / DayMicros * RowsPerDay // ceil day
 
   /** One-past-largest row index whose date <= t (micros). */
-  def upperIndexForDateLte(t: Long): Long = {
+  def upperIndexForDateLte(t: Long): Long =
     if (t < EpochMicros) 0L
-    else {
-      val d = (t - EpochMicros) / DayMicros // floor
-      (d + 1) * RowsPerDay
+    else ((t - EpochMicros) / DayMicros + 1) * RowsPerDay // floor day
+
+  /** Timestamp-literal decoding shared by plan-time and runtime filter paths. */
+  def tsMicros(v: Any): Option[Long] = v match {
+    case t: java.sql.Timestamp => Some(t.toInstant.toEpochMilli * 1000L + (t.getNanos / 1000) % 1000)
+    case t: java.time.Instant => Some(t.getEpochSecond * 1000000L + t.getNano / 1000)
+    case _ => None
+  }
+}
+
+/** The built-in feed as a [[PageFetcher]]: [[PagedSource]]'s rows at
+  * the requested offsets, columns not in `select` left null. Date
+  * bounds are ignored: monotone dates already pruned the planned
+  * offsets to exactly the matching days.
+  */
+class GeneratorFetcher extends PageFetcher {
+  override def fetch(req: PageRequest): Iterator[PageRecord] = {
+    val cols = req.select.toSet
+    val (inv, date, store, sale) =
+      (cols("invoice_line_no"), cols("date"), cols("store"), cols("sale_dollars"))
+    (req.offset until req.offset + req.limit).iterator.map { i =>
+      PageRecord(
+        if (inv) PagedSource.invoice(i) else null,
+        if (date) Long.box(PagedSource.dateMicros(i)) else null,
+        if (store) PagedSource.store(i) else null,
+        if (sale) Double.box(PagedSource.saleDollars(i)) else null)
     }
   }
 }
 
-class PagedTable(totalRows: Long, pageSize: Int, failFirstAttempt: Boolean = false,
-    fetcher: Option[String] = None, fetcherOptions: Map[String, String] = Map.empty)
-    extends Table with SupportsRead {
-  override def name(): String = s"paged(totalRows=$totalRows, pageSize=$pageSize)"
-  override def schema(): StructType =
-    if (fetcher.isDefined) PagedSource.schemaNullable else PagedSource.schema
+/** The feed a table pages over: `totalRows` rows in `pageSize`-row
+  * pages, served by the `fetcher` class ([[GeneratorFetcher]] if none),
+  * which `init`s with `options` (lower-cased keys).
+  */
+case class PagedFeed(totalRows: Long, pageSize: Int, fetcher: Option[String] = None,
+    options: Map[String, String] = Map.empty) {
+  /** Only the built-in feed is known null-free, date-monotone and
+    * closed-form, so only it gets the non-nullable schema (Catalyst
+    * TRUSTS it), unconditional page pruning and aggregate pushdown.
+    */
+  def builtIn: Boolean = fetcher.isEmpty
+
+  def schema: StructType = if (builtIn) PagedSource.schema else PagedSource.schemaNullable
+
+  /** Date→offset page pruning assumes the built-in feed's row layout.
+    * An arbitrary endpoint's offsets index another ordering, where
+    * pruning would silently skip matching pages: external transports
+    * get it only by declaring `monotonicDates=true`, else they page the
+    * full range behind the forwarded $where + Spark's residual filter.
+    */
+  def indexPruning: Boolean = builtIn || options.get("monotonicdates").contains("true")
+}
+
+class PagedTable(feed: PagedFeed) extends Table with SupportsRead {
+  override def name(): String = s"paged(totalRows=${feed.totalRows}, pageSize=${feed.pageSize})"
+  override def schema(): StructType = feed.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PagedScanBuilder(totalRows, pageSize, failFirstAttempt, fetcher, fetcherOptions)
+    new PagedScanBuilder(feed)
 }
 
-class PagedScanBuilder(totalRows: Long, pageSize: Int, failFirstAttempt: Boolean = false,
-    fetcher: Option[String] = None, fetcherOptions: Map[String, String] = Map.empty)
+class PagedScanBuilder(feed: PagedFeed)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownAggregates {
 
-  private var required: StructType =
-    if (fetcher.isDefined) PagedSource.schemaNullable else PagedSource.schema
+  private var required: StructType = feed.schema
   private var lo: Long = 0L
-  private var hi: Long = totalRows
+  private var hi: Long = feed.totalRows
   private var pushed: Array[Filter] = Array.empty
   // pushed date bounds in micros, forwarded to an external transport
   // as the endpoint's `$where` clause
   private var dateGte: Option[Long] = None
   private var dateLte: Option[Long] = None
-  // Date→offset page pruning assumes THIS feed's row layout (monotone
-  // dates, fixed rows/day) — always true for the built-in generator,
-  // but an arbitrary endpoint's offsets index a different ordering, so
-  // pruning there would silently skip pages holding matching rows.
-  // External transports get it only by declaring option
-  // "monotonicDates=true"; otherwise they page the full range and rely
-  // on the forwarded $where + Spark's residual predicate.
-  private val indexPruning: Boolean =
-    fetcher.isEmpty || fetcherOptions.getOrElse("monotonicdates", "false") == "true"
+  private var pushedAgg: Option[Aggregation] = None
 
-  private def tsMicros(v: Any): Option[Long] = PagedScanBuilderUtil.tsMicros(v)
+  private def atLeast(t: Long): Unit = {
+    if (feed.indexPruning) lo = math.max(lo, PagedSource.lowerIndexForDateGte(t))
+    dateGte = Some(dateGte.fold(t)(math.max(_, t)))
+  }
+
+  private def atMost(t: Long): Unit = {
+    if (feed.indexPruning) hi = math.min(hi, PagedSource.upperIndexForDateLte(t))
+    dateLte = Some(dateLte.fold(t)(math.min(_, t)))
+  }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val usable: Array[Filter] = filters.flatMap {
-      case f @ GreaterThanOrEqual("date", v) => tsMicros(v).map { t =>
-        if (indexPruning) lo = math.max(lo, PagedSource.lowerIndexForDateGte(t))
-        dateGte = Some(dateGte.fold(t)(math.max(_, t))); f
-      }
-      case f @ GreaterThan("date", v) => tsMicros(v).map { t =>
-        if (indexPruning) lo = math.max(lo, PagedSource.lowerIndexForDateGte(t + 1))
-        dateGte = Some(dateGte.fold(t + 1)(math.max(_, t + 1))); f
-      }
-      case f @ LessThanOrEqual("date", v) => tsMicros(v).map { t =>
-        if (indexPruning) hi = math.min(hi, PagedSource.upperIndexForDateLte(t))
-        dateLte = Some(dateLte.fold(t)(math.min(_, t))); f
-      }
-      case f @ LessThan("date", v) => tsMicros(v).map { t =>
-        if (indexPruning) hi = math.min(hi, PagedSource.upperIndexForDateLte(t - 1))
-        dateLte = Some(dateLte.fold(t - 1)(math.min(_, t - 1))); f
-      }
-      case _ => None
+    def bound(v: Any)(narrow: Long => Unit): Boolean =
+      PagedSource.tsMicros(v).map(narrow).isDefined
+    pushed = filters.filter {
+      case GreaterThanOrEqual("date", v) => bound(v)(atLeast)
+      case GreaterThan("date", v) => bound(v)(t => atLeast(t + 1))
+      case LessThanOrEqual("date", v) => bound(v)(atMost)
+      case LessThan("date", v) => bound(v)(t => atMost(t - 1))
+      case _ => false
     }
-    pushed = usable
     // Residual = everything: bounds prune pages, Spark still re-applies
     // exact predicates (same contract as parquet row-group pruning).
     filters
@@ -218,160 +238,112 @@ class PagedScanBuilder(totalRows: Long, pageSize: Int, failFirstAttempt: Boolean
     // the endpoint applies $where before $offset is its business — a
     // truncated page range could then under-deliver matching rows, so
     // leave the limit to Spark in that combination.
-    if (!indexPruning && (dateGte.nonEmpty || dateLte.nonEmpty)) return false
+    if (!feed.indexPruning && (dateGte.nonEmpty || dateLte.nonEmpty)) return false
     hi = math.min(hi, lo + limit)
     true // partial: pages may still overshoot within a partition
   }
 
-  /** COUNT(*) / MIN(date) / MAX(date) pushdown: the feed is a
-    * closed-form row range with MONOTONE dates, so all three are
-    * answered without generating a single row — count is `hi - lo`,
-    * min/max are the dates of the range endpoints (the
-    * `$select=count(*)/min(date)/max(date)` a SoQL endpoint would
-    * serve). Complete pushdown: no partial aggregation above the scan.
+  private def isDate(e: Expression): Boolean = e match {
+    case nr: NamedReference => nr.fieldNames.sameElements(Array("date"))
+    case _ => false
+  }
+
+  /** The [[PagedAggScan]] output column of a pushable aggregate. */
+  private def aggColumn(e: AggregateFunc): Option[String] = e match {
+    case _: CountStar => Some("count")
+    case m: Min if isDate(m.column) => Some("min_date")
+    case m: Max if isDate(m.column) => Some("max_date")
+    case _ => None
+  }
+
+  /** COUNT(*) / MIN(date) / MAX(date), whole-range or GROUP BY date,
+    * answered closed-form by [[PagedAggScan]]. Only the built-in feed
+    * is closed-form — an external transport must serve real rows.
+    * Complete pushdown: no partial aggregation above the scan.
     */
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    def isDate(e: org.apache.spark.sql.connector.expressions.Expression): Boolean =
-      e match {
-        case nr: org.apache.spark.sql.connector.expressions.NamedReference =>
-          nr.fieldNames.sameElements(Array("date"))
-        case _ => false
-      }
-    // closed-form answers are only truthful for the built-in generator
-    // feed — an external transport must serve real rows
-    if (fetcher.isDefined) return false
+  override def supportCompletePushDown(agg: Aggregation): Boolean = {
     val gb = agg.groupByExpressions
-    val gbOk = gb.isEmpty || (gb.length == 1 && isDate(gb.head))
-    gbOk && agg.aggregateExpressions.nonEmpty &&
-      agg.aggregateExpressions.forall {
-        case _: CountStar => true
-        case m: Min => isDate(m.column)
-        case m: Max => isDate(m.column)
-        case _ => false
-      }
+    feed.builtIn && (gb.isEmpty || (gb.length == 1 && isDate(gb.head))) &&
+      agg.aggregateExpressions.nonEmpty &&
+      agg.aggregateExpressions.forall(aggColumn(_).isDefined)
   }
 
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    if (supportCompletePushDown(agg)) { pushedAgg = Some(agg); true }
-    else false
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    pushedAgg = Some(agg).filter(supportCompletePushDown)
+    pushedAgg.isDefined
   }
-
-  private var pushedAgg: Option[org.apache.spark.sql.connector.expressions.aggregate.Aggregation] = None
 
   override def build(): Scan = pushedAgg match {
-    case Some(agg) if agg.groupByExpressions.isEmpty =>
-      import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-      val n = math.max(0L, hi - lo)
-      val fieldsAndValues: Seq[(StructField, Any)] = agg.aggregateExpressions.toSeq.map {
-        case _: CountStar => (StructField("count", LongType, nullable = false), n)
-        case _: Min => (StructField("min_date", TimestampType),
-          if (n == 0) null else PagedSource.dateMicros(lo))
-        case _: Max => (StructField("max_date", TimestampType),
-          if (n == 0) null else PagedSource.dateMicros(hi - 1))
-        case other => throw new IllegalStateException(s"unexpected pushed agg $other")
-      }
-      new PagedAggScan(StructType(fieldsAndValues.map(_._1)),
-        fieldsAndValues.map(_._2).toArray)
     case Some(agg) =>
-      // GROUP BY date: one closed-form row per day in [lo, hi) — the
-      // `$group=date` a SoQL endpoint serves. Dates are day-aligned, so
-      // per-day COUNT is range overlap and per-day MIN/MAX(date) is the
-      // day itself.
-      import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-      val kinds: Array[Int] = agg.aggregateExpressions.map {
-        case _: CountStar => 0
-        case _: Min => 1
-        case _: Max => 2
-        case other => throw new IllegalStateException(s"unexpected pushed agg $other")
-      }
-      val fields = StructField("date", TimestampType, nullable = false) +:
-        kinds.toSeq.map {
-          case 0 => StructField("count", LongType, nullable = false)
-          case 1 => StructField("min_date", TimestampType)
-          case _ => StructField("max_date", TimestampType)
-        }
-      new PagedDailyAggScan(StructType(fields), lo, math.max(lo, hi), kinds)
+      new PagedAggScan(agg.aggregateExpressions.toSeq.flatMap(aggColumn),
+        agg.groupByExpressions.nonEmpty, lo, math.max(lo, hi))
     case None =>
-      new PagedScan(required, lo, math.max(lo, hi), pageSize, failFirstAttempt,
-        fetcher, fetcherOptions, dateGte, dateLte, indexPruning)
+      new PagedScan(feed, required, lo, math.max(lo, hi), dateGte, dateLte)
   }
 }
 
-/** Single-row scan answering a fully-pushed aggregation (closed form —
-  * no row generation). `values` are internal representations
-  * (Long / micros-Long / null) aligned with `schema`.
+/** Closed-form aggregate scan over the row range [lo, hi) (the
+  * `$select=count(*)` / `$group=date` a SoQL endpoint would serve):
+  * dates are monotone and day-aligned, so no row is generated. A
+  * whole-range aggregate is the single group [lo, hi); by date, each
+  * day overlapping the range is a group. For a group [start, end):
+  * count = end - start, min = dateMicros(start), max =
+  * dateMicros(end - 1), null min/max when empty. `aggs` names each
+  * aggregate's output column (`count`, `min_date`, `max_date`).
   */
-class PagedAggScan(aggSchema: StructType, values: Array[Any]) extends Scan with Batch {
-  override def readSchema(): StructType = aggSchema
+class PagedAggScan(aggs: Seq[String], byDate: Boolean, lo: Long, hi: Long)
+    extends Scan with Batch {
+  override def readSchema(): StructType = StructType(
+    (if (byDate) Seq("date") else Nil).map(StructField(_, TimestampType, nullable = false)) ++
+      aggs.map(a => StructField(a, if (a == "count") LongType else TimestampType, a != "count")))
   override def toBatch: Batch = this
   override def description(): String =
-    s"PagedAggScan(${aggSchema.fieldNames.zip(values).map { case (f, v) => s"$f=$v" }.mkString(", ")})"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(PagedPartition(0, 1))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PagedAggReaderFactory(values)
-}
-
-/** Per-day grouped aggregate scan: emits (date, aggs…) closed-form for
-  * each day overlapping [lo, hi) — no row generation, one partition.
-  * `kinds`: 0 = COUNT(*), 1 = MIN(date), 2 = MAX(date).
-  */
-class PagedDailyAggScan(aggSchema: StructType, lo: Long, hi: Long, kinds: Array[Int])
-    extends Scan with Batch {
-  override def readSchema(): StructType = aggSchema
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val days = if (hi <= lo) 0L else (hi - 1) / PagedSource.RowsPerDay - lo / PagedSource.RowsPerDay + 1
-    s"PagedDailyAggScan(days=$days, range=[$lo,$hi))"
-  }
+    if (byDate) {
+      val days = if (hi <= lo) 0L else (hi - 1) / PagedSource.RowsPerDay - lo / PagedSource.RowsPerDay + 1
+      s"PagedDailyAggScan(days=$days, range=[$lo,$hi))"
+    } else
+      s"PagedAggScan(${aggs.zip(PagedAggScan.values(aggs, lo, hi)).map { case (f, v) => s"$f=$v" }.mkString(", ")})"
   override def planInputPartitions(): Array[InputPartition] =
     Array(PagedPartition(lo, hi))
   override def createReaderFactory(): PartitionReaderFactory =
-    new PagedDailyAggReaderFactory(kinds)
+    new PagedAggReaderFactory(aggs, byDate)
 }
 
-class PagedDailyAggReaderFactory(kinds: Array[Int]) extends PartitionReaderFactory {
+object PagedAggScan {
+  private def nextDay(i: Long): Long = (i / PagedSource.RowsPerDay + 1) * PagedSource.RowsPerDay
+
+  /** The groups of [lo, hi): the whole range, or one per day. */
+  def groups(lo: Long, hi: Long, byDate: Boolean): Iterator[(Long, Long)] =
+    if (!byDate) Iterator.single((lo, hi))
+    else Iterator.iterate(lo)(nextDay).takeWhile(_ < hi).map(s => (s, math.min(hi, nextDay(s))))
+
+  /** One group's aggregates, as internal values (Long / micros / null). */
+  def values(aggs: Seq[String], start: Long, end: Long): Seq[Any] = aggs.map {
+    case "count" => end - start
+    case _ if end == start => null
+    case "min_date" => PagedSource.dateMicros(start)
+    case _ => PagedSource.dateMicros(end - 1)
+  }
+}
+
+class PagedAggReaderFactory(aggs: Seq[String], byDate: Boolean) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[PagedPartition]
+    val rows = PagedAggScan.groups(part.start, part.end, byDate).map { case (start, end) =>
+      val values = PagedAggScan.values(aggs, start, end)
+      InternalRow.fromSeq(if (byDate) PagedSource.dateMicros(start) +: values else values)
+    }
     new PartitionReader[InternalRow] {
-      private val lo = part.start
-      private val hi = part.end
-      private val firstDay = lo / PagedSource.RowsPerDay
-      private val lastDay = if (hi <= lo) firstDay - 1 else (hi - 1) / PagedSource.RowsPerDay
-      private var day = firstDay - 1
-      override def next(): Boolean = { day += 1; day <= lastDay }
-      override def get(): InternalRow = {
-        val start = math.max(lo, day * PagedSource.RowsPerDay)
-        val end = math.min(hi, (day + 1) * PagedSource.RowsPerDay)
-        val date = PagedSource.EpochMicros + day * PagedSource.DayMicros
-        InternalRow.fromSeq(date +: kinds.toSeq.map {
-          case 0 => end - start
-          case _ => date
-        })
-      }
+      private var cur: InternalRow = _
+      override def next(): Boolean = { val h = rows.hasNext; if (h) cur = rows.next(); h }
+      override def get(): InternalRow = cur
       override def close(): Unit = ()
     }
   }
 }
 
-class PagedAggReaderFactory(values: Array[Any]) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = { val r = !done; done = true; r }
-      override def get(): InternalRow = InternalRow.fromSeq(values.toSeq)
-      override def close(): Unit = ()
-    }
-}
-
-class PagedScan(required: StructType, lo: Long, hi: Long, pageSize: Int,
-    failFirstAttempt: Boolean = false,
-    fetcher: Option[String] = None, fetcherOptions: Map[String, String] = Map.empty,
-    dateGte: Option[Long] = None, dateLte: Option[Long] = None,
-    indexPruning: Boolean = true)
+class PagedScan(feed: PagedFeed, required: StructType, lo: Long, hi: Long,
+    dateGte: Option[Long], dateLte: Option[Long])
     extends Scan with Batch with SupportsRuntimeFiltering {
   // runtime-narrowed bounds (dynamic 'partition' pruning at page grain)
   private var rlo: Long = lo
@@ -380,7 +352,7 @@ class PagedScan(required: StructType, lo: Long, hi: Long, pageSize: Int,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String = {
-    val nPages = ((rhi - rlo) + pageSize - 1) / pageSize
+    val nPages = ((rhi - rlo) + feed.pageSize - 1) / feed.pageSize
     s"PagedScan(range=[$rlo,$rhi), pages=$nPages, cols=${required.fieldNames.mkString(",")})"
   }
 
@@ -392,19 +364,18 @@ class PagedScan(required: StructType, lo: Long, hi: Long, pageSize: Int,
     * `date` can name it: a pruned one offers no runtime filter, or
     * analysis of a join over it fails to resolve the column.
     */
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (required.fieldNames.contains("date"))
-      Array(org.apache.spark.sql.connector.expressions.Expressions.column("date"))
+  override def filterAttributes(): Array[NamedReference] =
+    if (required.fieldNames.contains("date")) Array(Expressions.column("date"))
     else Array.empty
 
-  override def filter(filters: Array[Filter]): Unit = if (indexPruning) filters.foreach {
+  override def filter(filters: Array[Filter]): Unit = if (feed.indexPruning) filters.foreach {
     case In("date", vs) if vs.nonEmpty =>
-      val micros = vs.flatMap(PagedScanBuilderUtil.tsMicros)
+      val micros = vs.flatMap(PagedSource.tsMicros)
       if (micros.length == vs.length) {
         rlo = math.max(rlo, PagedSource.lowerIndexForDateGte(micros.min))
         rhi = math.min(rhi, PagedSource.upperIndexForDateLte(micros.max))
       }
-    case EqualTo("date", v) => PagedScanBuilderUtil.tsMicros(v).foreach { t =>
+    case EqualTo("date", v) => PagedSource.tsMicros(v).foreach { t =>
       rlo = math.max(rlo, PagedSource.lowerIndexForDateGte(t))
       rhi = math.min(rhi, PagedSource.upperIndexForDateLte(t))
     }
@@ -413,33 +384,22 @@ class PagedScan(required: StructType, lo: Long, hi: Long, pageSize: Int,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val end = math.max(rlo, rhi)
-    Iterator.iterate(rlo)(_ + pageSize).takeWhile(_ < end)
-      .map(start => PagedPartition(start, math.min(start + pageSize, end)): InputPartition)
+    Iterator.iterate(rlo)(_ + feed.pageSize).takeWhile(_ < end)
+      .map(start => PagedPartition(start, math.min(start + feed.pageSize, end)): InputPartition)
       .toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = fetcher match {
-    case Some(fqcn) =>
-      new FetchedPageReaderFactory(required, fqcn, fetcherOptions, dateGte, dateLte)
-    case None => new PagedReaderFactory(required, failFirstAttempt)
-  }
-}
-
-/** Timestamp-literal decoding shared by plan-time and runtime filter paths. */
-object PagedScanBuilderUtil {
-  def tsMicros(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp => Some(t.toInstant.toEpochMilli * 1000L + (t.getNanos / 1000) % 1000)
-    case t: java.time.Instant => Some(t.getEpochSecond * 1000000L + t.getNano / 1000)
-    case _ => None
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new FetchedPageReaderFactory(required,
+      feed.fetcher.getOrElse(classOf[GeneratorFetcher].getName), feed.options, dateGte, dateLte)
 }
 
 case class PagedPartition(start: Long, end: Long) extends InputPartition
 
-/** Reader factory for transport-backed pages: instantiates the named
-  * [[PageFetcher]] executor-side (top-level class — never captures the
-  * Scan, see the DSv2 serialization note) and issues ONE PageRequest
-  * per partition with the pushed-down projection and date bounds.
+/** The page reader: instantiates the feed's [[PageFetcher]]
+  * executor-side (top-level class — never captures the Scan, see the
+  * DSv2 serialization note) and issues ONE PageRequest per partition
+  * with the pushed-down projection and date bounds.
   */
 class FetchedPageReaderFactory(required: StructType, fqcn: String,
     options: Map[String, String], dateGte: Option[Long], dateLte: Option[Long])
@@ -466,44 +426,4 @@ class FetchedPageReaderFactory(required: StructType, fqcn: String,
       override def close(): Unit = ()
     }
   }
-}
-
-class PagedReaderFactory(required: StructType, failFirstAttempt: Boolean = false)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[PagedPartition]
-    new PagedReader(p.start, p.end, required, failFirstAttempt)
-  }
-}
-
-class PagedReader(start: Long, end: Long, required: StructType,
-    failFirstAttempt: Boolean = false)
-    extends PartitionReader[InternalRow] {
-  private var i = start - 1
-  // O3 failure injection: throw MID-page (half the rows already emitted)
-  // on the task's first attempt only, so a successful query proves the
-  // scheduler retried the task and the committer discarded the partial
-  // attempt — duplicate-free, identical output.
-  private val failAt: Long =
-    if (failFirstAttempt &&
-        Option(org.apache.spark.TaskContext.get()).exists(_.attemptNumber() == 0))
-      (start + end) / 2
-    else Long.MinValue
-  private val getters: Array[Long => Any] = required.fieldNames.map {
-    case "invoice_line_no" => (i: Long) => UTF8String.fromString(PagedSource.invoice(i))
-    case "date" => (i: Long) => PagedSource.dateMicros(i)
-    case "store" => (i: Long) => UTF8String.fromString(PagedSource.store(i))
-    case "sale_dollars" => (i: Long) => PagedSource.saleDollars(i)
-    case other => throw new IllegalArgumentException(s"unknown column $other")
-  }
-
-  override def next(): Boolean = {
-    i += 1
-    if (i == failAt)
-      throw new RuntimeException(
-        s"graft: injected transient failure at row $i (first attempt)")
-    i < end
-  }
-  override def get(): InternalRow = InternalRow.fromSeq(getters.map(_(i)).toSeq)
-  override def close(): Unit = ()
 }

@@ -180,14 +180,14 @@ class ScheduleSpec extends SparkSpecBase {
       // releasing with a non-matching token must not delete it
       Files.write(java.nio.file.Paths.get(dir, "_marker_lock"),
         "peer-token".getBytes)
-      Schedule.releaseLockIfOwner(fs, lockPath, "my-token")
+      graft.ops.FsLock.releaseOwned(fs, lockPath, "my-token")
       assert(Files.exists(java.nio.file.Paths.get(dir, "_marker_lock")),
         "a resumed stale holder deleted the peer's lock")
       // matching token: released
-      Schedule.releaseLockIfOwner(fs, lockPath, "peer-token")
+      graft.ops.FsLock.releaseOwned(fs, lockPath, "peer-token")
       assert(!Files.exists(java.nio.file.Paths.get(dir, "_marker_lock")))
       // missing lock: release is a no-op, not an error
-      Schedule.releaseLockIfOwner(fs, lockPath, "peer-token")
+      graft.ops.FsLock.releaseOwned(fs, lockPath, "peer-token")
     } finally FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 

@@ -62,7 +62,7 @@ class PagedProviderSpec extends SparkSpecBase {
   }
 
   test("runtime date filter narrows the planned page range (DPP at page grain)") {
-    val b = new PagedScanBuilder(100000, 1000)
+    val b = new PagedScanBuilder(PagedFeed(100000, 1000))
     val scan = b.build().asInstanceOf[PagedScan]
     assert(scan.toBatch.planInputPartitions().length == 100)
     // join build side delivered two dates: 2020-01-03 and 2020-01-05

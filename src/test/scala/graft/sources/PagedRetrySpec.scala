@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -14,19 +15,20 @@ import graft.engine.Pipeline
   * Airflow `retries=1`, `dags/iowa_liquor_dag.py:24-25`, proven by
   * `task_extract.log:3` try_number=2).
   *
-  * With `failFirstAttempt=true` EVERY task's first attempt throws
-  * mid-page (after emitting half its rows), so query completion under
-  * the `local[4, 2]` session proves the scheduler re-attempted every
-  * task; output equality with the clean read proves the partial first
-  * attempt leaked nothing (no dupes, no gaps).
+  * Read through [[FirstAttemptFailingFetcher]], EVERY task's first
+  * attempt throws mid-page (after emitting half its rows), so query
+  * completion under the `local[4, 2]` session proves the scheduler
+  * re-attempted every task; output equality with the clean read
+  * proves the partial first attempt leaked nothing (no dupes, no gaps).
   */
 class PagedRetrySpec extends SparkSpecBase {
 
-  private def paged(inject: Boolean): DataFrame =
-    spark.read.format("graft.sources.PagedProvider")
+  private def paged(inject: Boolean): DataFrame = {
+    val r = spark.read.format("graft.sources.PagedProvider")
       .option("totalRows", "1000").option("pageSize", "100")
-      .option("failFirstAttempt", inject.toString)
+    (if (inject) r.option("fetcher", classOf[FirstAttemptFailingFetcher].getName) else r)
       .load()
+  }
 
   test("task retry yields output identical to an un-failed run") {
     val failed = new AtomicInteger(0)
@@ -65,5 +67,25 @@ class PagedRetrySpec extends SparkSpecBase {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     assert(b.agg(sum(col("sale_dollars")).cast("decimal(18,2)")).head().getDecimal(0) ==
       a.agg(sum(col("sale_dollars")).cast("decimal(18,2)")).head().getDecimal(0))
+  }
+}
+
+/** The built-in feed, failing every task's first attempt mid-page:
+  * half the page's rows are emitted before the throw, so a successful
+  * query proves the scheduler retried the task and the committer
+  * discarded the partial attempt. Models the transient HTTP failures
+  * the reference absorbs with Airflow `retries=1`.
+  */
+class FirstAttemptFailingFetcher extends PageFetcher {
+  private val feed = new GeneratorFetcher
+
+  override def fetch(req: PageRequest): Iterator[PageRecord] = {
+    val failAt =
+      if (Option(TaskContext.get()).exists(_.attemptNumber() == 0)) req.limit / 2 else -1
+    feed.fetch(req).zipWithIndex.map { case (r, k) =>
+      if (k == failAt) throw new RuntimeException(
+        s"injected transient failure at row ${req.offset + k} (first attempt)")
+      r
+    }
   }
 }
