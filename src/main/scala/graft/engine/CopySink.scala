@@ -23,10 +23,15 @@ object CopySink {
     * null → `\N` (unquoted — that's what distinguishes it from the
     * literal string), fields containing delimiter/quote/newline are
     * double-quoted with internal quotes doubled (matching pandas
-    * `to_csv` as used by the reference).
+    * `to_csv` as used by the reference). An empty string is written
+    * `""`, as [[Pipeline.writeCsvForCopy]] does: PostgreSQL loads an
+    * unquoted empty field as `""` too, but Spark's CSV reader reads it
+    * as null, so the quoted form is the one both agree on (pandas
+    * writes it unquoted — the bytes differ, the loaded table does not).
     */
   def encodeField(v: Any): String = v match {
     case null => "\\N"
+    case "" => "\"\""
     case s: String
         if s.contains(",") || s.contains("\"") || s.contains("\n") || s.contains("\r") =>
       "\"" + s.replace("\"", "\"\"") + "\""

@@ -4,10 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's six star-schema builders, by name, over the real
-  * Iowa 24-column table — a user of the reference maps each
-  * `INSERT … SELECT [DISTINCT] … WHERE … ON CONFLICT DO NOTHING`
-  * statement (reference `IowaLiquor-RDS.session.sql:75-182`) onto the
-  * same-named function here. `clean` is the transform-stage coercion
+  * Iowa 24-column table — a user of the reference finds the
+  * `SELECT [DISTINCT] … WHERE …` part of each `INSERT … ON CONFLICT
+  * DO NOTHING` statement (reference `IowaLiquor-RDS.session.sql:75-182`)
+  * in the same-named function here. The dims return the DISTINCT
+  * non-null-keyed tuples, not one row per key: a key whose attributes
+  * vary across source rows yields one row per variant, where the
+  * reference keeps the first inserted. The `ON CONFLICT` half is the
+  * caller's: compose `Star.conflictIgnoreAppend` on the key, as
+  * [[factSales]] says. `clean` is the transform-stage coercion
   * (reference `src/transform.py:11-23`).
   */
 object IowaStar {

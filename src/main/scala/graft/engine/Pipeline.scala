@@ -55,8 +55,7 @@ object Pipeline {
   /** Read back COPY-format CSV (inverse of [[writeCsvForCopy]], and
     * the reader of [[CopySink]]'s payloads) given the schema: doubled
     * quotes and quoted embedded newlines parse back to the original
-    * field. Known gap: an unquoted empty field (how [[CopySink]]
-    * encodes "") reads as null, where PostgreSQL reads an empty string.
+    * field.
     */
   def readCsvForCopy(spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
@@ -157,45 +156,4 @@ object Pipeline {
   def registerTable(spark: SparkSession, name: String, dir: String): Unit =
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $name USING parquet LOCATION '$dir'")
-
-  /** Bucketed catalog table: co-locates join/aggregation keys at write
-    * time so repeated joins on `keys` skip the shuffle entirely — the
-    * pre-partitioning strategy for fact tables read by many downstream
-    * star joins at 100 TB. (Bucketed joins require catalog tables;
-    * plain parquet directories don't carry bucket metadata.)
-    */
-  def writeBucketedTable(
-      df: DataFrame, table: String, keys: Seq[String], numBuckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Hive-style partitioned directory layout: queries filtering on
-    * `partitionCols` prune whole directories at planning time
-    * (PartitionFilters), the coarse-grained complement to parquet
-    * row-group pushdown.
-    */
-  def writePartitioned(df: DataFrame, dir: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(dir)
-
-  /** Z-ordered writer: Morton-cluster on `zorderCols` (ZOrder.zorderByN)
-    * before the partitioned write, so WITHIN each Hive partition the
-    * part-files carry tight min/max footer statistics on EVERY z
-    * dimension — directory pruning handles `partitionCols` predicates,
-    * row-group stats pruning handles multi-dimensional `zorderCols`
-    * predicates. Each write task owns a contiguous Morton range
-    * (range partitioning), so per-(task × partition-dir) files stay
-    * range-tight even after the writer's internal partition-column
-    * sort. `partitionCols` empty = plain z-ordered layout.
-    */
-  def writeZOrdered(df: DataFrame, dir: String, partitionCols: Seq[String],
-      zorderCols: Seq[String], numFiles: Int, bitsPer: Int = 16): Unit = {
-    val z = graft.ops.ZOrder.zorderByN(df, zorderCols, numFiles, bitsPer)
-    if (partitionCols.isEmpty) z.write.mode(SaveMode.Overwrite).parquet(dir)
-    else writePartitioned(z, dir, partitionCols)
-  }
 }

@@ -1027,17 +1027,8 @@ object AnnIndex {
     */
   def hardNegativesIndexed(spark: SparkSession, dir: String,
       anchors: DataFrame, idCol: String, vecCol: String, labelCol: String,
-      labels: DataFrame, k: Int, nProbe: Int = 2): DataFrame =
-    hardNegativesWithCents(spark, dir, anchors, idCol, vecCol, labelCol,
-      labels, k, nProbe, loadCentroids(spark, dir))
-
-  /** [[hardNegativesIndexed]] under a caller-loaded quantizer — see
-    * [[manyQueriesWithCents]] for why the ladder wants this.
-    */
-  private def hardNegativesWithCents(spark: SparkSession, dir: String,
-      anchors: DataFrame, idCol: String, vecCol: String, labelCol: String,
-      labels: DataFrame, k: Int, nProbe: Int,
-      cents: Seq[Seq[Double]]): DataFrame = {
+      labels: DataFrame, k: Int, nProbe: Int = 2): DataFrame = {
+    val cents = loadCentroids(spark, dir)
     require(cents.nonEmpty, s"empty index at $dir")
     // assignQueries + the anchor's own label: the label must survive
     // the probe explosion so the cross-label predicate can run inside
@@ -1130,27 +1121,6 @@ object AnnIndex {
       (pending, w, cents) => manyQueriesWithCents(spark, dir, pending,
         idCol, vecCol, k, w, cents))
 
-  /** [[hardNegativesIndexed]] under the same adaptive probe ladder as
-    * [[searchIvfIndexConverged]] — hard-negative mining is exactly
-    * where a fixed probe width quietly under-delivers (RecallProbe:
-    * ~0.3 recall at the old nProbe=3/16 default on the isotropic
-    * fixtures means ~70% of true hard negatives missed), and the
-    * miner runs offline where "pay each anchor's width" beats "pick
-    * one width for the corpus". Same contracts: per-anchor results ≡
-    * the fixed-width miner at the reported `n_probe_used`; terminal
-    * width = nCells is the exact broadcast arm's result (the q153
-    * identity).
-    */
-  def hardNegativesIndexedConverged(spark: SparkSession, dir: String,
-      anchors: DataFrame, idCol: String, vecCol: String, labelCol: String,
-      labels: DataFrame, k: Int, nProbe0: Int = 1,
-      maxRounds: Int = 16): DataFrame =
-    widenToConvergence(spark, dir,
-      anchors.select(col(idCol), col(vecCol), col(labelCol)), idCol, k,
-      nProbe0, maxRounds)(
-      (pending, w, cents) => hardNegativesWithCents(spark, dir, pending,
-        idCol, vecCol, labelCol, labels, k, w, cents))
-
   /** [[searchIvfIndexFiltered]] under the adaptive probe ladder —
     * the composition where the ladder's full-k gate earns its keep:
     * a selective allowed set (one language, one license, post-cutoff
@@ -1171,7 +1141,7 @@ object AnnIndex {
       (pending, w, cents) => filteredWithCents(spark, dir, pending,
         idCol, vecCol, allowed, allowedIdCol, k, w, cents))
 
-  /** The doubling ladder both converged modes share: run `searchAt`
+  /** The doubling ladder every converged mode shares: run `searchAt`
     * over the still-pending queries at successive widths, accepting a
     * query once its (neighbor, rank, cosine) rows are identical at
     * two consecutive widths AND its top-k is FULL; everything else
@@ -1181,9 +1151,10 @@ object AnnIndex {
     * comparison (nothing to mismatch), and a sub-k result can only
     * grow as probing widens — accepting either "stable" state early
     * would silently return nothing (or too little) for exactly the
-    * queries that need the widening most, e.g. an anchor whose
-    * near cells are all same-label in the miner. Sub-k queries are
-    * re-searched every round; the ≤ 2× doubling bound is unchanged.
+    * queries that need the widening most, e.g. a query whose near
+    * cells hold no allowed doc in the filtered search. Sub-k queries
+    * are re-searched every round; the ≤ 2× doubling bound is
+    * unchanged.
     * `searchAt` must emit (query_id, neighbor_id, cosine, rank),
     * k-bounded, keyed on `idCol`.
     */

@@ -26,16 +26,6 @@ object Dedup {
   private def fanned(docs: DataFrame): DataFrame =
     graft.engine.Tables.fanOut(docs.sparkSession, docs)
 
-  /** Guard for operators that key clusters on a long id: the id column
-    * must already be integral. A silent `cast("long")` on a string/
-    * float id would turn non-numeric values into NULLs — pairs vanish,
-    * and `coalesce(label, id)` collapses every unlabeled doc onto one
-    * NULL cluster with no error. Reject loudly, never degrade (the
-    * projection-guard convention).
-    */
-  private def requireIntegralId(df: DataFrame, idCol: String, op: String): Unit =
-    Contracts.requireIntegralId(df, idCol, op)
-
   /** Canonical text normalization for near-exact dedup: lowercase,
     * collapse whitespace, trim.
     */
@@ -905,7 +895,7 @@ object Dedup {
       maxDocFreq: Int = 50): DataFrame = {
     require(minShared >= 1 && maxDocFreq >= 2,
       s"minShared/maxDocFreq out of range: $minShared/$maxDocFreq")
-    requireIntegralId(docs, idCol, "winnowedPairs")
+    Contracts.requireIntegralId(docs, idCol, "winnowedPairs")
     // fanned like every other pair generator (file-count-bound scans
     // must not serialize the per-doc rolling-hash work — r16 profile:
     // the whole selection stage ran on one task of 32)
@@ -945,7 +935,7 @@ object Dedup {
     */
   def qualityAwareSurvivors(docs: DataFrame, idCol: String,
       quality6Col: String, pairs: DataFrame): DataFrame = {
-    requireIntegralId(docs, idCol, "qualityAwareSurvivors")
+    Contracts.requireIntegralId(docs, idCol, "qualityAwareSurvivors")
     val cc = connectedComponents(pairs) // (id, label) — paired docs only
     val labeled = docs
       .select(col(idCol).cast("long").as("id"),

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * format (a decoder that e.g. averaged BMP padding bytes diverges).
   *
   * At scale the decode is a narrow per-partition pass — one iterator
-  * (or Arrow batch) at a time, no shuffle, no driver involvement.
+  * at a time, no shuffle, no driver involvement.
   */
 object Multimodal {
 
@@ -159,63 +159,6 @@ object Multimodal {
       }
     }(Encoders.product[AudioFp]).toDF()
 
-  /** Arrow columnar-batch variant of the decode stage — the batch shape
-    * a native JNI/FFI codec integration needs (such a decoder consumes
-    * Arrow buffers directly, so the decode loop must see columnar
-    * batches, not JVM row objects). Scala Spark has no `mapInArrow`
-    * (a Python-surface API), so the batch marshalling is explicit and
-    * uses the public Arrow vector API: each partition is packed into
-    * `batchSize`-row `VectorSchemaRoot`s, the codec reads the columnar
-    * buffers batch-at-a-time, and features come back as rows.
-    * Allocation is per-batch and closed eagerly — memory stays bounded
-    * at batchSize × row width regardless of partition size.
-    *
-    * Output contract is IDENTICAL to [[extractFeatures]] (spec-pinned).
-    */
-  def extractFeaturesArrow(docs: DataFrame, idCol: String,
-      batchSize: Int = 512): DataFrame = {
-    require(batchSize > 0)
-    synthesizeMedia(docs, idCol).mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(decodeArrowBatch)
-    }(Encoders.product[MediaFeatures]).toDF()
-  }
-
-  /** One Arrow batch through the codec: marshal the rows into Arrow
-    * vectors, decode against the COLUMNAR buffers (the loop reads
-    * `VarBinaryVector`/`BigIntVector` cells, never a MediaRow),
-    * release the buffers.
-    */
-  private def decodeArrowBatch(batch: Seq[MediaRow]): Seq[MediaFeatures] = {
-    import org.apache.arrow.memory.RootAllocator
-    import org.apache.arrow.vector._
-    import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
-    import org.apache.arrow.vector.types.Types
-    import scala.jdk.CollectionConverters._
-
-    val schema = new Schema(Seq(
-      new Field("media_id", FieldType.notNullable(new ArrowType.Int(64, true)), null),
-      new Field("payload", FieldType.notNullable(Types.MinorType.VARBINARY.getType), null)
-    ).asJava)
-    val allocator = new RootAllocator()
-    val root = VectorSchemaRoot.create(schema, allocator)
-    try {
-      val ids = root.getVector("media_id").asInstanceOf[BigIntVector]
-      val payloads = root.getVector("payload").asInstanceOf[VarBinaryVector]
-      root.allocateNew()
-      batch.zipWithIndex.foreach { case (r, i) =>
-        ids.setSafe(i, r.media_id)
-        payloads.setSafe(i, r.payload)
-      }
-      root.setRowCount(batch.size)
-      (0 until root.getRowCount).map { i =>
-        decodeFeatures(ids.get(i), payloads.get(i))
-      }
-    } finally {
-      root.close()
-      allocator.close()
-    }
-  }
-
   /** REAL resize stage (replaced the former metadata-only stub):
     * every IMAGE payload nearest-neighbor-resampled to `tw`×`th` and
     * re-encoded as binary PPM ([[MediaCodecs.resizeImage]] — pure
@@ -252,26 +195,4 @@ object Multimodal {
     */
   case class ResizedRow(media_id: Long, payload: Array[Byte],
       format: String, resized: Boolean)
-
-  /** One sampled frame: parent media id, frame index, frame payload. */
-  case class Frame(media_id: Long, frame_no: Int, frame: Array[Byte])
-
-  /** Frame-sampling stage: every `stride`-th fixed-size chunk of the
-    * payload becomes one frame row (1→N explode, the row-multiplying
-    * shape real video sampling has). A real implementation would seek
-    * keyframes in the container; the chunking STUB keeps the same
-    * schema, batch shape, and output cardinality contract
-    * (ceil(nChunks / stride) frames per media row).
-    */
-  def frameSampleStub(media: Dataset[MediaRow], frameBytes: Int,
-      stride: Int): Dataset[Frame] = {
-    require(frameBytes > 0 && stride > 0)
-    implicit val enc = Encoders.product[Frame]
-    media.flatMap { r =>
-      // --- STUB: real keyframe-seek goes here (no video codec offline).
-      r.payload.grouped(frameBytes).zipWithIndex
-        .collect { case (chunk, i) if i % stride == 0 =>
-          Frame(r.media_id, i, chunk) }
-    }
-  }
 }

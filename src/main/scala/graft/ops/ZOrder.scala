@@ -16,13 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object ZOrder {
 
-  /** Interleave the low `bitsPer` bits of `a` (odd positions) and `b`
-    * (even positions): the 2-D Morton code. Inputs must be
-    * non-negative and < 2^bitsPer.
-    */
-  def interleave(a: Column, b: Column, bitsPer: Int): Column =
-    interleaveN(Seq(a, b), bitsPer)
-
   /** k-dimensional Morton code: bit `i` of dimension `d` lands at
     * position `i·k + (k-1-d)` (dimension 0 owns the most significant
     * position of each bit group). Requires `bitsPer · k ≤ 63`.
@@ -52,17 +45,11 @@ object ZOrder {
       floor((c.cast("double") - minV) / span * buckets).cast("long")))
   }
 
-  /** Z-order `df` by two numeric columns into `numFiles` output
-    * ranges: compute the Morton value, range-partition on it (balanced
-    * files), sort within partitions (tight per-file min/max on BOTH
-    * dimensions), drop the helper column.
-    */
-  def zorderBy2(df: DataFrame, c1: String, c2: String,
-      numFiles: Int, bitsPer: Int = 16): DataFrame =
-    zorderByN(df, Seq(c1, c2), numFiles, bitsPer)
-
-  /** k-dimensional variant: Morton value over all `cols`, one stats
-    * pass for all min/max bounds.
+  /** Z-order `df` by the numeric `cols` into `numFiles` output ranges:
+    * compute the Morton value (one stats pass for all min/max bounds),
+    * range-partition on it (balanced files), sort within partitions
+    * (tight per-file min/max on EVERY dimension), drop the helper
+    * column.
     */
   def zorderByN(df: DataFrame, cols: Seq[String],
       numFiles: Int, bitsPer: Int = 16): DataFrame = {

@@ -63,38 +63,6 @@ object EventStreams {
         count(lit(1)).as("n_events"))
   }
 
-  /** Streaming dedup on event id with a watermark bound on state. */
-  def dedupStream(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Watermarked stream-stream inner join: impressions ⋈ clicks on a
-    * key, click required within `withinSeconds` AFTER the impression.
-    * Both sides carry watermarks so the join state is bounded: an
-    * impression can be dropped from state once the click-side
-    * watermark passes `impression_ts + within` (the time-bound is part
-    * of the join condition, which is what makes streaming state
-    * finite — an unconstrained stream-stream join would buffer
-    * forever).
-    */
-  def impressionClickJoin(impressions: DataFrame, clicks: DataFrame,
-      withinSeconds: Int, watermark: String = "1 minute"): DataFrame = {
-    val imp = impressions
-      .select(col("event_id").as("imp_id"), col("user_id"),
-        col("ts").as("imp_ts"))
-      .withWatermark("imp_ts", watermark)
-    val clk = clicks
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    imp.join(clk,
-      imp("user_id") === clk("user_id") &&
-        col("click_ts") >= col("imp_ts") &&
-        col("click_ts") <= col("imp_ts") + expr(s"INTERVAL $withinSeconds SECONDS"))
-      .select(col("imp_id"), col("click_id"), imp("user_id").as("user_id"),
-        col("imp_ts"), col("click_ts"))
-  }
-
   /** Input/state/output types for the stateful streaming sessionizer. */
   case class SessionEvent(user_id: Long, event_id: Long, ts: java.sql.Timestamp)
   case class SessionState(sessionSeq: Long, start: Long, last: Long, nEvents: Long)
@@ -105,9 +73,8 @@ object EventStreams {
   /** Custom-state streaming sessionization via flatMapGroupsWithState:
     * per-user state tracks the open session; a batch closes sessions
     * whose gap to the next event exceeds `gapMinutes` and emits them.
-    * The open session is emitted only on state timeout in production;
-    * here the contract is: emit closed sessions, keep the live one in
-    * state (visible to the spec through the final batch).
+    * The contract is: emit closed sessions, keep the live one in state
+    * (no timeout — it is emitted once a later event closes it).
     *
     * This is the incremental counterpart of [[sessionize]]: the batch
     * window scan becomes O(state) per micro-batch instead of a full
@@ -141,60 +108,6 @@ object EventStreams {
           }
           cur.foreach(state.update)
           closed.result().iterator
-      }
-  }
-
-  /** Event-time-timeout sessionization: like [[sessionizeStream]], but
-    * the open session is EMITTED when the watermark passes its gap
-    * deadline (state times out) instead of lingering forever — the
-    * production contract, where every session eventually closes and
-    * per-user state is bounded by the watermark.
-    *
-    * Requires a watermark on `ts` upstream (EventTimeTimeout is
-    * undefined without one); the timeout deadline is `last event +
-    * gap`, re-armed on every update.
-    */
-  def sessionizeStreamEventTime(events: org.apache.spark.sql.Dataset[SessionEvent],
-      gapMinutes: Int, watermark: String = "10 minutes"): org.apache.spark.sql.Dataset[SessionOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60000L
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, it: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed last+gap: the open session is closed for
-            // good (no on-time event can extend it any more)
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(user, s.sessionSeq,
-              new java.sql.Timestamp(s.start), new java.sql.Timestamp(s.last), s.nEvents))
-          } else {
-            val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            var cur = state.getOption
-            val closed = Seq.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.last <= gapMs =>
-                  cur = Some(s.copy(last = t, nEvents = s.nEvents + 1))
-                case Some(s) =>
-                  closed += SessionOut(user, s.sessionSeq,
-                    new java.sql.Timestamp(s.start), new java.sql.Timestamp(s.last), s.nEvents)
-                  cur = Some(SessionState(s.sessionSeq + 1, t, t, 1))
-                case None =>
-                  cur = Some(SessionState(1, t, t, 1))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.last + gapMs)
-            }
-            closed.result().iterator
-          }
       }
   }
 }

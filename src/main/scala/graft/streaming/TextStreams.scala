@@ -1,78 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
-import graft.ops.Dedup
 
 /** Streaming face of the text-curation pipeline beyond the stateless
   * Column operators (which run unchanged on streams —
-  * `StreamingTextOpsSpec`): the stateful/join-shaped pieces.
+  * `StreamingTextOpsSpec`): frame-level compositions that also run on
+  * `readStream` without state or a watermark.
   */
 object TextStreams {
-
-  /** ONLINE ingest screening — q78's incremental dedup re-expressed
-    * for `readStream`: each arriving document is fingerprinted
-    * map-side (native MinHash signature → band buckets, all stateless
-    * expressions), joined against the STATIC stored corpus index
-    * ([[Dedup.minhashBandBuckets]], the frame a nightly job persists
-    * and ingest appends to) via a stream-static inner join — no
-    * watermark, no state store, every micro-batch is screened the
-    * moment it arrives — and candidates are verified with exact
-    * per-pair Jaccard against the static corpus shingle frame.
-    *
-    * Emits (batch_id, corpus_id, jaccard) pairs at ≥ `threshold`,
-    * append-mode. Delivery contract: a pair colliding in m bands
-    * emits m IDENTICAL rows (the batch operator's candidate
-    * `distinct` would need cross-trigger state here); consumers that
-    * need exactly-one-row-per-pair dedup downstream or run the batch
-    * operator per trigger via `foreachBatch`. The pair SET equals the
-    * batch operator's on the same data (spec-pinned).
-    *
-    * Scale shape: the arriving doc's shingle set rides the banded
-    * rows through the join (bands × duplication of one document's
-    * shingles — bounded by the micro-batch, and the alternative is a
-    * stream-stream self-join, which would need watermark state); the
-    * corpus side is a static frame the join re-reads per trigger, so
-    * persist it (or back it by a bucketed table on (band, bucket))
-    * for real deployments.
-    */
-  def incrementalDedupStream(
-      docs: DataFrame, idCol: String, textCol: String,
-      corpus: DataFrame, n: Int, bands: Int, rowsPerBand: Int,
-      threshold: Double): DataFrame = {
-    // static side: the stored index + the shingle frame for verification
-    val corpusIdx = Dedup.minhashBandBuckets(
-      corpus, idCol, textCol, n, bands, rowsPerBand)
-    val corpusShingles = corpus.select(
-      col(idCol).as("corpus_id"),
-      array_distinct(graft.functions.wordShinglesNative(col(textCol), n))
-        .as("sh_c"))
-    // stream side: signature + bands, all stateless map-side exprs
-    // (no fanOut — a streaming frame has no .rdd and micro-batches
-    // arrive pre-partitioned)
-    val banded = docs.select(
-        col(idCol).as("batch_id"),
-        array_distinct(graft.functions.wordShinglesNative(col(textCol), n))
-          .as("sh_b"),
-        graft.functions.minhashNative(col(textCol), n, bands * rowsPerBand)
-          .as("sig"))
-      .where(col("sig").isNotNull)
-      .select(col("batch_id"), col("sh_b"),
-        posexplode(transform(
-          sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
-    banded.join(corpusIdx.withColumnRenamed("doc", "corpus_id"),
-        Seq("band", "bucket"))
-      .join(corpusShingles, Seq("corpus_id"))
-      .withColumn("inter", size(array_intersect(col("sh_b"), col("sh_c"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("sh_b")) + size(col("sh_c")) - col("inter")).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select("batch_id", "corpus_id", "jaccard")
-  }
 
   /** ONLINE phrase screening — [[graft.ops.Retrieval.phraseOccurrencesMapSide]]
     * applied to a stream verbatim: the map-only formulation needs no

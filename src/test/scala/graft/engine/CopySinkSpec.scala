@@ -12,6 +12,9 @@ class CopySinkSpec extends SparkSpecBase {
     assert(CopySink.encodeField("has,comma") == "\"has,comma\"")
     assert(CopySink.encodeField("has\"quote") == "\"has\"\"quote\"")
     assert(CopySink.encodeField(42) == "42")
+    // quoted so Spark's CSV reader, like PostgreSQL, loads "" (pandas
+    // writes it unquoted; the loaded value is the same)
+    assert(CopySink.encodeField("") == "\"\"")
     assert(CopySink.encodeField("\\N") == "\\N") // pandas also leaves this ambiguous
   }
 

@@ -65,7 +65,7 @@ class PipelineSpec extends SparkSpecBase {
       StructField("k", IntegerType), StructField("v", StringType)))
     val rows = Seq(Row(1, "plain"), Row(2, "a\"b"), Row(3, " pad "),
       Row(4, "has,comma"), Row(5, "two\nlines"), Row(6, null),
-      Row(7, "\"\""), Row(8, "back\\slash"))
+      Row(7, "\"\""), Row(8, "back\\slash"), Row(9, ""))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
     def lines(text: String): Seq[String] = text.split("\n").filter(_.nonEmpty).sorted.toSeq
 

@@ -773,118 +773,6 @@ class AnnIndexSpec extends SparkSpecBase {
       "the replayer must purge its predecessor's stage leftovers")
   }
 
-  test("hardNegativesIndexedConverged: the adaptive ladder on the " +
-      "miner — every pair cross-label, per-anchor results identical " +
-      "to the fixed-width miner at the reported n_probe_used, widths " +
-      "on the ladder, and never below the fixed-start recall") {
-    val dir = Files.createTempDirectory("graft_annhnc").toString
-    val e = corpus(40)
-    val labels = e.select(col("vec_id"), (col("vec_id") % 4).as("label"))
-    val anchors = e.join(labels, Seq("vec_id")).where(col("vec_id") < 8)
-      .select("vec_id", "embedding", "label")
-    AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf",
-      nCells = 4, iters = 3)
-    val conv = AnnIndex.hardNegativesIndexedConverged(spark, s"$dir/ivf",
-      anchors, "vec_id", "embedding", "label", labels, k = 3, nProbe0 = 1)
-      .localCheckpoint(true)
-    val rows = conv.collect()
-    assert(rows.nonEmpty)
-    val byAnchor = rows.groupBy(_.getAs[Long]("query_id"))
-    // widths: one per anchor, on the ladder {2, 4}
-    byAnchor.foreach { case (a, rs) =>
-      val ws = rs.map(_.getAs[Int]("n_probe_used")).toSet
-      assert(ws.size == 1 && Set(2, 4).contains(ws.head),
-        s"anchor $a widths $ws off the ladder")
-    }
-    // cross-label only
-    val lbl = labels.as[(Long, Long)].collect().toMap
-    rows.foreach { r =>
-      val a = r.getAs[Long]("query_id"); val n = r.getAs[Long]("neighbor_id")
-      assert(lbl(a) != lbl(n), s"same-label pair ($a, $n) surfaced")
-    }
-    // width consistency: per distinct width, rows ≡ the fixed miner
-    rows.map(_.getAs[Int]("n_probe_used")).distinct.foreach { w =>
-      val ids = byAnchor.collect {
-        case (a, rs) if rs.head.getAs[Int]("n_probe_used") == w => a
-      }.toSet
-      val fixed = AnnIndex.hardNegativesIndexed(spark, s"$dir/ivf",
-          anchors.where(col("vec_id").isin(ids.toSeq.map(Long.box): _*)),
-          "vec_id", "embedding", "label", labels, k = 3, nProbe = w)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-        .collect().map(_.toSeq).toSet
-      val got = rows.filter(r => ids(r.getAs[Long]("query_id")))
-        .map(r => Seq(r.getAs[Long]("query_id"),
-          r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"),
-          r.getAs[Double]("cosine"))).toSet
-      assert(got == fixed,
-        s"width-$w anchors diverge from the fixed miner")
-    }
-    // never below the fixed-start recall vs the exact broadcast arm
-    val exact = Similarity.hardNegativesTopK(anchors, e.join(labels,
-        Seq("vec_id")), "vec_id", "embedding", "label", k = 3)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val base = AnnIndex.hardNegativesIndexed(spark, s"$dir/ivf", anchors,
-        "vec_id", "embedding", "label", labels, k = 3, nProbe = 1)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val convSets = rows.map(r => (r.getAs[Long]("query_id"),
-        r.getAs[Long]("neighbor_id")))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    exact.foreach { case (a, ex) =>
-      val rc = (convSets.getOrElse(a, Set.empty) & ex).size
-      val rb = (base.getOrElse(a, Set.empty) & ex).size
-      assert(rc >= rb, s"anchor $a: converged recall $rc < base $rb")
-    }
-  }
-
-  test("the ladder never accepts an empty or sub-k 'stable' result: an " +
-      "anchor whose near cells are all same-label rides to the " +
-      "exhaustive width and returns its k cross-label negatives — not " +
-      "zero rows (r15 review finding)") {
-    val dir = Files.createTempDirectory("graft_annladder").toString
-    // clusters 0..2 mutually near (unit axes), all label 0; cluster 3
-    // FAR (3·e₃) and the only label-1 mass — so an anchor in cluster 0
-    // probes cells 0,1,2 first (zero cross-label rows at widths 1 AND
-    // 2: the 'stable empty' trap) and finds negatives only at the
-    // exhaustive width
-    val rows = (0 until 40).map { i =>
-      val c = i % 4
-      val scale = if (c == 3) 3.0f else 1.0f
-      (i.toLong, Array.tabulate(4)(d =>
-        (if (d == c) scale else 0.0f) + 0.001f * (i / 4)),
-        if (c == 3) 1L else 0L)
-    }.toDF("vec_id", "embedding", "label")
-    val e = rows.select("vec_id", "embedding")
-    val labels = rows.select("vec_id", "label")
-    AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf",
-      nCells = 4, iters = 4)
-    val anchors = rows.where(col("vec_id") % 4 === 0 &&
-      col("vec_id") < 8) // cluster-0 anchors
-    val conv = AnnIndex.hardNegativesIndexedConverged(spark, s"$dir/ivf",
-      anchors, "vec_id", "embedding", "label", labels, k = 3, nProbe0 = 1)
-      .collect()
-    val byAnchor = conv.groupBy(_.getAs[Long]("query_id"))
-    assert(byAnchor.keySet ==
-      anchors.select("vec_id").as[Long].collect().toSet,
-      "every anchor must surface — zero-row acceptance would drop them")
-    byAnchor.foreach { case (a, rs) =>
-      assert(rs.length == 3,
-        s"anchor $a returned ${rs.length} rows — sub-k acceptance")
-      assert(rs.forall(_.getAs[Int]("n_probe_used") == 4),
-        s"anchor $a must ride to the exhaustive width")
-    }
-    // and the exhaustive-width rows are the fixed miner's, exactly
-    val fixed = AnnIndex.hardNegativesIndexed(spark, s"$dir/ivf",
-        anchors, "vec_id", "embedding", "label", labels, k = 3,
-        nProbe = 4)
-      .select("query_id", "neighbor_id", "rank", "cosine")
-      .collect().map(_.toSeq).toSet
-    assert(conv.map(r => Seq(r.getAs[Long]("query_id"),
-      r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"),
-      r.getAs[Double]("cosine"))).toSet == fixed)
-  }
-
   test("searchIvfIndexFilteredConverged: a selective allowed set " +
       "(the sub-k norm) rides to the exhaustive width and returns the " +
       "true filtered top-k — never a starved result; every neighbor " +

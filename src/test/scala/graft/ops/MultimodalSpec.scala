@@ -46,17 +46,6 @@ class MultimodalSpec extends SparkSpecBase {
     assert(wav.getAs[Int]("width") == 0 && wav.getAs[Int]("height") == 0)
   }
 
-  test("Arrow columnar decode matches the row-path decode exactly") {
-    // larger corpus than the batch size so partitions span several batches
-    val many = (0L until 100L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val rowPath = Multimodal.extractFeatures(many, "doc_id")
-      .orderBy("media_id").collect().map(_.toSeq).toSeq
-    val arrowPath = Multimodal.extractFeaturesArrow(many, "doc_id", batchSize = 16)
-      .orderBy("media_id").collect().map(_.toSeq).toSeq
-    assert(arrowPath == rowPath)
-    assert(arrowPath.length == 100)
-  }
-
   test("resizeMedia: real nearest-neighbor resample, closed-form exact; audio passes through") {
     val tw = 4; val th = 3
     val out = Multimodal.resizeMedia(
@@ -89,20 +78,5 @@ class MultimodalSpec extends SparkSpecBase {
     val bad = Seq(Multimodal.MediaRow(99L, corrupt, "bmp")).toDS()
     val q = Multimodal.resizeMedia(bad, tw, th).collect().head
     assert(!q.resized && q.payload.toSeq == corrupt.toSeq)
-  }
-
-  test("frameSampleStub explodes every stride-th chunk with stable indices") {
-    val media = Multimodal.synthesizeMedia(docs, "doc_id")
-    val payload0 = Multimodal.synthesizePayload(0L)._1
-    val frameBytes = 100
-    val nChunks = (payload0.length + frameBytes - 1) / frameBytes
-    val frames = Multimodal.frameSampleStub(media, frameBytes, stride = 2)
-      .collect().filter(_.media_id == 0L).sortBy(_.frame_no)
-    assert(frames.map(_.frame_no).toSeq == (0 until nChunks by 2).toSeq)
-    assert(frames.head.frame.toSeq == payload0.take(frameBytes).toSeq)
-    // empty media set -> zero frames, not a null row
-    val none = Multimodal.frameSampleStub(
-      media.filter(_.media_id < 0), frameBytes, 2).collect()
-    assert(none.isEmpty)
   }
 }

@@ -13,7 +13,7 @@ class ZOrderSpec extends SparkSpecBase {
   test("interleave produces the Morton code") {
     val got = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L))
       .toDF("a", "b")
-      .select(ZOrder.interleave(col("a"), col("b"), 4).as("z"))
+      .select(ZOrder.interleaveN(Seq(col("a"), col("b")), 4).as("z"))
       .as[Long].collect().toSeq
     // z(3,5) : a=011 odd positions, b=101 even -> 0b011011 high-interleave
     // a bits -> positions 1,3,5..; b bits -> 0,2,4..
@@ -44,11 +44,11 @@ class ZOrderSpec extends SparkSpecBase {
 
   test("empty input no-ops; an all-null dimension is skipped, not the layout") {
     val empty = Seq.empty[(Long, Long)].toDF("x", "y")
-    assert(ZOrder.zorderBy2(empty, "x", "y", numFiles = 4).count() == 0L)
+    assert(ZOrder.zorderByN(empty, Seq("x", "y"), numFiles = 4).count() == 0L)
     // y unbounded -> layout proceeds on x alone (range-sorted), no NPE
     val halfNull = Seq((Some(9L), Option.empty[Long]), (Some(1L), None),
       (Some(5L), None)).toDF("x", "y")
-    val out = ZOrder.zorderBy2(halfNull, "x", "y", numFiles = 2)
+    val out = ZOrder.zorderByN(halfNull, Seq("x", "y"), numFiles = 2)
     assert(out.columns.toSeq == Seq("x", "y"))
     assert(out.count() == 3L)
     // clustering on the surviving dimension is real: x arrives ordered
@@ -59,7 +59,7 @@ class ZOrderSpec extends SparkSpecBase {
   test("z-order layout prunes both dimensions; linear sort only one") {
     val zDir = Files.createTempDirectory("graft_z").toString
     val xDir = Files.createTempDirectory("graft_x").toString
-    ZOrder.zorderBy2(grid, "x", "y", numFiles = 16, bitsPer = 7)
+    ZOrder.zorderByN(grid, Seq("x", "y"), numFiles = 16, bitsPer = 7)
       .write.mode("overwrite").parquet(zDir)
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(xDir)
@@ -78,25 +78,5 @@ class ZOrderSpec extends SparkSpecBase {
     assert(zY < zTotal / 2, s"z layout should prune y-pred: $zY of $zTotal")
     // both layouts prune the box on x; z must not be worse
     assert(zBox <= math.max(xBox, zTotal / 2), s"box: z=$zBox x=$xBox")
-  }
-
-  test("writeZOrdered: directory pruning on partition col, file pruning on z dims") {
-    val dir = Files.createTempDirectory("graft_zw").toString
-    val data = grid.withColumn("p", (col("id") % 2).cast("string"))
-    graft.engine.Pipeline.writeZOrdered(data, dir, Seq("p"), Seq("x", "y"),
-      numFiles = 16, bitsPer = 7)
-    val sub = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("p=")).map(_.getName).sorted
-    assert(sub.toSeq == Seq("p=0", "p=1"))
-    // the partition predicate prunes at the DIRECTORY level (plan-visible)
-    val rd = spark.read.parquet(dir)
-      .where(col("p") === "0" && col("x") < 10 && col("y") < 10)
-    val plan = rd.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan)
-    assert(rd.count() == 50) // 10x10 box, even ids only
-    // within the surviving directory the z layout prunes BOTH dimensions
-    val (touched, total) = filesTouched(s"$dir/p=0", col("x") < 10 && col("y") < 10)
-    assert(total >= 8, s"expected one file per z range in p=0, got $total")
-    assert(touched <= total / 4, s"z-order should prune the box: $touched of $total")
   }
 }

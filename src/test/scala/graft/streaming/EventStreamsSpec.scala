@@ -59,23 +59,4 @@ class EventStreamsSpec extends SparkSpecBase {
         ("2024-01-01 11:00:00.0", "click", 1L, 4.0)))
     } finally q.stop()
   }
-
-  test("dedupStream drops duplicate event ids within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double, String)]
-    val streamDf = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val q = EventStreams.dedupStream(streamDf)
-      .writeStream.format("memory").queryName("deduped")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        (1L, ts("2024-01-01 10:00:00"), 7L, "view", 1.0, "{}"),
-        (1L, ts("2024-01-01 10:00:01"), 7L, "view", 1.0, "{}"), // dup id
-        (2L, ts("2024-01-01 10:00:02"), 7L, "view", 2.0, "{}"))
-      q.processAllAvailable()
-      val n = spark.sql("SELECT count(*) FROM deduped").collect()(0).getLong(0)
-      assert(n == 2L)
-    } finally q.stop()
-  }
 }

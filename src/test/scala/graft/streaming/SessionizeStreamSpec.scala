@@ -43,36 +43,4 @@ class SessionizeStreamSpec extends SparkSpecBase {
       assert(all.exists(s => s.session_seq == 2L && s.n_events == 1L))
     } finally q.stop()
   }
-
-  test("event-time timeout emits the open session once the watermark passes") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SessionEvent]
-    val out = EventStreams.sessionizeStreamEventTime(
-      mem.toDS(), gapMinutes = 30, watermark = "0 seconds")
-    val q = out.writeStream.format("memory").queryName("sessions_et")
-      .outputMode("append").start()
-    try {
-      // batch 1: one session for user 7 — stays open (watermark at max
-      // event time 10:10 is before the 10:40 deadline)
-      mem.addData(
-        SessionEvent(7L, 1L, ts("2024-01-01 10:00:00")),
-        SessionEvent(7L, 2L, ts("2024-01-01 10:10:00")))
-      q.processAllAvailable()
-      assert(spark.sql("SELECT count(*) FROM sessions_et").as[Long].collect()(0) == 0L)
-
-      // batch 2: a DIFFERENT user's late-morning event advances the
-      // watermark past 10:40 — user 7's open session must time out and
-      // flush WITHOUT user 7 sending anything.
-      mem.addData(SessionEvent(9L, 3L, ts("2024-01-01 12:00:00")))
-      q.processAllAvailable()
-      // timeout fires on the batch AFTER the watermark update
-      mem.addData(SessionEvent(9L, 4L, ts("2024-01-01 12:01:00")))
-      q.processAllAvailable()
-      val flushed = spark.sql("SELECT * FROM sessions_et WHERE user_id = 7")
-        .as[SessionOut].collect()
-      assert(flushed.length == 1)
-      assert(flushed(0).n_events == 2L)
-      assert(flushed(0).session_end == ts("2024-01-01 10:10:00"))
-    } finally q.stop()
-  }
 }
