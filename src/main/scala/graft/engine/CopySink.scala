@@ -1,8 +1,13 @@
 package graft.engine
 
 import java.nio.charset.StandardCharsets
+import java.sql.Timestamp
+import java.time.{LocalDateTime, ZoneId}
+import java.time.format.DateTimeFormatterBuilder
+import java.time.temporal.ChronoField
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 
 /** Postgres COPY bulk-sink structure (SURVEY.md §2.1 S7): the
   * reference streams each chunk as CSV bytes with `\N` nulls into
@@ -38,25 +43,46 @@ object CopySink {
     case other => other.toString
   }
 
-  /** One row → one CSV line (no header, matching `src/load.py:38`). */
-  def encodeRow(row: Row): String =
-    (0 until row.length).map(i => encodeField(row.get(i))).mkString(",")
+  /** One row → one CSV line (no header, matching `src/load.py:38`). A
+    * timestamp is written as its wall-clock time in `zone`.
+    */
+  def encodeRow(row: Row, zone: ZoneId): String =
+    (0 until row.length).map { i =>
+      row.get(i) match {
+        case ts: Timestamp => wallClock.format(LocalDateTime.ofInstant(
+          DateTimeUtils.microsToInstant(DateTimeUtils.fromJavaTimestamp(ts)), zone))
+        case v => encodeField(v)
+      }
+    }.mkString(",")
+
+  /** `Timestamp.toString`'s `yyyy-MM-dd HH:mm:ss.f…` layout (a fraction
+    * of 1–9 digits, `.0` for a whole second), with no time zone of its
+    * own: `Timestamp.toString` renders in the JVM's default zone.
+    */
+  private val wallClock = new DateTimeFormatterBuilder()
+    .appendPattern("uuuu-MM-dd HH:mm:ss")
+    .appendFraction(ChronoField.NANO_OF_SECOND, 1, 9, true)
+    .toFormatter
 
   /** One (payload, rowCount) pair per non-empty partition — the single
     * encode path both public entry points build on; the count is taken
     * at encode time (a newline count over the bytes would miscount
-    * quoted embedded newlines).
+    * quoted embedded newlines). Timestamps are rendered in the session
+    * time zone, as [[Pipeline.writeCsvForCopy]] renders them.
     */
-  def payloadsWithCounts(df: DataFrame): Dataset[(Array[Byte], Long)] =
+  def payloadsWithCounts(df: DataFrame): Dataset[(Array[Byte], Long)] = {
+    val zoneId = df.sparkSession.sessionState.conf.sessionLocalTimeZone
     df.mapPartitions { rows =>
       if (rows.isEmpty) Iterator.empty
       else {
+        val zone = ZoneId.of(zoneId)
         val sb = new StringBuilder
         var n = 0L
-        rows.foreach { r => sb.append(encodeRow(r)); sb.append('\n'); n += 1 }
+        rows.foreach { r => sb.append(encodeRow(r, zone)); sb.append('\n'); n += 1 }
         Iterator.single((sb.toString.getBytes(StandardCharsets.UTF_8), n))
       }
     }(Encoders.tuple(Encoders.BINARY, Encoders.scalaLong))
+  }
 
   /** Distributed formatting: one COPY-ready byte payload per partition
     * (the unit `CopyManager.copyIn` consumes as a stream).

@@ -1,8 +1,9 @@
 package graft.engine
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Pipeline control-plane parity (SURVEY.md §2.1, §2.10): the
   * reference's 3-stage Airflow DAG `extract >> transform >> load`
@@ -27,11 +28,31 @@ object Pipeline {
   /** Result of one pipeline run: per-stage row counts (A2). */
   case class RunStats(extracted: Long, cleaned: Long, loaded: Long)
 
+  /** The one Parquet writer of the stage files, shared by [[writeStage]]
+    * and [[conflictIgnoringAppend]]: zstd-compressed pages, string
+    * columns plain-encoded. parquet-mr's dictionary encoder looks every
+    * string value up in a hash map keyed on `Binary` objects; a JFR
+    * profile of the perfbench `etl_pipeline` run found its dictionary
+    * writers in 29 % of executor samples, 6 % once strings go plain.
+    * The other columns' dictionaries use primitive maps and stay: they
+    * keep the files within +11 % of the all-dictionary snappy bytes,
+    * where dropping every dictionary costs +21–22 % with zstd and
+    * +125 % with snappy (NOTES.md "Stage-file encoding"). Writer
+    * options, not a session setting, so Parquet that other code writes
+    * keeps Spark's defaults; readers take either encoding per file, so
+    * a table written the old way still takes appends.
+    */
+  private def stageWriter(df: DataFrame): DataFrameWriter[Row] =
+    df.schema.fields.filter(_.dataType.isInstanceOf[StringType])
+      .foldLeft(df.write.option("compression", "zstd")) { (w, f) =>
+        w.option(s"parquet.enable.dictionary#${f.name}", "false")
+      }
+
   /** S3/S5 — parquet stage sink: overwrite-mode directory write, the
     * atomic, retry-safe replacement for `chunk_%05d.parquet` naming.
     */
   def writeStage(df: DataFrame, dir: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(dir)
+    stageWriter(df).mode(SaveMode.Overwrite).parquet(dir)
 
   /** S6 — CSV serialization with the reference's NULL sentinel `\N`
     * and no header (reference `src/load.py:37-38`), the COPY-ready
@@ -107,7 +128,7 @@ object Pipeline {
     // single-writer semantics assumed, matching the reference's single
     // loader process (src/load.py runs alone).
     val obs = Observation()
-    novel.observe(obs, count(lit(1)).as("rows")).write.mode(SaveMode.Append).parquet(dir)
+    stageWriter(novel.observe(obs, count(lit(1)).as("rows"))).mode(SaveMode.Append).parquet(dir)
     val n = obs.get("rows").asInstanceOf[Long]
     if (n == 0) {
       if (!dirExisted) fs.delete(p, true)

@@ -56,13 +56,14 @@ object Star {
     * absent from `existing`. PG keeps the first arriving row; the dedup
     * keeps an arbitrary row per key — set-equal on the keys, documented
     * in SURVEY.md §7.4 risk 2. The anti-join broadcasts whichever side
-    * is under the broadcast threshold; at scale, `existing` should be
-    * the keys-only projection.
+    * is under the broadcast threshold. `existing` enters it as its key
+    * projection with no `distinct()`: an anti join ignores duplicate
+    * build keys, so a distinct would only add an aggregate over every
+    * key of the table (and a shuffle when the join broadcasts).
     */
-  def conflictIgnoreAppend(newRows: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame = {
-    val existingKeys = existing.select(keys.map(col).toIndexedSeq: _*).distinct()
-    firstPerKey(newRows, keys).join(existingKeys, keys, "left_anti")
-  }
+  def conflictIgnoreAppend(newRows: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
+    firstPerKey(newRows, keys).join(
+      existing.select(keys.map(col).toIndexedSeq: _*), keys, "left_anti")
 
   /** One arbitrary row per distinct key tuple, null keys included —
     * `dropDuplicates(keys)`'s contract. On a wide row `dropDuplicates`

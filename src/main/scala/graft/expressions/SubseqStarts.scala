@@ -9,8 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** 1-based start positions where `needle` occurs as a CONTIGUOUS
   * subsequence of `haystack` (token-level phrase match) — the phrase
-  * screening kernel behind `Retrieval.phraseOccurrencesMapSide` /
-  * `TextStreams.phraseScreenStream`: one compiled window walk per
+  * screening kernel behind `Retrieval.phraseOccurrencesMapSide` (on
+  * batches and streams alike): one compiled window walk per
   * (doc, phrase) pair instead of the interpreted
   * sequence→filter→nested-filter lambda chain (which re-evaluated a
   * λ per (start, offset) — 15·L interpreted ops per doc at phrase

@@ -1,10 +1,16 @@
 package graft.engine
 
 import graft.SparkSpecBase
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline parity: extract→transform→load over temp dirs,
   * CSV \N round-trip, conflict-ignoring idempotent re-run.
@@ -40,6 +46,26 @@ class PipelineSpec extends SparkSpecBase {
     val b = spark.read.parquet(s"$root/table").where(col("id") === "b").collect()(0)
     assert(b.isNullAt(b.fieldIndex("d")))
     assert(b.getDecimal(b.fieldIndex("m")).toPlainString == "0.00")
+
+    // every stage file is zstd-compressed with plain-encoded strings
+    // (the footer lists each column chunk's codec and encodings)
+    for (stage <- Seq("raw", "clean", "table")) {
+      val strings = spark.read.parquet(s"$root/$stage").schema.fields
+        .filter(_.dataType == StringType).map(_.name).toSet
+      val parts = new java.io.File(s"$root/$stage").listFiles().filter(_.getName.endsWith(".parquet"))
+      val chunks = parts.toSeq.flatMap { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+        try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+        finally r.close()
+      }
+      assert(strings.nonEmpty && chunks.exists(c => strings(c.getPath.toDotString)), stage)
+      for (c <- chunks) {
+        assert(c.getCodec == CompressionCodecName.ZSTD, s"$stage ${c.getPath}: ${c.getCodec}")
+        val dict = c.getEncodings.asScala.toSet & Set(Encoding.PLAIN_DICTIONARY, Encoding.RLE_DICTIONARY)
+        if (strings(c.getPath.toDotString)) assert(dict.isEmpty, s"$stage ${c.getPath}: $dict")
+      }
+    }
   }
 
   test("CSV \\N round-trip preserves nulls (S6)") {
@@ -74,7 +100,7 @@ class PipelineSpec extends SparkSpecBase {
     Pipeline.writeCsvForCopy(df, dir)
     val written = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv"))
       .map(f => new String(Files.readAllBytes(f.toPath), "UTF-8")).mkString
-    assert(lines(written) == lines(rows.map(CopySink.encodeRow).mkString("\n")))
+    assert(lines(written) == lines(rows.map(CopySink.encodeRow(_, java.time.ZoneOffset.UTC)).mkString("\n")))
 
     // reader: CopySink's payloads parse back to the original rows
     val replay = tmp() + "/replay"

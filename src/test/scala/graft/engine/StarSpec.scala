@@ -61,6 +61,20 @@ class StarSpec extends SparkSpecBase {
     assert(got.except(batch).isEmpty) // every survivor is a batch row
   }
 
+  test("conflictIgnoreAppend: no aggregate over the existing table's keys") {
+    // duplicate keys on the existing side are what a distinct would
+    // remove; the anti join ignores them
+    val existing = Seq((1, "a"), (1, "b"), (4, "c")).toDF("k", "v")
+    val batch = Seq((1, "x"), (2, "y"), (2, "y2"), (3, "z")).toDF("k", "v")
+    var got = Seq.empty[Int]
+    val plans = jobPlans {
+      got = Star.conflictIgnoreAppend(batch, existing, Seq("k")).collect().map(_.getInt(0)).sorted.toSeq
+    }
+    assert(got == Seq(2, 3))
+    assert(plans.nonEmpty)
+    for (p <- plans) assert(!p.contains("HashAggregate"), p)
+  }
+
   test("fkViolations and fkRetain partition the fact") {
     // a repeated fact key is kept or reported once per row; repeated dim
     // keys neither repeat a fact row nor need a dim-side shuffle

@@ -818,6 +818,32 @@ class AnnIndexSpec extends SparkSpecBase {
     }
   }
 
+  test("converged ladder: a sub-k result identical at the first two " +
+      "widths is not accepted; it rides to the exhaustive width") {
+    val dir = Files.createTempDirectory("graft_annsubk").toString
+    val e = corpus(40)
+    AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf",
+      nCells = 4, iters = 3)
+    // three allowed docs, all in query 0's own cluster: widths 1 and 2
+    // both return the same two rows, short of k = 5
+    val allowed = e.where(col("vec_id").isin(0L, 4L, 8L)).select("vec_id")
+    val q = e.where(col("vec_id") === 0L)
+    val conv = AnnIndex.searchIvfIndexFilteredConverged(spark,
+        s"$dir/ivf", q, "vec_id", "embedding", allowed, "vec_id",
+        k = 5, nProbe0 = 1)
+      .collect()
+    assert(conv.map(_.getAs[Long]("neighbor_id")).toSet == Set(4L, 8L))
+    for (w <- Seq(1, 2)) {
+      val fixed = AnnIndex.searchIvfIndexFiltered(spark, s"$dir/ivf", q,
+          "vec_id", "embedding", allowed, "vec_id", k = 5, nProbe = w)
+        .select("neighbor_id", "rank", "cosine").collect().map(_.toSeq).toSet
+      assert(fixed == conv.map(r => Seq(r.getAs[Long]("neighbor_id"),
+        r.getAs[Int]("rank"), r.getAs[Double]("cosine"))).toSet, s"width $w")
+    }
+    assert(conv.forall(_.getAs[Int]("n_probe_used") == 4),
+      conv.map(_.getAs[Int]("n_probe_used")).mkString(","))
+  }
+
   test("zero-downtime rebuild (versioned root + pointer swap): a " +
       "CONCURRENT reader never observes a torn quantizer/postings mix " +
       "while a full rebuild runs, the pointer advances atomically, the " +

@@ -4,9 +4,9 @@ import graft.SparkSpecBase
 import graft.ops.Retrieval
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** Parity of the streaming phrase screen (TextStreams
-  * .phraseScreenStream — the map-only formulation run on a stream
-  * verbatim) with the batch operators: across micro-batches, the
+/** Parity of the streaming phrase screen
+  * (Retrieval.phraseOccurrencesMapSide — the map-only formulation run
+  * on a stream verbatim) with the batch operators: across micro-batches, the
   * emitted rows must equal both batch formulations' results on the
   * union of the stream's documents — stateless, so each doc's rows
   * are final at emission.
@@ -31,7 +31,7 @@ class StreamingPhraseScreenSpec extends SparkSpecBase {
 
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val q = TextStreams.phraseScreenStream(
+    val q = Retrieval.phraseOccurrencesMapSide(
         mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
         phraseDf, "qid", "ph")
       .writeStream.format("memory").queryName("phrase_screen_stream")
