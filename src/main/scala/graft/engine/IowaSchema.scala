@@ -2,12 +2,10 @@ package graft.engine
 
 import org.apache.spark.sql.types._
 
-/** The reference's canonical schemas and configuration, verbatim.
-  *
-  * - `raw`/`table`: the 24-column `iowa_liquor_sales` DDL (reference
-  *   `include/sql/create_table.sql:1-26`), money as DECIMAL(18,2),
-  *   volumes as DECIMAL(18,3) per SURVEY.md §1.3.
-  * - `Config`: the typed env config (reference `src/config.py:9-21`).
+/** The reference's canonical schemas, verbatim: `raw`/`table`, the
+  * 24-column `iowa_liquor_sales` DDL (reference
+  * `include/sql/create_table.sql:1-26`), money as DECIMAL(18,2),
+  * volumes as DECIMAL(18,3) per SURVEY.md §1.3.
   */
 object IowaSchema {
 
@@ -53,16 +51,4 @@ object IowaSchema {
   val intCols: Seq[String] = Seq("pack", "bottle_volume_ml", "sale_bottles")
   val moneyCols: Seq[String] = Seq("state_bottle_cost", "state_bottle_retail", "sale_dollars")
   val volumeCols: Seq[String] = Seq("sale_liters", "sale_gallons")
-
-  /** Typed pipeline config — reference `src/config.py:9-21` and DAG
-    * constants `dags/iowa_liquor_dag.py:18-19`.
-    */
-  case class Config(
-      apiUrl: String = "https://data.iowa.gov/resource/m3tr-qhgy.csv",
-      startDate: String = "2020-01-01",
-      endDate: String = "2025-06-30",
-      chunkRows: Int = 50000,
-      rawDir: String = "data/raw",
-      cleanDir: String = "data/clean",
-      table: String = "iowa_liquor_sales")
 }

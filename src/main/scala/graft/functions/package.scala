@@ -51,20 +51,6 @@ package object functions {
     */
   def volume(c: Column): Column = c.cast(DecimalType(18, 3))
 
-  /** Cosine similarity between two float-array columns, computed with
-    * codegen'd higher-order functions (no UDF): zip_with multiply then
-    * aggregate-sum, all in DoubleType with deterministic left-to-right
-    * accumulation order (same order DuckDB's list functions use).
-    */
-  def cosineSim(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0), (acc, v) => acc + v)
-    // try_divide: a zero-norm vector yields NULL (quarantined by any
-    // ranking/filter) instead of an ANSI DIVIDE_BY_ZERO job abort
-    try_divide(dot(a, b), sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  }
-
   /** Exact dot product over float-array columns with every element
     * rounded to DECIMAL(12,6): decimal multiplication and summation are
     * exact and order-independent, so the result is bit-identical across

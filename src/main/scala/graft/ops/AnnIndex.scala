@@ -51,10 +51,8 @@ object AnnIndex {
     if (fs.exists(path)) fs.delete(path, true)
   }
 
-  private val WriterLockFile = "_writer_lock"
-
   /** ONE writer per index tree at a time: every mutation (build,
-    * append, compact, delete) runs under an exclusive-create lock
+    * append, compact, delete) runs under [[FsLock.withLock]] on this
     * file at the index root — the [[Versioning.publish]] discipline
     * applied to the generation tree. Single-writer-per-WRITE is what
     * each writer's own crash story assumes (gen-overwrite, fold,
@@ -69,64 +67,30 @@ object AnnIndex {
     * by the crash-ordering contracts). Composed maintenance
     * ([[maybeRetrain]]) acquires per operation, not per decision —
     * the decision inputs are monotone (appended mass, tombstones),
-    * so a stale read only delays work to the next pass.
-    *
-    * CRASH-ORPHANED locks self-heal when provable: acquisition rides
-    * [[FsLock.acquireOrReclaim]], so a kill -9'd writer on THIS host
-    * (the checkpoint-restart case — a restarted foreachBatch ingest
-    * finds its predecessor's lock with a dead pid) is reclaimed
-    * unaided, which is what keeps the q154-class streaming recovery
-    * story automatic through a hard crash. A cross-host or
-    * unprovable orphan still needs [[breakIndexLock]] after the
-    * operator confirms the holder dead. The body receives a
-    * [[FsLock.Fence]] and must `verify()` immediately before each
-    * tree-mutating write: a holder whose lock was wrongly broken
-    * (live-holder break, reclaim racing a fresh acquire) aborts
-    * before touching the tree instead of racing the new writer.
-    * HDFS/posix-only guarantee ([[FsLock]]).
+    * so a stale read only delays work to the next pass. A kill -9'd
+    * writer's lock on THIS host self-heals (the q154-class streaming
+    * recovery); a cross-host orphan waits for the lease TTL or
+    * [[breakIndexLock]].
     */
-  private def withWriterLock[T](spark: SparkSession, dir: String,
-      op: String)(body: FsLock.Fence => T): T = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the lock is only a lock where exclusive create is server-side
-    // atomic — same guard, same refusal, as Versioning.publish
-    Versioning.requireAtomicFs(fs, dir, s"AnnIndex.$op")
-    if (!fs.exists(root)) fs.mkdirs(root)
-    val lock = new org.apache.hadoop.fs.Path(s"$dir/$WriterLockFile")
-    // advertiseLease: this wrapper runs the body under withHeartbeat,
-    // so the stamp's lease promise is actually kept
-    val stamp = FsLock.holderStamp(op, advertiseLease = true)
-    if (!FsLock.acquireOrReclaim(fs, lock, stamp)) {
-      val holder = FsLock.holderInfo(fs, lock)
-        .map(h => s" (holder: $h)").getOrElse("")
-      throw new IllegalStateException(
-        s"$op: another writer holds $dir/$WriterLockFile$holder — one " +
-          "writer per index tree (stream ingest, takedown, compaction " +
-          "and rebuild serialize); back off, or breakIndexLock(dir) if " +
-          "its holder crashed")
-    }
-    // heartbeat while the mutation runs (the cross-host lease, FsLock
-    // path 2); release-if-owned, not unconditional delete: if this
-    // writer was fenced out mid-body, the lock on disk is the NEW
-    // holder's
-    try FsLock.withHeartbeat(fs, lock, stamp) {
-      body(FsLock.fence(fs, lock, stamp, s"AnnIndex.$op"))
-    } finally FsLock.releaseOwned(fs, lock, stamp)
-  }
+  private val WriterLockFile = "_writer_lock"
+
+  private val WriterBusy = "another writer holds the index writer " +
+    "lock — one writer per index tree (stream ingest, takedown, " +
+    "compaction and rebuild serialize); back off, or " +
+    "breakIndexLock(dir) if its holder crashed"
+
+  private def writerLock(dir: String) =
+    new org.apache.hadoop.fs.Path(s"$dir/$WriterLockFile")
 
   /** Manual override for a crash-orphaned writer lock that
     * [[FsLock.acquireOrReclaim]] cannot self-heal (foreign host, or a
-    * stamp it can't prove dead) — see [[withWriterLock]]. Breaking a
-    * STILL-LIVE holder is survivable but not free: the live writer is
-    * fenced out at its next tree-mutating write ([[FsLock.Fence]])
-    * and aborts loudly rather than racing the new one.
+    * stamp it can't prove dead). Breaking a STILL-LIVE holder is
+    * survivable but not free: the live writer is fenced out at its
+    * next tree-mutating write ([[FsLock.Fence]]) and aborts loudly
+    * rather than racing the new one.
     */
-  def breakIndexLock(spark: SparkSession, dir: String): Unit = {
-    val lock = new org.apache.hadoop.fs.Path(s"$dir/$WriterLockFile")
-    FsLock.release(
-      lock.getFileSystem(spark.sparkContext.hadoopConfiguration), lock)
-  }
+  def breakIndexLock(spark: SparkSession, dir: String): Unit =
+    FsLock.release(fsFor(spark, dir), writerLock(dir))
 
   /** Assign + quantize + co-locate one batch of vectors for a
     * generation directory write (shared by build and append).
@@ -207,7 +171,8 @@ object AnnIndex {
       corpus, idCol, vecCol, nCells, iters, corpusRowsHint = corpusRowsHint))
     require(cents.nonEmpty, "buildIvfIndex: no centroids")
     import scala.jdk.CollectionConverters._
-    withWriterLock(spark, dir, "buildIvfIndex") { fence =>
+    FsLock.withLock(fsFor(spark, dir), writerLock(dir),
+        "buildIvfIndex", WriterBusy) { fence =>
       // A rebuild swaps TWO reader-visible artifacts that must agree
       // (the quantizer and the postings assigned under it), and
       // readers take no lock — so BOTH are fully staged before the
@@ -369,7 +334,8 @@ object AnnIndex {
       idCol: String, vecCol: String, gen: Long): Long = {
     require(gen >= 1, s"gen 0 is the base build; appends start at 1 (got $gen)")
     requireFlatLayout(spark, dir, "appendToIvfIndex")
-    withWriterLock(spark, dir, "appendToIvfIndex") { fence =>
+    FsLock.withLock(fsFor(spark, dir), writerLock(dir),
+        "appendToIvfIndex", WriterBusy) { fence =>
       // centroids read INSIDE the lock: a concurrent rebuild must not
       // swap the quantizer between this read and the generation write
       val cents = loadCentroids(spark, dir)
@@ -448,7 +414,8 @@ object AnnIndex {
       idCol: String, del: Long): Long = {
     require(del >= 1, s"delete batches start at 1 (got $del)")
     requireFlatLayout(spark, dir, "deleteFromIvfIndex")
-    withWriterLock(spark, dir, "deleteFromIvfIndex") { fence =>
+    FsLock.withLock(fsFor(spark, dir), writerLock(dir),
+        "deleteFromIvfIndex", WriterBusy) { fence =>
       require(loadCentroids(spark, dir).nonEmpty, s"empty index at $dir")
       // stage → fence → rename, the writeGeneration discipline: a
       // tombstone batch becomes reader-visible at the rename instant
@@ -605,7 +572,8 @@ object AnnIndex {
     */
   def compactIvfIndex(spark: SparkSession, dir: String): Long = {
     requireFlatLayout(spark, dir, "compactIvfIndex")
-    withWriterLock(spark, dir, "compactIvfIndex") { fence =>
+    FsLock.withLock(fsFor(spark, dir), writerLock(dir),
+        "compactIvfIndex", WriterBusy) { fence =>
     val gens = listGenerations(spark, dir)
     require(gens.nonEmpty, s"empty index at $dir — nothing to compact")
     val target = gens.min - 1L
@@ -1435,7 +1403,8 @@ object AnnIndex {
     val fineCents = try trainFineCentroids(sample, dim, nFinePerCell, iters)
       finally sample.unpersist(blocking = false)
     import scala.jdk.CollectionConverters._
-    withWriterLock(spark, dir, "buildIvfIndexTwoLevel") { fence =>
+    FsLock.withLock(fsFor(spark, dir), writerLock(dir),
+        "buildIvfIndexTwoLevel", WriterBusy) { fence =>
       val fs = fsFor(spark, dir)
       StagedCommit.purgeStages(fs, dir, ".stage_", fence)
       val token = StagedCommit.stageToken()

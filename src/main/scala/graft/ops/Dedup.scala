@@ -1005,9 +1005,9 @@ object Dedup {
       emb: DataFrame, idCol: String, vecCol: String, blockCol: Column,
       threshold: Double, maxPairsPerBlock: Long = 100000000L,
       subBlockApprox: Boolean = false): DataFrame = {
-    // Native scaled-long dot, not the HOF cosineSim: the pair join is
-    // the hot loop, and the native expression is codegen'd where the
-    // HOF zip_with+aggregate chain is not. Element values quantize to
+    // Native scaled-long dot, not a higher-order-function dot: the
+    // pair join is the hot loop, and the native expression is
+    // codegen'd where a zip_with+aggregate chain is not. Element values quantize to
     // 1e-6 — irrelevant against any near-dup threshold. The two
     // SELF-dots of the cosine are per-ROW facts, so they (and their
     // sqrt) are computed once map-side before the join — each pair

@@ -1,18 +1,18 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import java.nio.charset.StandardCharsets
 
-/** ONE home for the exclusive-create lock-file primitive the
-  * single-writer protocols ride ([[Versioning.publish]]'s publish
-  * lock, [[AnnIndex]]'s index-writer lock): a lock is an
-  * exclusively-created file — server-side `create(overwrite=false)`
-  * on HDFS, nio O_CREAT|O_EXCL on local filesystems (Hadoop's local
-  * `create(false)` is a check-then-create TOCTOU between
-  * JVM-concurrent claimants). [[graft.engine.Schedule]]'s tick claims
-  * and marker lock ride it too. The guarantee is HDFS/posix-only;
-  * object stores lack server-side exclusive create (see
-  * [[Versioning]]'s scheme guard for the protocol that refuses them
-  * outright).
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path, RawLocalFileSystem}
+
+/** ONE home for the single-writer lock protocol ([[withLock]]) that
+  * [[Versioning]]'s dataset lock and [[AnnIndex]]'s index-writer lock
+  * ride: a lock is an exclusively-created file — server-side
+  * `create(overwrite=false)` on HDFS, nio O_CREAT|O_EXCL on local
+  * filesystems (Hadoop's local `create(false)` is a check-then-create
+  * TOCTOU between JVM-concurrent claimants). The guarantee is
+  * HDFS/posix-only; object stores lack server-side exclusive create,
+  * and [[requireAtomicFs]] refuses them outright.
   *
   * CRASH RECOVERY. A crashed holder (kill -9, OOM, node loss — the
   * cluster norm) skips its `finally` and leaves the lock behind.
@@ -31,12 +31,13 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSyst
   *      see [[holderStamp]]) and whose heartbeat has been silent
   *      past the advertised TTL — the path a restart rescheduled
   *      onto a DIFFERENT node (where the pid is unprobeable) needs.
-  *      Recovery latency = the TTL. Stamps without the field (an
-  *      older binary, a raw [[tryAcquire]] caller) never promised
-  *      to heartbeat or fence, so they are NEVER lease-reclaimed.
-  *   3. MANUAL (`breakIndexLock`/`breakLock`): the operator confirms
-  *      the stamped holder dead and deletes the lock — now only
-  *      needed to beat the TTL clock.
+  *      Recovery latency = the TTL. Stamps without the field (written
+  *      by an older binary) never promised to heartbeat or fence, so
+  *      they are NEVER lease-reclaimed.
+  *   3. MANUAL ([[release]], behind `AnnIndex.breakIndexLock` and
+  *      `Versioning.breakLock`): the operator confirms the stamped
+  *      holder dead and deletes the lock — now only needed to beat
+  *      the TTL clock.
   * Both paths can be WRONG in one way — breaking a holder that is
   * actually alive (pid recycled; operator misread) yields two
   * writers. [[Fence.verify]] is the backstop: every writer re-checks
@@ -82,25 +83,20 @@ private[graft] object FsLock {
     * The `lease=<ttlMs>` field ADVERTISES lease participation: this
     * holder PROMISES to heartbeat ([[withHeartbeat]]) and to fence
     * its writes, so a silent mtime past the advertised TTL really
-    * means a stopped heart. TTL reclaim is GATED on that field
-    * ([[acquireOrReclaim]]): a lock whose stamp lacks it — an older
-    * binary, or any caller that acquires without heartbeating — has
-    * a static mtime but made no such promise; reclaiming it after
-    * 180 s would manufacture two unfenced concurrent writers. Such
-    * locks recover only via the pid probe or a manual break. Because
-    * the field IS the promise, it is OPT-IN (`advertiseLease`), set
-    * only by callers that will actually run the mutation under
-    * [[withHeartbeat]] (both protocol wrappers do) — baking it into
-    * every stamp would advertise a heartbeat raw [[tryAcquire]]
-    * callers never start, re-opening the exact hazard the gate
-    * closes.
+    * means a stopped heart. [[withLock]], the one acquirer, keeps
+    * that promise for every stamp it writes. TTL reclaim stays GATED
+    * on the field ([[acquireOrReclaim]]): a lock file written by an
+    * older binary may lack it, has a static mtime, and made no such
+    * promise; reclaiming it after 180 s would manufacture two
+    * unfenced concurrent writers. Such locks recover only via the pid
+    * probe or a manual break.
     */
-  def holderStamp(op: String, advertiseLease: Boolean = false): String = {
+  def holderStamp(op: String): String = {
     val self = ProcessHandle.current()
     s"op=$op pid=${self.pid()} host=$localHost " +
       localPidNamespace.map(n => s"pidns=$n ").getOrElse("") +
       startMillisOf(self).map(s => s"start=$s ").getOrElse("") +
-      (if (advertiseLease) s"lease=$leaseTtlMs " else "") +
+      s"lease=$leaseTtlMs " +
       s"token=${java.util.UUID.randomUUID()} " +
       s"acquired=${java.time.Instant.now()}"
   }
@@ -117,8 +113,8 @@ private[graft] object FsLock {
     }.toMap
 
   /** The lease TTL a holder ADVERTISED at acquisition — None for
-    * stamps that never promised to heartbeat (older binaries, raw
-    * [[tryAcquire]] callers), which makes them ineligible for TTL
+    * stamps that never promised to heartbeat (older binaries), which
+    * makes them ineligible for TTL
     * reclaim. Reclaimers honor the HOLDER's advertised TTL, not
     * their own config: a holder beating against a longer local TTL
     * must not be reclaimed on a shorter one.
@@ -157,7 +153,7 @@ private[graft] object FsLock {
         }
     created.exists { out =>
       try {
-        try out.write(info.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        try out.write(info.getBytes(StandardCharsets.UTF_8))
         finally out.close()
       } catch {
         case e: java.io.IOException =>
@@ -189,8 +185,7 @@ private[graft] object FsLock {
           if (n > 0) off += n
         }
         if (off == 0) None
-        else Some(new String(bytes, 0, off,
-          java.nio.charset.StandardCharsets.UTF_8))
+        else Some(new String(bytes, 0, off, StandardCharsets.UTF_8))
       } finally in.close()
     } catch { case _: java.io.IOException => None }
 
@@ -211,7 +206,7 @@ private[graft] object FsLock {
     * stamp ADVERTISING lease participation (`lease=`, which an older
     * binary never wrote), such orphans are not TTL-reclaimed either:
     * during a rolling upgrade they recover only via the pid probe
-    * (same host+namespace) or a manual [[breakLock]].
+    * (same host+namespace) or a manual [[release]].
     */
   def holderProvablyDead(info: String): Boolean = {
     val fields = stampFields(info)
@@ -384,4 +379,72 @@ private[graft] object FsLock {
 
   def fence(fs: FileSystem, lock: Path, stamp: String, what: String): Fence =
     new Fence(fs, lock, stamp, what)
+
+  /** Filesystem schemes on which the protocol's two primitives DO NOT
+    * hold: object stores where `create(overwrite=false)` is a
+    * client-side check-then-create (no server-side exclusive create)
+    * and rename is a non-atomic copy+delete — so neither the
+    * single-writer lock nor an atomic pointer swap would actually be
+    * atomic. Production object-store deployments need a real
+    * coordination layer (a table format or a lock service), not this
+    * file-convention protocol. HDFS (server-side exclusive create +
+    * atomic in-namespace rename) and local/posix (O_CREAT|O_EXCL +
+    * atomic rename(2)) are the supported homes.
+    */
+  private val NonAtomicSchemes =
+    Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss",
+      "oss", "cosn", "swift")
+
+  /** Refuse a non-atomic filesystem loudly rather than silently
+    * degrading to "probably fine" semantics (see [[NonAtomicSchemes]]).
+    */
+  private[ops] def requireAtomicFs(fs: FileSystem, dir: String,
+      op: String): Unit = {
+    val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
+    require(!NonAtomicSchemes.contains(scheme),
+      s"$op: $dir is on '$scheme', which has no atomic " +
+        "rename or server-side exclusive create — the single-writer and " +
+        "atomic-pointer-swap guarantees would not hold. Use HDFS/posix, " +
+        "or a table format with a real commit protocol for object stores")
+  }
+
+  /** Run `body` as the single writer of the tree that holds `lock`:
+    * refuse non-atomic filesystems, acquire (reclaiming a provably
+    * dead or lease-expired orphan, [[acquireOrReclaim]]), heartbeat
+    * while the body runs (recovery path 2), and release in `finally`
+    * — release-if-owned, so a writer fenced out mid-body leaves the
+    * usurper's lock alone. A held lock fails this writer LOUDLY with
+    * `op: refusal` and the holder line, and nothing is mutated. The
+    * body receives a [[Fence]] and must `verify()` immediately before
+    * each tree-mutating write.
+    */
+  def withLock[T](fs: FileSystem, lock: Path, op: String, refusal: String)
+      (body: Fence => T): T = {
+    requireAtomicFs(fs, lock.getParent.toString, op)
+    fs.mkdirs(lock.getParent)
+    val stamp = holderStamp(op)
+    if (!acquireOrReclaim(fs, lock, stamp)) {
+      val holder = holderInfo(fs, lock).map(h => s"; holder: $h").getOrElse("")
+      throw new IllegalStateException(s"$op: $refusal [lock: $lock$holder]")
+    }
+    try withHeartbeat(fs, lock, stamp)(body(fence(fs, lock, stamp, op)))
+    finally releaseOwned(fs, lock, stamp)
+  }
+
+  /** Replace the small file `target` with `content` atomically: write
+    * a dot-hidden temp sibling, then ONE FileContext rename with
+    * OVERWRITE — a single replace on posix and HDFS that THROWS on
+    * failure (`FileSystem.rename` returns false). No reader sees the
+    * file absent or truncated; a delete-then-rename pair would leave
+    * a no-file window a crash could land in.
+    */
+  def replaceAtomically(conf: Configuration, target: Path,
+      content: String): Unit = {
+    val tmp = new Path(target.getParent, s".${target.getName}.tmp")
+    val out = tmp.getFileSystem(conf).create(tmp, true)
+    try out.write(content.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    FileContext.getFileContext(target.toUri, conf)
+      .rename(tmp, target, Options.Rename.OVERWRITE)
+  }
 }

@@ -66,70 +66,17 @@ object Versioning {
       .sorted
   }
 
-  /** Atomically swap the `_current` pointer to `version`. The swap is
-    * ONE FileContext rename with OVERWRITE (atomic on posix and HDFS)
-    * — there is no window where the pointer is absent or truncated.
+  /** Atomically swap the `_current` pointer to `version`
+    * ([[FsLock.replaceAtomically]]) — there is no window where the
+    * pointer is absent or truncated.
     */
   private def swapPointer(spark: SparkSession, dir: String,
-      version: Long): Unit = {
-    val (fs, _) = fsOf(spark, dir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$dir/.${CurrentFile}.tmp-$version")
-    val out = fs.create(tmp, true)
-    try out.write(version.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(tmp.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new org.apache.hadoop.fs.Path(s"$dir/$CurrentFile"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private val LockFile = "_publish_lock"
-
-  /** Filesystem schemes on which publish's two primitives DO NOT hold:
-    * object stores where `create(overwrite=false)` is a client-side
-    * check-then-create (no server-side exclusive create) and rename
-    * is a non-atomic copy+delete — so neither the single-writer lock
-    * nor the atomic `_current` pointer swap would actually be atomic.
-    * Publish REFUSES these loudly rather than silently degrading to
-    * "probably fine" semantics; production object-store deployments
-    * need a real coordination layer (a table format or a lock
-    * service), not this file-convention protocol. HDFS (server-side
-    * exclusive create + atomic in-namespace rename) and local/posix
-    * (O_CREAT|O_EXCL + atomic rename(2)) are the supported homes.
-    */
-  private val NonAtomicSchemes =
-    Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss",
-      "oss", "cosn", "swift")
-
-  private[ops] def requireAtomicFs(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, op: String = "Versioning.publish"): Unit = {
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
-    require(!NonAtomicSchemes.contains(scheme),
-      s"$op: $dir is on '$scheme', which has no atomic " +
-        "rename or server-side exclusive create — the single-writer and " +
-        "atomic-pointer-swap guarantees would not hold. Use HDFS/posix, " +
-        "or a table format with a real commit protocol for object stores")
-  }
-
-  /** Manual override for a crash-orphaned dataset lock that
-    * [[FsLock.acquireOrReclaim]] cannot self-heal (foreign host, or
-    * a stamp it can't prove dead): the operator or a lease-holding
-    * maintenance job (the [[graft.engine.Schedule]] claim discipline)
-    * clears it after confirming the holder dead — the holder line
-    * stamped into the lock file says who to confirm. Breaking a
-    * STILL-LIVE holder is survivable but not free: the live holder is
-    * fenced out at its next mutating write ([[FsLock.Fence]]) and
-    * aborts loudly rather than racing the new mutator.
-    */
-  def breakLock(spark: SparkSession, dir: String): Unit = {
-    val (fs, _) = fsOf(spark, dir)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$LockFile"), false)
-  }
+      version: Long): Unit =
+    FsLock.replaceAtomically(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(s"$dir/$CurrentFile"), version.toString)
 
   /** ONE dataset mutation at a time: publish, rollback, and vacuum
-    * all serialize through the same exclusive-create lock. Publish
+    * all serialize through this [[FsLock.withLock]] file. Publish
     * alone was locked through r12, which left two real tears: a
     * vacuum racing a publish sees the just-written v=N+1 tree before
     * the pointer swap, classifies it DISAVOWED (id above the
@@ -140,34 +87,27 @@ object Versioning {
     * reader-visible state under a single mutator is covered by the
     * crash-ordering contract).
     */
-  private def withDatasetLock[T](spark: SparkSession, dir: String,
-      op: String)(body: FsLock.Fence => T): T = {
-    val (fs, root) = fsOf(spark, dir)
-    requireAtomicFs(fs, dir, s"Versioning.$op")
-    if (!fs.exists(root)) fs.mkdirs(root)
-    val lock = new org.apache.hadoop.fs.Path(s"$dir/$LockFile")
-    // acquireOrReclaim: a crash-orphaned lock whose stamped pid is
-    // provably dead ON THIS HOST self-heals (the AnnIndex writer-lock
-    // discipline, shared at the FsLock level); anything unprovable
-    // still refuses and names the holder. The body must fence.verify()
-    // before each mutating write — the backstop against a wrong break.
-    // advertiseLease: this wrapper runs the body under withHeartbeat,
-    // so the stamp's lease promise is actually kept
-    val stamp = FsLock.holderStamp(op, advertiseLease = true)
-    if (!FsLock.acquireOrReclaim(fs, lock, stamp)) {
-      val holder = FsLock.holderInfo(fs, lock)
-        .map(h => s" (holder: $h)").getOrElse("")
-      throw new IllegalStateException(
-        s"$op: another mutator holds $dir/$LockFile$holder — publish, " +
-          "rollback and vacuum serialize; back off, or breakLock(dir) " +
-          "if its holder crashed")
-    }
-    // heartbeat while the mutation runs (the cross-host lease, FsLock
-    // path 2); release-if-owned: a fenced-out mutator must not delete
-    // the usurper's lock on its way down
-    try FsLock.withHeartbeat(fs, lock, stamp) {
-      body(FsLock.fence(fs, lock, stamp, s"Versioning.$op"))
-    } finally FsLock.releaseOwned(fs, lock, stamp)
+  private val LockFile = "_publish_lock"
+
+  private val Busy = "another mutator holds the dataset lock — " +
+    "publish, rollback and vacuum serialize; back off, or " +
+    "breakLock(dir) if its holder crashed"
+
+  private def lockPath(dir: String) =
+    new org.apache.hadoop.fs.Path(s"$dir/$LockFile")
+
+  /** Manual override for a crash-orphaned dataset lock that
+    * [[FsLock.acquireOrReclaim]] cannot self-heal (foreign host, or
+    * a stamp it can't prove dead): the operator clears it after
+    * confirming the holder dead — the holder line stamped into the
+    * lock file says who to confirm. Breaking a STILL-LIVE holder is
+    * survivable but not free: the live holder is fenced out at its
+    * next mutating write ([[FsLock.Fence]]) and aborts loudly rather
+    * than racing the new mutator.
+    */
+  def breakLock(spark: SparkSession, dir: String): Unit = {
+    val (fs, _) = fsOf(spark, dir)
+    FsLock.release(fs, lockPath(dir))
   }
 
   /** Publish `df` as the next version of the dataset at `dir` and
@@ -178,23 +118,20 @@ object Versioning {
     * complete".
     *
     * ONE publisher at a time: publish opens with an exclusive-create
-    * lock (O_CREAT|O_EXCL locally, server-side exclusive create on
-    * HDFS — the [[graft.engine.Schedule]] claim primitive), so a
-    * second concurrent publisher fails LOUDLY instead of racing its
-    * Overwrite into the same v=N tree and leaving a torn mix behind
-    * the pointer. The lock is removed on success AND on failure; only
-    * a publisher that died takes it to the grave — see [[breakLock]].
+    * lock ([[FsLock.withLock]]: O_CREAT|O_EXCL locally, server-side
+    * exclusive create on HDFS), so a second concurrent publisher
+    * fails LOUDLY instead of racing its Overwrite into the same v=N
+    * tree and leaving a torn mix behind the pointer. The lock is
+    * removed on success AND on failure; only a publisher that died
+    * takes it to the grave — see [[breakLock]].
     *
     * SUPPORTED FILESYSTEMS: HDFS and local/posix only. Both
     * guarantees lean on primitives object stores lack (server-side
     * exclusive create; atomic rename) — publish refuses known
     * non-atomic schemes loudly rather than degrading silently (see
-    * [[NonAtomicSchemes]]).
+    * [[FsLock.requireAtomicFs]]).
     */
   def publish(df: DataFrame, dir: String): Long =
-    // exclusive create via the shared primitive ([[FsLock]]): nio
-    // O_CREAT|O_EXCL locally (Hadoop local create(false) is a
-    // check-then-create TOCTOU), server-side exclusive create on HDFS
     publishTree(df.sparkSession, dir)(stage =>
       df.write.mode(SaveMode.Overwrite).parquet(stage))
 
@@ -213,9 +150,9 @@ object Versioning {
     * post-swap readers start on new-complete.
     */
   def publishTree(spark: SparkSession, dir: String)
-      (build: String => Unit): Long =
-    withDatasetLock(spark, dir, "publish") { fence =>
-      val (fs, _) = fsOf(spark, dir)
+      (build: String => Unit): Long = {
+    val (fs, _) = fsOf(spark, dir)
+    FsLock.withLock(fs, lockPath(dir), "publish", Busy) { fence =>
       val next = currentVersion(spark, dir).getOrElse(0L) + 1L
       // STAGE → FENCE → RENAME ([[StagedCommit]] — one implementation
       // shared with the index writers): the version write can run
@@ -234,6 +171,7 @@ object Versioning {
       swapPointer(spark, dir, next)
       next
     }
+  }
 
   /** Read the dataset: the current version by default, or any
     * still-on-disk version for time travel (`read(dir, Some(1))` is
@@ -258,13 +196,15 @@ object Versioning {
     * was disavowed; its number is reused so the version line stays
     * contiguous).
     */
-  def rollback(spark: SparkSession, dir: String, version: Long): Unit =
-    withDatasetLock(spark, dir, "rollback") { fence =>
+  def rollback(spark: SparkSession, dir: String, version: Long): Unit = {
+    val (fs, _) = fsOf(spark, dir)
+    FsLock.withLock(fs, lockPath(dir), "rollback", Busy) { fence =>
       require(listVersions(spark, dir).contains(version),
         s"cannot roll back to absent version $version at $dir")
       fence.verify()
       swapPointer(spark, dir, version)
     }
+  }
 
   /** Retention: drop DISAVOWED versions (ids above the pointer — a
     * rollback renounced their content, so "newest" must not protect
@@ -293,8 +233,8 @@ object Versioning {
     */
   def vacuum(spark: SparkSession, dir: String, keep: Int): Seq[Long] = {
     require(keep >= 1, s"keep must be ≥ 1, got $keep")
-    withDatasetLock(spark, dir, "vacuum") { fence =>
-      val (fs, _) = fsOf(spark, dir)
+    val (fs, _) = fsOf(spark, dir)
+    FsLock.withLock(fs, lockPath(dir), "vacuum", Busy) { fence =>
       val cur = currentVersion(spark, dir)
       val (disavowed, legit) = listVersions(spark, dir).sorted
         .partition(v => cur.exists(v > _))

@@ -182,9 +182,9 @@ class FsLockSpec extends SparkSpecBase {
     assert(!FsLock.acquireOrReclaim(fs, lock, FsLock.holderStamp("x")),
       "a 10-min advertisement silent for 2 min is not expired")
     FsLock.release(fs, lock)
-    // a stamp with NO lease field (older binary, raw tryAcquire
-    // caller) never promised to heartbeat or fence — a static mtime
-    // proves nothing, so TTL reclaim must refuse no matter how stale
+    // a stamp with NO lease field (an older binary) never promised
+    // to heartbeat or fence — a static mtime proves nothing, so TTL
+    // reclaim must refuse no matter how stale
     // (the rolling-upgrade two-unfenced-writers hazard, r14 ADVICE)
     val legacy = LockTestSupport.plantedStamp("test", deadPid,
       host = "some-other-node", leaseTtlMs = None)
@@ -194,22 +194,13 @@ class FsLockSpec extends SparkSpecBase {
       "a lease-less stamp must never be lease-reclaimed")
     assert(FsLock.holderInfo(fs, lock).contains(legacy))
     FsLock.release(fs, lock)
-    // the advertisement is the PROMISE, so it is opt-in: the protocol
-    // wrappers (which heartbeat) advertise, a default stamp (raw
-    // tryAcquire, no heartbeat) does not — and is therefore never
-    // lease-reclaimable
-    assert(FsLock.advertisedLeaseTtl(
-        FsLock.holderStamp("x", advertiseLease = true))
-      .contains(FsLock.leaseTtlMs))
-    assert(FsLock.advertisedLeaseTtl(FsLock.holderStamp("x")).isEmpty,
-      "a non-heartbeating caller's stamp must not advertise a lease")
     // withHeartbeat keeps a held lock's lease live through a body
     // longer than the TTL; the thread dies with the body. TTL:beat is
     // 4:1 (ttl/4 bound), so the arm tolerates a ~2-beat scheduler
     // stall on a loaded box without a false reclaim
     System.setProperty("graft.lock.lease.ttl.ms", "3000")
     try {
-      val mine = FsLock.holderStamp("beating", advertiseLease = true)
+      val mine = FsLock.holderStamp("beating")
       assert(FsLock.tryAcquire(fs, lock, mine))
       FsLock.withHeartbeat(fs, lock, mine) {
         Thread.sleep(4000) // well past the TTL: only beats keep it live

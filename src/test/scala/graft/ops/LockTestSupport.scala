@@ -23,8 +23,8 @@ object LockTestSupport {
     * default carries the CURRENT lease advertisement (`lease=<ttl>`,
     * the r15 stamp field TTL reclaim is gated on, evaluated at call
     * time so spec-shrunken TTLs are what the stamp advertises); pass
-    * `leaseTtlMs = None` to build the LEGACY shape an older binary or
-    * a raw tryAcquire caller leaves — never lease-reclaimable.
+    * `leaseTtlMs = None` to build the LEGACY shape an older binary
+    * leaves — never lease-reclaimable.
     */
   def plantedStamp(op: String, pid: Long, host: String = localHost,
       leaseTtlMs: Option[Long] = Some(FsLock.leaseTtlMs)): String =

@@ -216,11 +216,11 @@ class VersioningSpec extends SparkSpecBase {
       }
     for (s <- Seq("s3a", "s3", "gs", "abfss", "wasb", "oss")) {
       val e = intercept[IllegalArgumentException] {
-        Versioning.requireAtomicFs(stub(s), s"$s://bucket/ds")
+        FsLock.requireAtomicFs(stub(s), s"$s://bucket/ds", "publish")
       }
       assert(e.getMessage.contains("no atomic rename"), s"scheme $s")
     }
-    Versioning.requireAtomicFs(stub("hdfs"), "hdfs://nn/ds")
-    Versioning.requireAtomicFs(stub("file"), "/tmp/ds")
+    FsLock.requireAtomicFs(stub("hdfs"), "hdfs://nn/ds", "publish")
+    FsLock.requireAtomicFs(stub("file"), "/tmp/ds", "publish")
   }
 }
