@@ -15,9 +15,10 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   * (reference `src/load.py:37-44`).
   *
   * The Spark-native shape: each PARTITION formats its rows into one
-  * COPY-ready byte payload (`copyPayloads`), and a caller-supplied
-  * transport streams payloads connection-per-partition (`load`) —
-  * exactly where `pgjdbc`'s `CopyManager.copyIn(sql, stream)` plugs in.
+  * COPY-ready byte payload (`payloadsWithCounts`), and a
+  * caller-supplied transport streams payloads connection-per-partition
+  * (`load`) — exactly where `pgjdbc`'s `CopyManager.copyIn(sql,
+  * stream)` plugs in.
   * No database or pg driver exists in this environment, so the
   * transport is caller-supplied; the wire FORMAT — the verifiable
   * part — is implemented and spec-checked byte-for-byte.
@@ -64,11 +65,13 @@ object CopySink {
     .appendFraction(ChronoField.NANO_OF_SECOND, 1, 9, true)
     .toFormatter
 
-  /** One (payload, rowCount) pair per non-empty partition — the single
-    * encode path both public entry points build on; the count is taken
-    * at encode time (a newline count over the bytes would miscount
-    * quoted embedded newlines). Timestamps are rendered in the session
-    * time zone, as [[Pipeline.writeCsvForCopy]] renders them.
+  /** One (payload, rowCount) pair per non-empty partition, in the unit
+    * `CopyManager.copyIn` consumes as a stream — the single encode path
+    * [[load]] (and through it [[loadAtomic]]) builds on. The count is
+    * taken at encode time (a newline count over the bytes would
+    * miscount quoted embedded newlines). Timestamps are rendered in
+    * the session time zone, as [[Pipeline.writeCsvForCopy]] renders
+    * them.
     */
   def payloadsWithCounts(df: DataFrame): Dataset[(Array[Byte], Long)] = {
     val zoneId = df.sparkSession.sessionState.conf.sessionLocalTimeZone
@@ -83,12 +86,6 @@ object CopySink {
       }
     }(Encoders.tuple(Encoders.BINARY, Encoders.scalaLong))
   }
-
-  /** Distributed formatting: one COPY-ready byte payload per partition
-    * (the unit `CopyManager.copyIn` consumes as a stream).
-    */
-  def copyPayloads(df: DataFrame): Dataset[Array[Byte]] =
-    payloadsWithCounts(df).map(_._1)(Encoders.BINARY)
 
   /** The COPY statement the payloads pair with — column list from the
     * DataFrame, like the reference enumerates chunk columns

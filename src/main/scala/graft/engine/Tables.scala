@@ -12,10 +12,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * grid that scales with executors.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Declared fixture schemas (TESTDATA.md; types exactly as Spark 4
     * inference yields on the driver-generated files — timestamps are
     * TIMESTAMP_NTZ because the writer stamps isAdjustedToUTC=false).

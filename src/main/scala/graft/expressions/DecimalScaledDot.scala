@@ -58,20 +58,4 @@ object DecimalScaledDotImpl {
     }
     sum.toDouble / 1e12
   }
-
-  /** Same arithmetic over plain JVM arrays — for stateful streaming
-    * operators whose state holds vectors outside Tungsten rows
-    * (graft.streaming.EmbeddingStreams). Bit-identical to the
-    * expression path by construction (shared scale6 + long products).
-    */
-  def compute(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var sum = 0L
-    var i = 0
-    while (i < n) {
-      sum += scale6(a(i)) * scale6(b(i))
-      i += 1
-    }
-    sum.toDouble / 1e12
-  }
 }

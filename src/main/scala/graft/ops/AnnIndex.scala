@@ -21,9 +21,9 @@ import graft.functions.cosineExact
   *     codes ride along for the quantized-shortlist path. `gen` is
   *     the APPEND generation: gen=0 is the base build, each
   *     [[appendToIvfIndex]] call owns one gen=G directory it can
-  *     overwrite idempotently (the
-  *     [[graft.streaming.BatchSinks.idempotentParquet]] discipline) —
-  *     a replayed append rewrites itself instead of duplicating.
+  *     overwrite idempotently (the batch-owned directories of
+  *     [[graft.streaming.BatchSinks.tokenStreamSink]]) — a replayed
+  *     append rewrites itself instead of duplicating.
   *   - `_meta/gen=G/…` — one (n_vectors) row per generation,
   *     underscore-hidden from the postings read; O(generations) rows
   *     total, the input to [[appendedFraction]]'s retrain-drift

@@ -341,9 +341,7 @@ object Dedup {
     * intersection counts; the complete matrix (zeros included) comes
     * from the tiny sizes⨯sizes pair frame left-joined to the counts.
     * The shingle self-join shuffles the distinct shingle set — exact
-    * is the oracle-checkable arm; at 100 TB use
-    * [[sourceOverlapMinhash]] (mergeable signatures, corpus scanned
-    * once, nothing source-crossed but the numHashes-long vectors).
+    * is the oracle-checkable arm.
     */
   def sourceOverlapExact(docs: DataFrame, sourceCol: String,
       textCol: String, n: Int): DataFrame = {
@@ -381,48 +379,6 @@ object Dedup {
           col("n_inter").cast("double") / col("n_union").cast("double"))
           .otherwise(lit(0.0)).as("jaccard"))
   }
-
-  /** Source-overlap matrix, ESTIMATED — the 100 TB arm of
-    * [[sourceOverlapExact]]: a per-SOURCE MinHash signature is the
-    * element-wise min of its documents' signatures (min is mergeable,
-    * so this is one map-side-combining aggregate over a single corpus
-    * scan — no distinct-shingle shuffle, no shingle self-join), and
-    * the pairwise estimate is the fraction of equal components.
-    * Standard error ≈ 1/√numHashes. Engine-specific (xxhash64) — the
-    * exact arm is the oracle; this one is spec-verified against it.
-    */
-  def sourceOverlapMinhash(docs: DataFrame, sourceCol: String,
-      textCol: String, n: Int, numHashes: Int): DataFrame = {
-    val sig = fanned(docs)
-      .select(col(sourceCol).as("source"),
-        graft.functions.minhashNative(col(textCol), n, numHashes).as("sig"))
-      .where(col("sig").isNotNull)
-    val srcSig = sig
-      .select(col("source"), posexplode(col("sig")).as(Seq("i", "v")))
-      .groupBy("source", "i").agg(min(col("v")).as("v"))
-      .groupBy("source")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("v")))),
-        s => s("v")).as("sig"))
-    srcSig.as("a")
-      .join(srcSig.as("b"), col("a.source") < col("b.source"))
-      .select(col("a.source").as("src_a"), col("b.source").as("src_b"),
-        (size(filter(zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y),
-          m => m)).cast("double") / lit(numHashes.toDouble))
-          .as("jaccard_est"))
-  }
-
-  /** MinHash signature from an already-materialized shingle-array
-    * COLUMN (not an inline expression): the signature references the
-    * shingle array `numHashes` times, and lambda-referenced
-    * subexpressions re-evaluate per reference — passing a plain
-    * attribute makes each reference a cheap row read. Empty shingle
-    * set → null signature.
-    */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Column =
-    when(size(shinglesCol) === 0, lit(null).cast("array<bigint>"))
-      .otherwise(transform(
-        sequence(lit(0), lit(numHashes - 1)),
-        i => array_min(transform(shinglesCol, s => xxhash64(i, s)))))
 
   /** (doc, band, bucket) rows: the banded-LSH index side. One row per
     * document per band; `bucket` is the xxhash64 of that band's
@@ -680,14 +636,10 @@ object Dedup {
         coalesce(col("longest_removed_span"), lit(0L)).as("longest_removed_span"))
   }
 
-  /** 64-bit SimHash over whitespace tokens: bit b of the fingerprint is
-    * the sign of Σ_tokens (±1 depending on bit b of xxhash64(token)).
-    * Computed as 64 codegen'd array aggregations — no UDF.
-    */
-  /** SimHash fold over an already-materialized token-hash array COLUMN
-    * (see [[minhashSignature]] for why: the 64 bit-sum lambdas each
-    * reference the array, and only an attribute read is cheap enough
-    * to reference 64 times).
+  /** SimHash fold over an already-materialized token-hash array COLUMN:
+    * the 64 bit-sum lambdas each reference the array, and a
+    * lambda-referenced subexpression re-evaluates per reference, so
+    * only an attribute read is cheap enough to reference 64 times.
     */
   def simhash64FromHashes(hashesCol: Column): Column = {
     // shiftright/shiftleft only take Int amounts in the Scala API, so
@@ -1069,7 +1021,7 @@ object Dedup {
     okPairs.unionByName(offPairs)
   }
 
-  /** The intermediate frames of [[semanticDedup]], for contract
+  /** The intermediate frames of [[semanticDedupParts]], for contract
     * verification (q73 counts witnesses and conservation from the
     * SAME pair list the dedup decision used — the operator itself is
     * what the oracle exercises, not a reimplementation).
@@ -1077,13 +1029,28 @@ object Dedup {
   case class SemanticDedupParts(
       pairs: DataFrame, dropped: DataFrame, kept: DataFrame)
 
-  /** [[semanticDedup]] with its internals exposed. The pair list is
-    * eagerly checkpointed: connected components and any caller-side
-    * contract arms would otherwise each re-run the within-cell
-    * cosine join. `subBlockApprox = true` by default: an over-budget
-    * Voronoi cell refines into sub-cells instead of aborting —
-    * SemDeDup is approximate by construction, and at corpus scale a
-    * skewed cell past the pair budget is routine, not exceptional.
+  /** Semantic deduplication, SemDeDup-style (Abbas et al. 2023,
+    * arXiv:2303.09540): cluster the embedding space with the
+    * deterministic k-means quantizer, find within-cluster pairs with
+    * cosine ≥ `threshold`, connect them into duplicate groups, keep
+    * the min-id survivor per group. `kept` holds the KEPT rows of
+    * `emb` (survivors + unpaired singletons) unchanged; `pairs` and
+    * `dropped` are the internals the decision used.
+    *
+    * 100 TB shape: the pair search is CELL-BLOCKED (never corpus
+    * all-pairs), clustering state is nCells·dim driver-side doubles,
+    * and the group labeling is the same hash-join connected components
+    * as the text-dedup path. Approximate by construction: a near-dup
+    * pair straddling a Voronoi boundary is missed (SemDeDup's own
+    * trade — ε-dedup within clusters). On real embedding models the
+    * threshold sits near 0.95+; calibrate per corpus.
+    *
+    * The pair list is eagerly checkpointed: connected components and
+    * any caller-side contract arms would otherwise each re-run the
+    * within-cell cosine join. `subBlockApprox = true` by default: an
+    * over-budget Voronoi cell refines into sub-cells instead of
+    * aborting — at corpus scale a skewed cell past the pair budget is
+    * routine, not exceptional.
     */
   def semanticDedupParts(
       emb: DataFrame, idCol: String, vecCol: String,
@@ -1105,29 +1072,4 @@ object Dedup {
       .select(col("id").as(idCol))
     SemanticDedupParts(pairs, dropped, emb.join(dropped, Seq(idCol), "left_anti"))
   }
-
-  /** Semantic deduplication, SemDeDup-style (Abbas et al. 2023,
-    * arXiv:2303.09540): cluster the embedding space with the
-    * deterministic k-means quantizer, find within-cluster pairs with
-    * cosine ≥ `threshold`, connect them into duplicate groups, keep
-    * the min-id survivor per group. Returns the KEPT rows of `emb`
-    * (survivors + unpaired singletons) unchanged.
-    *
-    * 100 TB shape: the pair search is CELL-BLOCKED (never corpus
-    * all-pairs), clustering state is nCells·dim driver-side doubles,
-    * and the group labeling is the same hash-join connected components
-    * as the text-dedup path. An over-budget cell refines into
-    * sub-cells (subBlockApprox) rather than aborting. Approximate by
-    * construction: a near-dup pair straddling a Voronoi boundary is
-    * missed (SemDeDup's own trade — ε-dedup within clusters). On real
-    * embedding models the threshold sits near 0.95+; calibrate per
-    * corpus.
-    */
-  def semanticDedup(
-      emb: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nCells: Int, iters: Int = 3,
-      maxPairsPerBlock: Long = 100000000L,
-      subBlockApprox: Boolean = true): DataFrame =
-    semanticDedupParts(emb, idCol, vecCol, threshold, nCells, iters,
-      maxPairsPerBlock, subBlockApprox).kept
 }

@@ -487,7 +487,7 @@ object Packing {
     * sig = ((rowkey + 1) · (len + 1)) mod 1,000,003 with
     * rowkey = ((w·8191 + doc)·8191 + start) step-wise mod, summed per
     * shard — EXACT integer arithmetic any engine reproduces (the
-    * [[graft.ops.Selection.tokenBucket]] portability discipline;
+    * [[graft.expressions.TokenBuckets]] portability discipline;
     * xxhash64 has no portable twin). Order-independent by construction
     * (a sum), which is what a distributed recompute needs. The length
     * MULTIPLIES the row identity rather than adding to it: a linear

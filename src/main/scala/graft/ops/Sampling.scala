@@ -38,11 +38,7 @@ object Sampling {
   def tokenBudgetSample(df: DataFrame, strataCol: Column, orderCol: Column,
       tokensCol: Column, budgetPerStratum: Long): DataFrame = {
     require(budgetPerStratum > 0)
-    val w = Window.partitionBy(strataCol).orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn("__before", coalesce(sum(tokensCol).over(w), lit(0L)))
-      .where(col("__before") < budgetPerStratum)
-      .drop("__before")
+    tokenBudgetSample(df, strataCol, orderCol, tokensCol, Map.empty, budgetPerStratum)
   }
 
   /** Per-stratum budget variant: each stratum value gets its own token

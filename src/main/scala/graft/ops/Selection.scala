@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Data-selection operators for training-corpus construction — the
@@ -32,26 +32,6 @@ import org.apache.spark.sql.functions._
   * so they are bit-portable by spec, not by probe).
   */
 object Selection {
-
-  /** Portable hashed-feature bucket of a token: fold
-    * `(acc · 31 + codepoint) mod nBuckets` over the token's chars —
-    * exact integer arithmetic reproducible in ANSI SQL (DuckDB:
-    * `list_reduce` over `unicode(c)`), unlike xxhash64. The classic
-    * hashing-trick collision trade applies and is part of the
-    * operator's definition, not an approximation of it.
-    *
-    * Spark's `split(str, "")` (Java `split` with limit −1) keeps a
-    * trailing empty string that DuckDB's char split does not produce;
-    * the filter drops it BEFORE hashing (an empty char would fold as
-    * codepoint 0 and shift every bucket).
-    */
-  def tokenBucket(tok: Column, nBuckets: Int): Column = {
-    require(nBuckets > 0 && nBuckets <= (1 << 20), s"nBuckets out of range: $nBuckets")
-    aggregate(
-      filter(split(tok, ""), c => c =!= ""),
-      lit(0L),
-      (acc, c) => pmod(acc * lit(31L) + ascii(c).cast("long"), lit(nBuckets.toLong)))
-  }
 
   /** DSIR-style importance score per corpus document, plus the
     * selected top-`k` slice.
@@ -89,8 +69,7 @@ object Selection {
     import spark.implicits._
 
     // one compiled pass per doc for tokenize + bucket hash (the
-    // TokenBuckets kernel, unigram arm); [[tokenBucket]] remains the
-    // spec-pinned declarative fold reference
+    // TokenBuckets kernel, unigram arm)
     def bucketBag(df: DataFrame): DataFrame =
       graft.engine.Tables.fanOut(df.sparkSession, df)
         .select(col(idCol).cast("long").as("doc"),

@@ -431,7 +431,7 @@ object Similarity {
     * `j·2²⁰ + i + 1`, all in non-negative sub-2³¹ longs. Deliberately
     * NOT xxhash64 — every operation (multiply, mod, xor, and
     * shift-as-integer-division) replays exactly in ANSI SQL, the
-    * [[graft.ops.Selection.tokenBucket]] portability discipline.
+    * [[graft.expressions.TokenBuckets]] portability discipline.
     *
     * The mixing matters: LCG steps alone on a LINEAR seed leave sign
     * rows correlated — the first cut (two LCG steps) measured a

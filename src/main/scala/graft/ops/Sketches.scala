@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.CountMinSketch
 
 /** Mergeable-sketch operators — the cardinality/frequency shapes that
   * replace exact distinct/groupBy counts at 100 TB, where the exact
@@ -31,20 +30,15 @@ object Sketches {
     sketches.groupBy(groupCols: _*)
       .agg(hll_sketch_estimate(hll_union_agg(col("hll"))).as(estimateName))
 
-  /** Count-min frequency sketch over a column — distributed build
-    * (treeAggregate under `stat.countMinSketch`), fixed-size result on
-    * the driver. Deterministic for a fixed seed.
-    */
-  def countMin(df: DataFrame, c: Column,
-      eps: Double, confidence: Double, seed: Int): CountMinSketch =
-    df.stat.countMinSketch(c, eps, confidence, seed)
-
   /** Estimated frequencies for each key in `keys` (small, driver-side
-    * list — the heavy-hitter candidates), as a DataFrame.
+    * list — the heavy-hitter candidates), as a DataFrame, from a
+    * count-min sketch over `c`: a distributed build (treeAggregate
+    * under `stat.countMinSketch`), fixed-size result on the driver.
+    * Deterministic for a fixed seed.
     */
   def countMinEstimates(df: DataFrame, c: Column, keys: Seq[String],
       eps: Double = 1e-3, confidence: Double = 0.99, seed: Int = 42): DataFrame = {
-    val cms = countMin(df, c, eps, confidence, seed)
+    val cms = df.stat.countMinSketch(c, eps, confidence, seed)
     val spark = df.sparkSession
     import spark.implicits._
     keys.map(k => (k, cms.estimateCount(k))).toDF("key", "est")

@@ -237,7 +237,7 @@ object TextOps {
 
   /** Portable polynomial fold hash of a string over UNICODE
     * CODEPOINTS: `(acc·31 + codepoint) mod 1,000,000,007` — the
-    * [[graft.ops.Selection.tokenBucket]] portability discipline at
+    * [[graft.expressions.TokenBuckets]] portability discipline at
     * fingerprint modulus (large prime, not a bucket count). Replays
     * exactly in ANSI SQL via
     * `list_reduce(list_prepend(0, codepoints), ...)` for EVERY valid
@@ -345,20 +345,11 @@ object TextOps {
   /** Rolling-hash document fingerprint (winnowing-style): min and max
     * of 64-bit hashes over character k-grams, plus the full-text hash.
     * Near-identical documents collide on min/max k-gram hashes even
-    * when whole-text hashes differ. Rows-only vs the oracle (hash
-    * functions are engine-specific).
-    */
-  def fingerprint(c: Column, k: Int = 8): Column = {
-    val grams = charShingles(c, k)
-    struct(
-      xxhash64(c).as("text_hash"),
-      array_min(transform(grams, g => xxhash64(g))).as("min_gram_hash"),
-      array_max(transform(grams, g => xxhash64(g))).as("max_gram_hash"))
-  }
-
-  /** DataFrame-level fingerprinting via the native one-pass gram-hash
-    * kernel (graft.expressions.GramHashRange) — bit-identical to the
-    * Column form above, without 500 substring allocations per row.
+    * when whole-text hashes differ. One pass per row through the
+    * native gram-hash kernel (graft.expressions.GramHashRange), which
+    * is bit-identical to min/max of xxhash64 over [[charShingles]]
+    * without 500 substring allocations per row. Rows-only vs the
+    * oracle (hash functions are engine-specific).
     */
   def fingerprints(df: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, k: Int = 8): org.apache.spark.sql.DataFrame =

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import graft.functions.decimalDot
 import graft.ops.{Bpe, Dedup, LanguageModel, Multimodal, PerplexityBuckets, Retrieval, Sampling, Selection, Similarity, TextOps}
 import graft.streaming.EventStreams
 

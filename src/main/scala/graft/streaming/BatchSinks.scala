@@ -11,19 +11,12 @@ import org.apache.spark.sql.functions._
   */
 object BatchSinks extends org.apache.spark.internal.Logging {
 
-  /** Idempotent parquet sink: batch `i` owns directory `batch_id=i`
-    * (overwrite mode). A replayed batch rewrites its own directory —
-    * at-least-once delivery becomes exactly-once output. The layout is
-    * a standard hive-style partition column, so `spark.read.parquet(
-    * outDir)` sees `batch_id` as a queryable column.
-    */
-  def idempotentParquet(outDir: String)(df: DataFrame, batchId: Long): Unit =
-    df.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-
   /** Streaming GPT-style loader layout: each micro-batch of curated
     * docs EXTENDS the persisted token-stream layout exactly-once —
     * [[graft.ops.Packing.tokenStreamOffsets]]'s incremental `base`
-    * hook composed with the [[idempotentParquet]] ownership scheme.
+    * hook composed with batch-owned output: batch `i` owns directory
+    * `batch_id=i` (overwrite mode), a hive-style partition column that
+    * `spark.read.parquet(outDir)` sees as a queryable column.
     *
     * `base` for batch i is the token mass of all PRIOR batches
     * (batch_id < i), recomputed from the COMMITTED output on every

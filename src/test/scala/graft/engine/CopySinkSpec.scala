@@ -34,7 +34,7 @@ class CopySinkSpec extends SparkSpecBase {
       val stmt = CopySink.copyStatement(df, "iowa_liquor_sales")
       assert(stmt ==
         "COPY iowa_liquor_sales (inv, s, n, t) FROM STDIN WITH (FORMAT CSV, NULL '\\N')")
-      val text = CopySink.copyPayloads(df).collect()
+      val text = CopySink.payloadsWithCounts(df).collect().map(_._1)
         .map(new String(_, StandardCharsets.UTF_8)).mkString
       val lines = text.split("\n").filter(_.nonEmpty).sorted
       assert(lines.toSeq == Seq("INV1,ok,12,2024-01-02 03:04:05.5", "INV2,\\N,\\N,\\N",

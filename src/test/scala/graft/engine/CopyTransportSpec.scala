@@ -95,7 +95,7 @@ class CopyTransportSpec extends SparkSpecBase {
     assert(copies.forall(_._2 == CopySink.copyStatement(df,
       "sales__stage_tok1")), "every COPY must target the stage table")
     // payload identity with the plain (non-atomic) load path
-    val plain = CopySink.copyPayloads(df).collect()
+    val plain = CopySink.payloadsWithCounts(df).collect().map(_._1)
       .map(new String(_, StandardCharsets.UTF_8)).sorted.toSeq
     val atomic = copies.map(e => new String(e._3, StandardCharsets.UTF_8))
       .sorted.toSeq

@@ -105,7 +105,7 @@ class PipelineSpec extends SparkSpecBase {
     // reader: CopySink's payloads parse back to the original rows
     val replay = tmp() + "/replay"
     Files.createDirectories(java.nio.file.Paths.get(replay))
-    CopySink.copyPayloads(df).collect().zipWithIndex.foreach { case (bytes, i) =>
+    CopySink.payloadsWithCounts(df).collect().map(_._1).zipWithIndex.foreach { case (bytes, i) =>
       Files.write(java.nio.file.Paths.get(replay, s"p$i.csv"), bytes)
     }
     val back = Pipeline.readCsvForCopy(spark, replay, schema).collect()

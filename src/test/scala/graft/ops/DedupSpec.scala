@@ -42,8 +42,8 @@ class DedupSpec extends SparkSpecBase {
       (axis * 4 + i.toLong, v)
     }
     val emb = rows.toDF("vec_id", "embedding")
-    val kept = Dedup.semanticDedup(emb, "vec_id", "embedding",
-        threshold = 0.99, nCells = 3, iters = 4)
+    val kept = Dedup.semanticDedupParts(emb, "vec_id", "embedding",
+        threshold = 0.99, nCells = 3, iters = 4).kept
       .select("vec_id").as[Long].collect().sorted.toSeq
     // each group collapses to its min-id survivor
     assert(kept == Seq(0L, 4L, 8L), s"kept $kept")
@@ -51,8 +51,8 @@ class DedupSpec extends SparkSpecBase {
     val ortho = (0 until 4).map { i =>
       val v = Array.fill(8)(0.0f); v(i) = 1.0f; (i.toLong, v)
     }.toDF("vec_id", "embedding")
-    val keptAll = Dedup.semanticDedup(ortho, "vec_id", "embedding",
-        threshold = 0.99, nCells = 2, iters = 2)
+    val keptAll = Dedup.semanticDedupParts(ortho, "vec_id", "embedding",
+        threshold = 0.99, nCells = 2, iters = 2).kept
       .select("vec_id").as[Long].collect().sorted.toSeq
     assert(keptAll == Seq(0L, 1L, 2L, 3L))
   }
@@ -76,8 +76,8 @@ class DedupSpec extends SparkSpecBase {
 
   test("semanticDedup on an empty corpus returns empty, not an exception") {
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    val kept = Dedup.semanticDedup(empty, "vec_id", "embedding",
-      threshold = 0.9, nCells = 4)
+    val kept = Dedup.semanticDedupParts(empty, "vec_id", "embedding",
+      threshold = 0.9, nCells = 4).kept
     assert(kept.count() == 0)
   }
 
@@ -287,26 +287,6 @@ class DedupSpec extends SparkSpecBase {
     assert(got(("sA", "sC")) == ((1L, 3L, 1.0 / 3.0)))
     assert(got(("sA", "sD")) == ((0L, 4L, 0.0))) // zero pair still present
     assert(got.size == 6) // complete 4-choose-2 matrix
-  }
-
-  test("sourceOverlapMinhash tracks the exact matrix") {
-    val docs = Seq(
-      (1L, "sA", "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "sB", "alpha beta gamma delta epsilon zeta eta theta"),
-      (3L, "sC", "iota kappa lambda mu nu xi omicron pi")
-    ).toDF("doc_id", "source", "text")
-    val est = Dedup.sourceOverlapMinhash(docs, "source", "text", n = 3,
-        numHashes = 128)
-      .collect().map(r => ((r.getString(0), r.getString(1)), r.getDouble(2))).toMap
-    assert(est(("sA", "sB")) == 1.0)        // identical sets: every component equal
-    assert(est(("sA", "sC")) < 0.15)        // disjoint: only hash collisions
-    // per-source signature is the element-wise min over docs: adding a
-    // doc whose shingles are a subset cannot change the signature
-    val withSubset = docs.union(
-      Seq((4L, "sA", "alpha beta gamma")).toDF("doc_id", "source", "text"))
-    val est2 = Dedup.sourceOverlapMinhash(withSubset, "source", "text", 3, 128)
-      .collect().map(r => ((r.getString(0), r.getString(1)), r.getDouble(2))).toMap
-    assert(est2(("sA", "sB")) == 1.0)
   }
 
   test("stripRepeatedSpans removes covered tokens, keeps everything else") {

@@ -10,19 +10,25 @@ class SelectionSpec extends SparkSpecBase {
   private def refBucket(tok: String, b: Int): Long =
     tok.foldLeft(0L)((acc, c) => (acc * 31 + c.toInt) % b)
 
+  // the kernel dsirScores buckets with: one bucket per whitespace token
+  private def tokenBuckets(toks: Seq[String], n: Int) =
+    toks.toDF("t")
+      .select(col("t"), element_at(
+        graft.functions.tokenBucketsNative(col("t"), n, useBigrams = false), 1).as("b"))
+      .as[(String, Long)].collect()
+
   test("tokenBucket matches the reference polynomial fold") {
     val toks = Seq("hello", "a", "Z9", "don't", "x-ray!", "émigré", "0", "~~~")
-    val got = toks.toDF("t")
-      .select(col("t"), Selection.tokenBucket(col("t"), 1024).as("b"))
-      .as[(String, Long)].collect().toMap
+    val got = tokenBuckets(toks, 1024).toMap
     toks.foreach { t => assert(got(t) == refBucket(t, 1024), s"token $t") }
   }
 
   test("tokenBucket stays inside [0, nBuckets) and rejects bad sizes") {
-    val got = Seq("alpha", "beta", "gamma").toDF("t")
-      .select(Selection.tokenBucket(col("t"), 7).as("b")).as[Long].collect()
+    val got = tokenBuckets(Seq("alpha", "beta", "gamma"), 7).map(_._2)
     assert(got.forall(b => b >= 0 && b < 7))
-    intercept[IllegalArgumentException](Selection.tokenBucket(col("t"), 0))
+    val e = intercept[Exception](tokenBuckets(Seq("alpha"), 0))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[IllegalArgumentException]), e.toString)
   }
 
   test("dsirScores ranks target-like documents above off-target ones") {

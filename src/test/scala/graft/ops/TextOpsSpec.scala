@@ -52,9 +52,9 @@ class TextOpsSpec extends SparkSpecBase {
   test("fingerprint: near-identical docs share min/max gram hashes") {
     val a = "abcdefghijklmnopqrstuvwxyz0123456789abcdefghijklmnopqrstuvwxyz"
     val b = a.dropRight(1) + "!" // tail perturbation
-    val fps = Seq(a, b).toDF("t")
-      .select(TextOps.fingerprint(col("t"), 8).as("fp"))
-      .select("fp.text_hash", "fp.min_gram_hash").as[(Long, Long)].collect()
+    val fps = TextOps.fingerprints(Seq((0L, a), (1L, b)).toDF("id", "t"), "id", "t", 8)
+      .orderBy("id")
+      .select("text_hash", "min_gram_hash").as[(Long, Long)].collect()
     assert(fps(0)._1 != fps(1)._1) // whole-text hashes differ
     assert(fps(0)._2 == fps(1)._2) // rolling min-gram hash collides
   }

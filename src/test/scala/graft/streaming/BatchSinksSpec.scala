@@ -8,28 +8,6 @@ import java.nio.file.Files
 class BatchSinksSpec extends SparkSpecBase {
   import spark.implicits._
 
-  test("foreachBatch idempotent sink: replaying a batch does not duplicate") {
-    implicit val sqlCtx = spark.sqlContext
-    val out = Files.createTempDirectory("graft_sink").toString
-    val mem = MemoryStream[Long]
-    val q = mem.toDF().writeStream
-      .foreachBatch(BatchSinks.idempotentParquet(out) _)
-      .start()
-    try {
-      mem.addData(1L, 2L, 3L)
-      q.processAllAvailable()
-      mem.addData(4L, 5L)
-      q.processAllAvailable()
-      assert(spark.read.parquet(out).count() == 5)
-      // simulate a replay of batch 1 (failure after write, before commit)
-      val replay = Seq(4L, 5L).toDF("value")
-      BatchSinks.idempotentParquet(out)(replay, 1L)
-      assert(spark.read.parquet(out).count() == 5) // unchanged, no dups
-      // batch_id is a queryable partition column
-      assert(spark.read.parquet(out).where("batch_id = 0").count() == 3)
-    } finally q.stop()
-  }
-
   test("tokenStreamSink: streamed layout across 3 batches + a replay ≡ one-pass layout") {
     implicit val sqlCtx = spark.sqlContext
     val out = Files.createTempDirectory("graft_tssink").toString

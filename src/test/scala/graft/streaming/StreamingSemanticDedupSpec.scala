@@ -1,22 +1,18 @@
 package graft.streaming
 
 import graft.SparkSpecBase
-import graft.ops.{Dedup, Similarity}
+import graft.ops.Similarity
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
-/** Parity of the ONLINE semantic dedup (EmbeddingStreams) with the
-  * batch operator (q73's Dedup.semanticDedup) on a replayed stream:
-  * same centroids (deterministic training), same scaled-long cosine,
-  * same tau — the kept sets must agree where the survivor semantics
-  * coincide (within-cell duplicate groups are cliques, replay in id
-  * order; see the operator doc for where they genuinely differ).
+/** The embedding pipeline's stateless stages on a stream: int8
+  * quantization is plain Column expressions, so a `readStream` source
+  * gets the batch operator's codes unchanged.
   */
 class StreamingSemanticDedupSpec extends SparkSpecBase {
   import spark.implicits._
 
-  // Three tight duplicate cliques around distinct axes (within-clique
-  // pairwise cosine ≈ 1 ≥ tau), two far singletons, one zero vector.
+  // Three tight duplicate cliques around distinct axes, two far
+  // singletons, one zero vector.
   private val vectors: Seq[(Long, Array[Float])] = {
     val cliques = for {
       axis <- 0 until 3
@@ -26,54 +22,9 @@ class StreamingSemanticDedupSpec extends SparkSpecBase {
       v(axis) = 1.0f
       (axis * 4 + i.toLong, v)
     }
-    val s1 = Array.fill(8)(0.5f) // far from every axis clique at tau=0.9
+    val s1 = Array.fill(8)(0.5f) // far from every axis clique
     val s2 = Array.tabulate(8)(d => if (d >= 4) 0.7f else -0.7f)
     cliques ++ Seq((100L, s1), (101L, s2), (102L, Array.fill(8)(0.0f)))
-  }
-
-  private val tau = 0.9
-
-  test("replayed stream reproduces the batch semantic-dedup kept set") {
-    val df = vectors.toDF("vec_id", "embedding")
-    val batchKept = Dedup.semanticDedup(df, "vec_id", "embedding",
-        threshold = tau, nCells = 3, iters = 3)
-      .select("vec_id").as[Long].collect().toSet
-    // identical training args ⇒ identical (deterministic) centroids
-    val cents = Similarity.trainIvfCentroids(df, "vec_id", "embedding",
-      k = 3, iters = 3)
-
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Seq[Float])]
-    val q = EmbeddingStreams.semanticDedupStream(
-        mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", cents, tau)
-      .writeStream.format("memory").queryName("semdedup_stream")
-      .outputMode("append").start()
-    try {
-      // replay in id order across TWO micro-batches: state must carry
-      // the first batch's reps into the second
-      val (first, second) = vectors.sortBy(_._1).map {
-        case (id, v) => (id, v.toSeq) }.splitAt(7)
-      mem.addData(first: _*)
-      q.processAllAvailable()
-      mem.addData(second: _*)
-      q.processAllAvailable()
-
-      val decisions = spark.table("semdedup_stream")
-        .select("id", "kept", "witness")
-        .as[(Long, Boolean, Option[Long])].collect()
-      assert(decisions.length == vectors.length, "one decision per vector")
-      val streamKept = decisions.filter(_._2).map(_._1).toSet
-      assert(streamKept == batchKept,
-        s"stream kept $streamKept != batch kept $batchKept")
-      // every drop names a kept witness
-      decisions.filterNot(_._2).foreach { case (id, _, w) =>
-        assert(w.isDefined, s"dropped $id has no witness")
-        assert(streamKept.contains(w.get), s"witness ${w.get} of $id was not kept")
-      }
-      // the zero vector is kept and never a witness
-      assert(streamKept.contains(102L))
-      assert(!decisions.exists(_._3.contains(102L)))
-    } finally q.stop()
   }
 
   test("int8 quantization is stateless Column exprs: runs unchanged on a stream") {
@@ -95,30 +46,6 @@ class StreamingSemanticDedupSpec extends SparkSpecBase {
         .orderBy("vec_id").collect().map(_.toSeq).toSeq
       assert(streamed == batch)
       assert(streamed.length == vectors.length)
-    } finally q.stop()
-  }
-
-  test("cross-batch state: a duplicate arriving in a later batch is dropped") {
-    val cents = Similarity.trainIvfCentroids(
-      vectors.toDF("vec_id", "embedding"), "vec_id", "embedding", k = 3, iters = 3)
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Seq[Float])]
-    val q = EmbeddingStreams.semanticDedupStream(
-        mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", cents, tau)
-      .writeStream.format("memory").queryName("semdedup_cross")
-      .outputMode("append").start()
-    try {
-      val base = vectors.head // (0L, clique-0 member)
-      mem.addData((base._1, base._2.toSeq))
-      q.processAllAvailable()
-      // near-identical twin arrives one batch later
-      mem.addData((50L, base._2.map(x => x * 1.0001f).toSeq))
-      q.processAllAvailable()
-      val rows = spark.table("semdedup_cross")
-        .select("id", "kept", "witness")
-        .as[(Long, Boolean, Option[Long])].collect().sortBy(_._1)
-      assert(rows(0) == ((0L, true, None)))
-      assert(rows(1) == ((50L, false, Some(0L))))
     } finally q.stop()
   }
 }
