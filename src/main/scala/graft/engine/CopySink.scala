@@ -5,9 +5,18 @@ import java.sql.Timestamp
 import java.time.{LocalDateTime, ZoneId}
 import java.time.format.DateTimeFormatterBuilder
 import java.time.temporal.ChronoField
+import java.util.Arrays
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import scala.annotation.switch
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StringType, TimestampType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Postgres COPY bulk-sink structure (SURVEY.md §2.1 S7): the
   * reference streams each chunk as CSV bytes with `\N` nulls into
@@ -15,10 +24,12 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   * (reference `src/load.py:37-44`).
   *
   * The Spark-native shape: each PARTITION formats its rows into one
-  * COPY-ready byte payload (`payloadsWithCounts`), and a
+  * COPY-ready byte payload (`payloadsWithCounts`), straight from
+  * Spark's binary rows with no `Row` per record, and a
   * caller-supplied transport streams payloads connection-per-partition
   * (`load`) — exactly where `pgjdbc`'s `CopyManager.copyIn(sql,
-  * stream)` plugs in.
+  * stream)` plugs in. [[encodeRow]] is the row-at-a-time form of the
+  * same bytes.
   * No database or pg driver exists in this environment, so the
   * transport is caller-supplied; the wire FORMAT — the verifiable
   * part — is implemented and spec-checked byte-for-byte.
@@ -72,19 +83,158 @@ object CopySink {
     * miscount quoted embedded newlines). Timestamps are rendered in
     * the session time zone, as [[Pipeline.writeCsvForCopy]] renders
     * them.
+    *
+    * The payload is encoded from Spark's binary rows (the
+    * `queryExecution.toRdd` that `Dataset.rdd` builds on, without its
+    * per-row conversion to `Row`) into one growable UTF-8 buffer per
+    * partition. Its bytes are [[encodeRow]]'s over the same rows:
+    *  - a string's UTF-8 bytes are copied as stored; one scan over them
+    *    for `,` `"` `\n` `\r` decides the quoting, exact because an
+    *    ASCII byte never occurs inside a multi-byte sequence (a string
+    *    that is not valid UTF-8 takes the `String` path, which
+    *    replaces its malformed sequences as `encodeRow` does);
+    *  - ints and longs are written as their digits, decimals by
+    *    `Decimal.toJavaBigDecimal.toString` (the external value's
+    *    `toString`), and timestamps from their micros in the session
+    *    zone by [[encodeRow]]'s formatter;
+    *  - every other type is converted to its external value and written
+    *    by [[encodeField]].
     */
-  def payloadsWithCounts(df: DataFrame): Dataset[(Array[Byte], Long)] = {
-    val zoneId = df.sparkSession.sessionState.conf.sessionLocalTimeZone
-    df.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
+  def payloadsWithCounts(df: DataFrame): RDD[(Array[Byte], Long)] = {
+    val conf = df.sparkSession.sessionState.conf
+    val zoneId = conf.sessionLocalTimeZone
+    val types = df.schema.fields.map(_.dataType)
+    // with the java.time API on, a timestamp's external value is an
+    // Instant, which encodeRow writes by toString: the fallback's case
+    val kinds = types.map {
+      case _: StringType => KString
+      case IntegerType => KInt
+      case LongType => KLong
+      case _: DecimalType => KDecimal
+      case TimestampType if !conf.datetimeJava8ApiEnabled => KTimestamp
+      case _ => KOther
+    }
+    val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
+    df.queryExecution.toRdd.mapPartitions { rows =>
+      if (!rows.hasNext) Iterator.empty
       else {
         val zone = ZoneId.of(zoneId)
-        val sb = new StringBuilder
+        val out = new Utf8Buffer
         var n = 0L
-        rows.foreach { r => sb.append(encodeRow(r, zone)); sb.append('\n'); n += 1 }
-        Iterator.single((sb.toString.getBytes(StandardCharsets.UTF_8), n))
+        while (rows.hasNext) {
+          val r = rows.next()
+          var i = 0
+          while (i < kinds.length) {
+            if (i > 0) out.put(',')
+            if (r.isNullAt(i)) out.putAscii("\\N")
+            else (kinds(i): @switch) match {
+              case KString => out.putField(r.getUTF8String(i))
+              case KInt => out.putLong(r.getInt(i).toLong)
+              case KLong => out.putLong(r.getLong(i))
+              case KDecimal =>
+                val t = types(i).asInstanceOf[DecimalType]
+                out.putAscii(r.getDecimal(i, t.precision, t.scale).toJavaBigDecimal.toString)
+              case KTimestamp => out.putAscii(wallClock.format(
+                LocalDateTime.ofInstant(DateTimeUtils.microsToInstant(r.getLong(i)), zone)))
+              case _ => out.putString(encodeField(toScala(i)(r.get(i, types(i)))))
+            }
+            i += 1
+          }
+          out.put('\n')
+          n += 1
+        }
+        Iterator.single((out.toByteArray, n))
       }
-    }(Encoders.tuple(Encoders.BINARY, Encoders.scalaLong))
+    }
+  }
+
+  // the column kinds payloadsWithCounts writes without a Row
+  private final val KString = 0
+  private final val KInt = 1
+  private final val KLong = 2
+  private final val KDecimal = 3
+  private final val KTimestamp = 4
+  private final val KOther = 5
+
+  /** A growable byte buffer of COPY CSV text. */
+  private final class Utf8Buffer {
+    private var buf = new Array[Byte](1 << 16)
+    private var len = 0
+
+    private def ensure(n: Int): Unit =
+      if (buf.length - len < n)
+        buf = Arrays.copyOf(buf, math.max(buf.length * 2, len + n))
+
+    def put(c: Char): Unit = { ensure(1); buf(len) = c.toByte; len += 1 }
+
+    /** `s` must be ASCII, as numbers and formatted timestamps are. */
+    def putAscii(s: String): Unit = {
+      val n = s.length
+      ensure(n)
+      var i = 0
+      while (i < n) { buf(len + i) = s.charAt(i).toByte; i += 1 }
+      len += n
+    }
+
+    def putString(s: String): Unit = {
+      val b = s.getBytes(StandardCharsets.UTF_8)
+      ensure(b.length)
+      System.arraycopy(b, 0, buf, len, b.length)
+      len += b.length
+    }
+
+    def putLong(v: Long): Unit =
+      if (v == Long.MinValue) putAscii(v.toString)
+      else {
+        var x = math.abs(v)
+        var digits = 1
+        var t = x
+        while (t >= 10) { digits += 1; t /= 10 }
+        val end = len + digits + (if (v < 0) 1 else 0)
+        ensure(end - len)
+        if (v < 0) buf(len) = '-'
+        var p = end
+        while (digits > 0) { p -= 1; buf(p) = ('0' + x % 10).toByte; x /= 10; digits -= 1 }
+        len = end
+      }
+
+    /** [[encodeField]] of a non-null string, from its UTF-8 bytes. */
+    def putField(s: UTF8String): Unit = {
+      val base = s.getBaseObject
+      val off = s.getBaseOffset
+      val n = s.numBytes
+      var quote = n == 0
+      var ascii = true
+      var i = 0
+      while (i < n) {
+        val b = Platform.getByte(base, off + i)
+        if (b == ',' || b == '"' || b == '\n' || b == '\r') quote = true
+        else if (b < 0) ascii = false
+        i += 1
+      }
+      if (!ascii && !s.isValid) putString(encodeField(s.toString))
+      else if (!quote) {
+        ensure(n)
+        Platform.copyMemory(base, off, buf, Platform.BYTE_ARRAY_OFFSET + len, n)
+        len += n
+      } else {
+        ensure(2 * n + 2)
+        buf(len) = '"'
+        len += 1
+        i = 0
+        while (i < n) {
+          val b = Platform.getByte(base, off + i)
+          if (b == '"') { buf(len) = b; len += 1 }
+          buf(len) = b
+          len += 1
+          i += 1
+        }
+        buf(len) = '"'
+        len += 1
+      }
+    }
+
+    def toByteArray: Array[Byte] = Arrays.copyOf(buf, len)
   }
 
   /** The COPY statement the payloads pair with — column list from the
@@ -130,20 +280,23 @@ object CopySink {
   }
 
   /** S7 end-to-end: format + transport. Returns rows loaded — no
-    * extra job.
+    * extra job: the payloads' one job runs inside one SQL execution,
+    * as `Dataset.foreachPartition` runs it.
     */
   def load(df: DataFrame, table: String,
       factory: () => CopyTransport): Long = {
     val stmt = copyStatement(df, table)
     val rows = df.sparkSession.sparkContext.longAccumulator("copy_rows")
-    payloadsWithCounts(df).foreachPartition { (it: Iterator[(Array[Byte], Long)]) =>
-      if (it.nonEmpty) {
-        val t = factory()
-        t.open()
-        try it.foreach { case (p, n) =>
-          t.copyIn(stmt, p)
-          rows.add(n)
-        } finally t.close()
+    SQLExecution.withNewExecutionId(df.queryExecution, Some("foreachPartition")) {
+      payloadsWithCounts(df).foreachPartition { it =>
+        if (it.nonEmpty) {
+          val t = factory()
+          t.open()
+          try it.foreach { case (p, n) =>
+            t.copyIn(stmt, p)
+            rows.add(n)
+          } finally t.close()
+        }
       }
     }
     rows.value

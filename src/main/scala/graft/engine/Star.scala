@@ -1,8 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDataset
 import graft.functions._
 
 /** Star-schema builder: the reference's six `INSERT … SELECT [DISTINCT]
@@ -56,27 +56,37 @@ object Star {
     * absent from `existing`. PG keeps the first arriving row; the dedup
     * keeps an arbitrary row per key — set-equal on the keys, documented
     * in SURVEY.md §7.4 risk 2. The anti-join broadcasts whichever side
-    * is under the broadcast threshold. `existing` enters it as its key
-    * projection with no `distinct()`: an anti join ignores duplicate
-    * build keys, so a distinct would only add an aggregate over every
-    * key of the table (and a shuffle when the join broadcasts).
+    * is under the broadcast threshold; when neither is, it is a
+    * sort-merge join, and the dedup's output is already clustered and
+    * sorted on the key, so the batch side gets no second Exchange or
+    * Sort. `existing` enters it as its key projection with no
+    * `distinct()`: an anti join ignores duplicate build keys, so a
+    * distinct would only add an aggregate over every key of the table
+    * (and a shuffle when the join broadcasts).
     */
   def conflictIgnoreAppend(newRows: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
     firstPerKey(newRows, keys).join(
       existing.select(keys.map(col).toIndexedSeq: _*), keys, "left_anti")
 
   /** One arbitrary row per distinct key tuple, null keys included —
-    * `dropDuplicates(keys)`'s contract. On a wide row `dropDuplicates`
-    * plans as partial + final SortAggregate carrying a `first` buffer
-    * per non-key column (string buffers are not fixed-width, so no hash
-    * aggregate); the rank-1 window is one key shuffle plus a spillable
-    * sort, which Spark cuts short with a WindowGroupLimit.
+    * `dropDuplicates(keys)`'s contract: the first row of each key run
+    * in key-sort order, the row a rank-1 `row_number` window over the
+    * keys keeps. It plans as one key shuffle, a spillable sort and
+    * [[FirstPerKeyExec]], which keeps the first row of each run of equal
+    * keys. On a wide row `dropDuplicates` would plan as partial +
+    * final SortAggregate carrying a `first` buffer per non-key column
+    * (string buffers are not fixed-width, so no hash aggregate). The
+    * planner strategy is installed on the frame's session here (once
+    * per session).
     */
   def firstPerKey(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val k = keys.map(col).toIndexedSeq
-    df.withColumn("__rn", row_number().over(Window.partitionBy(k: _*).orderBy(k: _*)))
-      .where(col("__rn") === 1)
-      .drop("__rn")
+    val spark = df.sparkSession
+    FirstPerKey.install(spark)
+    val plan = df.queryExecution.analyzed
+    val keyAttrs = df.select(keys.map(col).toIndexedSeq: _*).queryExecution.analyzed.output
+    require(keyAttrs.forall(plan.outputSet.contains),
+      s"firstPerKey: keys must be top-level columns, got ${keys.mkString(", ")}")
+    PlanDataset.ofRows(spark, FirstPerKey(keyAttrs, plan))
   }
 
   /** J1 violation audit: fact rows whose FK has no match in the dim

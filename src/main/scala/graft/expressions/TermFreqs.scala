@@ -68,7 +68,9 @@ object TermFreqsImpl {
         val t = arr.getUTF8String(i)
         val c = counts.get(t)
         if (c == null) {
-          counts.put(t, Array(1))
+          // t may point into the input row's buffer, which the scan
+          // reuses: the key kept (and emitted) is a copy
+          counts.put(t.clone(), Array(1))
           order += 1
         } else c(0) += 1
       }

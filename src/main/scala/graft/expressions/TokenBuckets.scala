@@ -37,6 +37,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class TokenBuckets(child: Expression, nBuckets: Int, useBigrams: Boolean)
     extends UnaryExpression with StringInputType {
+  // checked when the column is built, not per row; 2^20 is the bound
+  // Selection applies to its bucket counts
+  require(nBuckets > 0 && nBuckets <= (1 << 20),
+    s"token_buckets: nBuckets must be in [1, 2^20], got $nBuckets")
+
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "token_buckets"
 
@@ -55,7 +60,6 @@ object TokenBucketsImpl {
   private def isSpace(b: Byte): Boolean = b == 0x20 || (b >= 0x09 && b <= 0x0D)
 
   def compute(s: UTF8String, nBuckets: Int, useBigrams: Boolean): ArrayData = {
-    require(nBuckets > 0, s"token_buckets: nBuckets must be positive, got $nBuckets")
     val nb = s.numBytes()
     var tokStarts = new Array[Int](16)
     var tokEnds = new Array[Int](16)

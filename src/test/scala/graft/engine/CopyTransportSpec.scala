@@ -139,6 +139,17 @@ class CopyTransportSpec extends SparkSpecBase {
     assert(opens.get() == 1, "7 empty partitions must not open connections")
     assert(closes.get() == 1)
   }
+
+  test("load runs its jobs inside one SQL execution") {
+    reset()
+    import spark.implicits._
+    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(3)
+    val plans = jobPlans {
+      assert(CopySink.load(df, "t", () => new CaptureTransport) == 2L)
+    }
+    // a job outside any execution would count with an empty plan
+    assert(plans.size == 1 && plans.head.nonEmpty, plans.mkString("\n---\n"))
+  }
 }
 
 /** Byte-capturing transport fake (same-JVM statics — local-mode test). */

@@ -151,7 +151,8 @@ class PipelineSpec extends SparkSpecBase {
     assert(plans.head.contains("InsertIntoHadoopFsRelationCommand"), plans.head)
     for (bad <- Seq("InMemoryTableScan", "SortAggregate"))
       assert(!plans.head.contains(bad), plans.head)
-    assert(plans.head.contains("WindowGroupLimit"), plans.head) // rank-1 dedup cut short
+    assert(plans.head.contains("FirstPerKey"), plans.head) // first row of each key run
+    assert(!plans.head.contains("Window"), plans.head)
   }
 
   test("registerTable makes the directory addressable from SQL (S8)") {

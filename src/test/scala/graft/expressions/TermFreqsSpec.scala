@@ -65,4 +65,37 @@ class TermFreqsSpec extends SparkSpecBase {
     assert(nf.fieldNames.toSeq == ef.fieldNames.toSeq)
     assert(nf.fields.map(_.dataType).toSeq == ef.fields.map(_.dataType).toSeq)
   }
+
+  test("terms are copies: Parquet-scanned arrays sorted on the kernel's output") {
+    // the vectorized reader refills one string buffer per batch, so the
+    // input arrays' bytes are overwritten from row to row
+    val tmp = java.nio.file.Files.createTempDirectory("graft-tf")
+    try {
+      val dir = tmp.toString + "/w"
+      spark.range(0, 12000, 1, 2)
+        .select(col("id"), array(
+          concat(lit("a"), (col("id") % 251).cast("string")),
+          concat(lit("b"), (col("id") % 7).cast("string")),
+          concat(lit("a"), (col("id") % 251).cast("string"))).as("w"))
+        .write.parquet(dir)
+      val scanned = spark.read.parquet(dir)
+      def sortedOn(tf: org.apache.spark.sql.Column) =
+        scanned.select(col("id"), tf.as("p")).sort(col("p"), col("id"))
+          .select(col("id"), col("p.term").as("t"), col("p.tf").as("n"))
+          .as[(Long, Seq[String], Seq[Int])].collect().toSeq
+      val n = sortedOn(graft.functions.termFreqsNative(col("w")))
+      assert(n == sortedOn(declarative))
+      assert(n.head._2.size == 2 && n.forall(_._3 == Seq(2, 1)))
+    } finally graft.engine.FsUtil.deleteRecursively(tmp)
+
+    // the kernel itself: an emitted term does not share the input's bytes
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    val buf = "abcd".getBytes("UTF-8")
+    val (ab, cd) = (UTF8String.fromBytes(buf, 0, 2), UTF8String.fromBytes(buf, 2, 2))
+    val out = graft.expressions.TermFreqsImpl.compute(new GenericArrayData(Array[Any](ab, cd, ab)))
+    buf(0) = 'z'.toByte
+    assert(out.getStruct(0, 2).getUTF8String(0).toString == "ab")
+    assert(out.getStruct(0, 2).getInt(1) == 2)
+  }
 }

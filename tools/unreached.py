@@ -44,7 +44,10 @@ ROOT_CLASSES = ("graft.Harness", "graft.GraftExtensions")
 ROOT_PACKAGES = ("graft.perfbench.",)
 # Every instance method of a class that is not an `object` is a root too:
 # Spark and Scala call them (DataSource V2 callbacks, expression eval,
-# aggregate buffers, case-class accessors).
+# aggregate buffers, case-class accessors). So a hook that only Spark
+# calls, such as a planner strategy or an optimizer rule, is written as
+# a class (`FirstPerKey.Strategy`, `BinnedRangeJoinRule`): as an `object`
+# its `apply` would be reported, since no call to it is in the bytecode.
 #
 # Edges: these instructions, resolved up and down the class hierarchy
 # (a call on a supertype reaches every override) ...
