@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Deterministic micro-batch REPLAY harness: drives a bounded frame
   * through a REAL Structured Streaming execution (file source,
@@ -23,6 +26,11 @@ import org.apache.spark.sql.streaming.Trigger
   * fixture table through local files); production streams read the
   * same `hourlyRollupStream` plan from a real source — the operator
   * under test is identical, only the source differs.
+  *
+  * Every entry point runs on the same three private pieces:
+  * [[withStage]] (the stage dir and its cleanup), [[frameStager]] or
+  * [[stageModBatches]] (one file per micro-batch), and [[drain]] (the
+  * file-source query, run to completion).
   */
 object Replay {
 
@@ -34,6 +42,24 @@ object Replay {
   private def freshStageDir(tag: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_stream_replay_${tag}_" +
       java.util.UUID.randomUUID().toString
+
+  /** Run `body` over a stage dir: `stageDir` (recreated if it exists)
+    * or a fresh one, plus `dir + suffix` for each of `siblings`. The
+    * listener bus is drained before the dirs are deleted, so no async
+    * listener resolves a path that is already gone.
+    */
+  private def withStage[T](spark: SparkSession, stageDir: String,
+      tag: String, siblings: String*)(body: (String, FileSystem) => T): T = {
+    val dir = Option(stageDir).getOrElse(freshStageDir(tag))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val owned = (dir +: siblings.map(dir + _)).map(new Path(_))
+    owned.foreach(p => if (fs.exists(p)) fs.delete(p, true))
+    try body(dir, fs)
+    finally {
+      ListenerDrain.drain(spark)
+      owned.foreach(fs.delete(_, true))
+    }
+  }
 
   /** Run `body` (which starts and drains this replay's streaming
     * queries) under a FEED-SIZED `spark.sql.shuffle.partitions`,
@@ -56,15 +82,14 @@ object Replay {
     * `shuffle.partitions` in the checkpoint's offset-log metadata at
     * first start and reuses it on every restart.
     */
-  private def withFeedSizedShuffle[T](spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path)(body: => T): T = {
+  private def withFeedSizedShuffle[T](spark: SparkSession, fs: FileSystem,
+      dir: String)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
     val feedBytes =
-      try fs.getContentSummary(path).getLength
+      try fs.getContentSummary(new Path(dir)).getLength
       catch { case _: Throwable => Long.MaxValue } // unknown ⇒ keep session value
     val derived = math.max(1L, math.min(before.toLong,
       (feedBytes + advisory - 1) / advisory))
@@ -72,25 +97,30 @@ object Replay {
     try body finally spark.conf.set(key, before)
   }
 
-  /** Stamp every not-yet-stamped part file with an explicit strictly-
-    * increasing mtime (10 s per batch step): the file source orders
-    * and groups files by timestamp, and wall-clock mtimes are NOT
-    * guaranteed distinct on coarse-granularity filesystems (1-2 s on
-    * some NFS/HFS+/FAT mounts) — a merged batch would flip the
+  /** Per-frame staging into `dir`: `stage(frame, k)` writes `frame` as
+    * one part file (= one micro-batch) and stamps it with an explicit
+    * strictly-increasing mtime (10 s per batch step k): the file source
+    * orders and groups files by timestamp, and wall-clock mtimes are
+    * NOT guaranteed distinct on coarse-granularity filesystems (1-2 s
+    * on some NFS/HFS+/FAT mounts) — a merged batch would flip the
     * replayed_multibatch proof bit on an otherwise-correct run.
     * Explicit stamps make the micro-batch sequence deterministic on
     * any filesystem; 10 s dwarfs every real mtime granularity.
     */
-  private def stampBatch(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path,
-      seen: scala.collection.mutable.Set[String],
-      base: Long, step: Int): Unit =
-    fs.listStatus(path).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && !seen.contains(p.getName))
-      .foreach { p =>
-        fs.setTimes(p, base + step * 10000L, -1)
-        seen += p.getName
-      }
+  private def frameStager(fs: FileSystem, dir: String): (DataFrame, Int) => Unit = {
+    val path = new Path(dir)
+    val seen = scala.collection.mutable.Set.empty[String]
+    val base = System.currentTimeMillis() - 3600000L
+    (frame, k) => {
+      frame.coalesce(1).write.mode("append").parquet(dir)
+      fs.listStatus(path).map(_.getPath)
+        .filter(p => p.getName.startsWith("part-") && !seen.contains(p.getName))
+        .foreach { p =>
+          fs.setTimes(p, base + k * 10000L, -1)
+          seen += p.getName
+        }
+    }
+  }
 
   /** ONE staging job for all micro-batch files: rows mod-partition on
     * `modCol` into per-batch directories (each written as a single
@@ -100,26 +130,59 @@ object Replay {
     * replacing nBatches sequential filtered scans with one pass.
     */
   private def stageModBatches(feed: DataFrame, modCol: String, dir: String,
-      fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path,
-      nBatches: Int): Unit = {
+      fs: FileSystem, nBatches: Int): Unit = {
     val base = System.currentTimeMillis() - 3600000L
     val stagedTmp = s"$dir/__staged"
     feed.withColumn("__b", pmod(col(modCol), lit(nBatches)))
       .repartition(nBatches, col("__b"))
       .write.partitionBy("__b").parquet(stagedTmp)
     for (k <- 0 until nBatches) {
-      val sub = new org.apache.hadoop.fs.Path(s"$stagedTmp/__b=$k")
+      val sub = new Path(s"$stagedTmp/__b=$k")
       require(fs.exists(sub),
         s"micro-batch $k is empty — the replay needs rows in every batch")
       val parts = fs.listStatus(sub)
         .map(_.getPath).filter(_.getName.startsWith("part-"))
       require(parts.length == 1,
         s"staged micro-batch $k must be exactly one file, got ${parts.length}")
-      val dst = new org.apache.hadoop.fs.Path(path, f"batch-$k%05d.parquet")
+      val dst = new Path(dir, f"batch-$k%05d.parquet")
       fs.rename(parts.head, dst)
       fs.setTimes(dst, base + k * 10000L, -1)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(stagedTmp), true)
+    fs.delete(new Path(stagedTmp), true)
+  }
+
+  /** The staged files in `dir` as a stream, one file per trigger. */
+  private def open(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(dir)
+
+  /** Drain the files staged in `dir` through `writer`'s query with
+    * `Trigger.AvailableNow` under a feed-sized shuffle; returns the
+    * query's progress, off which callers read data batches and
+    * watermark drops.
+    */
+  private def drain(spark: SparkSession, fs: FileSystem, dir: String,
+      schema: StructType)(
+      writer: DataFrame => DataStreamWriter[_]): Array[StreamingQueryProgress] =
+    withFeedSizedShuffle(spark, fs, dir) {
+      val q = writer(open(spark, dir, schema))
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q.recentProgress
+    }
+
+  private def dataBatches(p: Array[StreamingQueryProgress]): Int =
+    p.count(_.numInputRows > 0)
+
+  private def droppedByWatermark(p: Array[StreamingQueryProgress]): Long =
+    p.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+
+  /** A memory-sink writer under `name`, dropping the previous run's view. */
+  private def toMemory(spark: SparkSession, name: String, mode: String)(
+      ds: Dataset[_]): DataStreamWriter[_] = {
+    spark.catalog.dropTempView(name)
+    ds.writeStream.format("memory").queryName(name).outputMode(mode)
   }
 
   /** Replay a corpus through the STREAMING DECONTAMINATION GATE: the
@@ -141,31 +204,17 @@ object Replay {
       benchmark: DataFrame, n: Int = 3, benchShingles: Long = 4096L,
       nBatches: Int = 3, stageDir: String = null): (DataFrame, Int) = {
     require(nBatches >= 2, s"a replay needs ≥ 2 micro-batches, got $nBatches")
-    val dir = Option(stageDir).getOrElse(freshStageDir("decontam"))
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-    try {
+    withStage(spark, stageDir, "decontam") { (dir, fs) =>
       val feed = corpus.select(col("doc_id").cast("long").as("doc_id"),
         col("text"))
-      stageModBatches(feed, "doc_id", dir, fs, path, nBatches)
-      withFeedSizedShuffle(spark, fs, path) {
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        val gated = graft.ops.Dedup.bloomScreen(src, "doc_id", "text",
-            benchmark, "text", n, benchShingles)
-          .where(!col("bloom_hit")).select("doc_id")
-        val name = "graft_replay_decontam"
-        spark.catalog.dropTempView(name)
-        val q = gated.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        (spark.table(name).localCheckpoint(true), dataBatches)
+      stageModBatches(feed, "doc_id", dir, fs, nBatches)
+      val name = "graft_replay_decontam"
+      val p = drain(spark, fs, dir, feed.schema) { src =>
+        toMemory(spark, name, "append")(graft.ops.Dedup.bloomScreen(src,
+            "doc_id", "text", benchmark, "text", n, benchShingles)
+          .where(!col("bloom_hit")).select("doc_id"))
       }
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(path, true)
+      (spark.table(name).localCheckpoint(true), dataBatches(p))
     }
   }
 
@@ -175,38 +224,22 @@ object Replay {
     * batchId)`, then INJECT a replay of batch 0 through the same
     * callback (failure after commit, before the offset log advanced)
     * — so every consumer's exactly-once contract is exercised by the
-    * harness, not assumed. The replay-fault predicate, the batchId→
-    * file-order assumption, and the drain/cleanup ordering live HERE,
-    * once (r11 review finding: the two consumers had diverging
-    * copies). Returns data batches observed.
+    * harness, not assumed. The replay-fault predicate and the batchId→
+    * file-order assumption live HERE, once (r11 review finding: the
+    * two consumers had diverging copies). Returns data batches
+    * observed.
     */
   private def indexFoldReplay(spark: SparkSession, feed: DataFrame,
       modCol: String, nBatches: Int, stageDir: String, tag: String)(
       perBatch: (DataFrame, Long) => Unit): Int = {
     require(nBatches >= 2, s"a replay needs ≥ 2 micro-batches, got $nBatches")
-    val dir = Option(stageDir).getOrElse(freshStageDir(tag))
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-    try {
-      stageModBatches(feed, modCol, dir, fs, path, nBatches)
-      val dataBatches = withFeedSizedShuffle(spark, fs, path) {
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        val q = src.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            perBatch(batch, batchId)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        q.recentProgress.count(_.numInputRows > 0)
-      }
+    withStage(spark, stageDir, tag) { (dir, fs) =>
+      stageModBatches(feed, modCol, dir, fs, nBatches)
+      val p = drain(spark, fs, dir, feed.schema)(
+        _.writeStream.foreachBatch(perBatch))
       // injected REPLAY of the first batch under its original batchId
       perBatch(feed.where(pmod(col(modCol), lit(nBatches)) === 0), 0L)
-      dataBatches
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(path, true)
+      dataBatches(p)
     }
   }
 
@@ -283,14 +316,8 @@ object Replay {
   def lateDataReplay(spark: SparkSession, events: DataFrame,
       filler: DataFrame, lateEvents: DataFrame,
       watermark: String = "1 hour",
-      stageDir: String = null): (DataFrame, Long, Int) = {
-    val dir = Option(stageDir).getOrElse(freshStageDir("latedata"))
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-    try {
-      val seen = scala.collection.mutable.Set.empty[String]
-      val base = System.currentTimeMillis() - 3600000L
+      stageDir: String = null): (DataFrame, Long, Int) =
+    withStage(spark, stageDir, "latedata") { (dir, fs) =>
       // Spark runs TWO watermarks per batch (probed, r11): eviction
       // uses the watermark advanced by the PREVIOUS batch, while the
       // late-record FILTER lags one batch further (so data arriving in
@@ -300,31 +327,15 @@ object Replay {
       // only THEN do the late rows arrive squarely behind it. The
       // filler must be on-time rows in the stream's final (unemitted)
       // window so it can never contaminate an emitted aggregate.
-      val batches = Seq(events, filler, lateEvents)
-      batches.zipWithIndex.foreach { case (b, k) =>
-        b.coalesce(1).write.mode("append").parquet(dir)
-        stampBatch(fs, path, seen, base, k)
-      }
-      withFeedSizedShuffle(spark, fs, path) {
-        val src = spark.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        val name = "graft_replay_latedata"
-        spark.catalog.dropTempView(name)
-        val q = EventStreams.hourlyRollupStream(src, watermark)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val dropped = q.recentProgress
-          .flatMap(_.stateOperators)
-          .map(_.numRowsDroppedByWatermark).sum
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        (spark.table(name).localCheckpoint(true), dropped, dataBatches)
-      }
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(path, true)
+      Seq(events, filler, lateEvents).zipWithIndex
+        .foreach(frameStager(fs, dir).tupled)
+      val name = "graft_replay_latedata"
+      val p = drain(spark, fs, dir, events.schema)(src =>
+        toMemory(spark, name, "append")(
+          EventStreams.hourlyRollupStream(src, watermark)))
+      (spark.table(name).localCheckpoint(true), droppedByWatermark(p),
+        dataBatches(p))
     }
-  }
 
   /** UPDATE-MODE arm of the watermarked hourly rollup — the dashboard
     * read path, where [[lateDataReplay]] is the training-sink read
@@ -350,27 +361,13 @@ object Replay {
       stageDir: String = null): (DataFrame, Long, Int) = {
     require(batches.size >= 2,
       s"a replay needs >= 2 micro-batches, got ${batches.size}")
-    val dir = Option(stageDir).getOrElse(freshStageDir("rollupupd"))
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    val srcDir = s"$dir/src"
-    val updDir = s"$dir/updates"
-    val srcPath = new org.apache.hadoop.fs.Path(srcDir)
-    fs.mkdirs(srcPath)
-    try {
-      val seen = scala.collection.mutable.Set.empty[String]
-      val base = System.currentTimeMillis() - 3600000L
-      batches.zipWithIndex.foreach { case (b, k) =>
-        b.coalesce(1).write.mode("append").parquet(srcDir)
-        stampBatch(fs, srcPath, seen, base, k)
-      }
-      val (rolled, dropped, dataBatches) =
-          withFeedSizedShuffle(spark, fs, srcPath) {
-        val src = spark.readStream.schema(batches.head.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        val r = EventStreams.hourlyRollupStream(src, watermark)
-        val q = r
+    withStage(spark, stageDir, "rollupupd") { (dir, fs) =>
+      val srcDir = s"$dir/src"
+      val updDir = s"$dir/updates"
+      batches.zipWithIndex.foreach(frameStager(fs, srcDir).tupled)
+      val schema = batches.head.schema
+      val p = drain(spark, fs, srcDir, schema)(src =>
+        EventStreams.hourlyRollupStream(src, watermark)
           .writeStream.outputMode("update")
           .option("checkpointLocation", s"$dir/checkpoint")
           // update mode hands foreachBatch ONLY the groups this trigger
@@ -380,14 +377,7 @@ object Replay {
             batch.withColumn("batch_id", lit(batchId))
               .write.mode(SaveMode.Append).parquet(updDir)
             ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        (r,
-          q.recentProgress.flatMap(_.stateOperators)
-            .map(_.numRowsDroppedByWatermark).sum,
-          q.recentProgress.count(_.numInputRows > 0))
-      }
+          })
       // updDir exists only if some batch actually updated a group —
       // "a batch whose rows were all dropped updates NOTHING" is part
       // of the contract, so an all-dropped run must read as an EMPTY
@@ -396,16 +386,11 @@ object Replay {
       // batch_id tag foreachBatch adds — derived, not hard-coded, so
       // the two paths cannot drift if the rollup's output changes
       val updates =
-        if (fs.exists(new org.apache.hadoop.fs.Path(updDir)))
-          spark.read.parquet(updDir)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          rolled.schema.add("batch_id",
-            org.apache.spark.sql.types.LongType))
-      (updates.localCheckpoint(true), dropped, dataBatches)
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(root, true)
+        if (fs.exists(new Path(updDir))) spark.read.parquet(updDir)
+        else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          EventStreams.hourlyRollupStream(open(spark, srcDir, schema),
+            watermark).schema.add("batch_id", LongType))
+      (updates.localCheckpoint(true), droppedByWatermark(p), dataBatches(p))
     }
   }
 
@@ -415,6 +400,78 @@ object Replay {
   final case class RestartRun(
       result: DataFrame, rowsPhaseA: Long, rowsPhaseB: Long,
       emittedAtStop: Long, dataBatchesA: Int, dataBatchesB: Int)
+
+  /** The kill-and-restart body both recovery replays share. Each of
+    * `batches` stages as one file. With `stopAfter <= 0` every batch is
+    * staged and drained by one query (the one-shot twin). Otherwise
+    * phase A stages `batches(0 until stopAfter)` and starts `writer`'s
+    * query on the DEFAULT continuous micro-batch trigger (the query
+    * believes more files may arrive — this is what makes the stop a
+    * mid-corpus kill rather than a drained shutdown). It waits until
+    * every staged row is consumed and `readyA(dir)` holds, then stops.
+    * `atStop(dir)` is observed, `afterKill` runs, the rest of the
+    * batches land while the stream is DOWN, and phase B drains them
+    * with a NEW query over the SAME checkpoint (`dir/checkpoint`).
+    * `result(dir)` is read before the stage dir is deleted.
+    */
+  private def killAndRestart(spark: SparkSession, batches: Seq[DataFrame],
+      stopAfter: Int, stageDir: String, tag: String,
+      writer: (String, DataFrame) => DataStreamWriter[_],
+      readyA: String => Boolean, atStop: String => Long,
+      afterKill: () => Unit, result: String => DataFrame): RestartRun =
+    withStage(spark, stageDir, tag) { (dir, fs) =>
+      val srcDir = s"$dir/src"
+      val schema = batches.head.schema
+      val stage = frameStager(fs, srcDir)
+      def stageRange(r: Range): Unit = r.foreach(k => stage(batches(k), k))
+      def sink(src: DataFrame) =
+        writer(dir, src).option("checkpointLocation", s"$dir/checkpoint")
+      def rowsIn(p: Array[StreamingQueryProgress]): Long =
+        p.map(_.numInputRows).sum
+      val phaseA =
+        if (stopAfter <= 0) None
+        else {
+          stageRange(0 until stopAfter)
+          // expected phase-A mass read back off the staged files (the
+          // feed frames may be non-deterministic to recount)
+          val expectA = spark.read.parquet(srcDir).count()
+          // phase A's first start pins the feed-sized partition count
+          // in the checkpoint; phase B reuses the checkpointed value
+          val progressA = withFeedSizedShuffle(spark, fs, srcDir) {
+            val qa = sink(open(spark, srcDir, schema)).start()
+            val deadline = System.currentTimeMillis() + 180000L
+            while ((rowsIn(qa.recentProgress) < expectA || !readyA(dir)) &&
+                System.currentTimeMillis() < deadline)
+              Thread.sleep(100)
+            val p = qa.recentProgress
+            qa.stop()
+            qa.awaitTermination()
+            p
+          }
+          val got = rowsIn(progressA)
+          require(got == expectA,
+            s"phase A consumed $got of $expectA staged rows before the " +
+              "stop deadline — cannot call this a post-commit kill")
+          val observed = atStop(dir)
+          // hook for reconstructing what a HARD crash (kill -9 — no
+          // finally) leaves behind that a graceful stop() does not: the
+          // orphaned _writer_lock arm plants a dead-pid stamped lock
+          // here and proves phase B reclaims it unaided
+          afterKill()
+          Some((got, dataBatches(progressA), observed))
+        }
+      // the rest of the corpus (all of it for the one-shot twin)
+      // arrives while the stream is DOWN
+      stageRange(math.max(stopAfter, 0) until batches.size)
+      val p = drain(spark, fs, srcDir, schema)(sink)
+      phaseA match {
+        case None =>
+          RestartRun(result(dir), rowsIn(p), 0L, -1L, dataBatches(p), 0)
+        case Some((gotA, batchesA, emittedAtStop)) =>
+          RestartRun(result(dir), gotA, rowsIn(p), emittedAtStop,
+            batchesA, dataBatches(p))
+      }
+    }
 
   /** KILL-AND-RESTART recovery over a REAL checkpoint: the injected-
     * replay rows (q134/q144) prove sink idempotence when a completed
@@ -447,7 +504,7 @@ object Replay {
     * one-shot twin.
     *
     * `batches` must share one schema; each stages as exactly one file
-    * (one micro-batch, the [[stageModBatches]] discipline). Returns
+    * (one micro-batch, the [[frameStager]] discipline). Returns
     * the final sink contents (localCheckpointed — the staging dirs
     * are deleted on return) plus the per-phase input-row and
     * data-batch counts and the sink row count observed at the stop.
@@ -460,87 +517,16 @@ object Replay {
     require(stopAfter < batches.size,
       s"stopAfter=$stopAfter leaves nothing for the restarted query " +
         s"(${batches.size} batches) — the recovery row needs both phases")
-    val dir = Option(stageDir).getOrElse(freshStageDir("restart"))
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    val srcDir = s"$dir/src"
-    val sinkDir = s"$dir/sink"
-    val ckDir = s"$dir/checkpoint"
-    val srcPath = new org.apache.hadoop.fs.Path(srcDir)
-    fs.mkdirs(srcPath)
-    try {
-      val seen = scala.collection.mutable.Set.empty[String]
-      val base = System.currentTimeMillis() - 3600000L
-      def stage(range: Range): Unit = range.foreach { k =>
-        batches(k).coalesce(1).write.mode("append").parquet(srcDir)
-        stampBatch(fs, srcPath, seen, base, k)
-      }
-      val schema = batches.head.schema
-      def start(avail: Boolean) = {
-        val src = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        val w = EventStreams.hourlyRollupStream(src, watermark)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", ckDir)
-          .outputMode("append")
-        (if (avail) w.trigger(Trigger.AvailableNow()) else w).start()
-      }
-      // the sink THROUGH its _spark_metadata log — only committed files
-      def sinkCount(): Long =
-        try spark.read.parquet(sinkDir).count()
-        catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-      def rowsIn(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
-        q.recentProgress.map(_.numInputRows).sum
-      def dataBatches(q: org.apache.spark.sql.streaming.StreamingQuery): Int =
-        q.recentProgress.count(_.numInputRows > 0)
-
-      if (stopAfter <= 0) {
-        // the one-shot twin: same staged sequence, one uninterrupted run
-        stage(batches.indices)
-        withFeedSizedShuffle(spark, fs, srcPath) {
-          val q = start(avail = true)
-          q.awaitTermination()
-          RestartRun(spark.read.parquet(sinkDir).localCheckpoint(true),
-            rowsIn(q), 0L, -1L, dataBatches(q), 0)
-        }
-      } else {
-        stage(0 until stopAfter)
-        // expected phase-A mass read back off the staged files (the
-        // feed frames may be non-deterministic to recount)
-        val expectA = spark.read.parquet(srcDir).count()
-        // phase A's first start pins the feed-sized partition count in
-        // the checkpoint; phase B reuses the checkpointed value
-        val (gotA, aBatches, emittedAtStop) =
-            withFeedSizedShuffle(spark, fs, srcPath) {
-          val qa = start(avail = false)
-          val deadline = System.currentTimeMillis() + 180000L
-          while ((rowsIn(qa) < expectA || sinkCount() < 1L) &&
-              System.currentTimeMillis() < deadline)
-            Thread.sleep(100)
-          val got = rowsIn(qa)
-          val aB = dataBatches(qa)
-          qa.stop()
-          qa.awaitTermination()
-          require(got == expectA,
-            s"phase A consumed $got of $expectA staged rows before the " +
-              "stop deadline — cannot call this a post-commit kill")
-          (got, aB, sinkCount())
-        }
-        // the rest of the corpus arrives while the stream is DOWN
-        stage(stopAfter until batches.size)
-        withFeedSizedShuffle(spark, fs, srcPath) {
-          val qb = start(avail = true)
-          qb.awaitTermination()
-          RestartRun(spark.read.parquet(sinkDir).localCheckpoint(true),
-            gotA, rowsIn(qb), emittedAtStop, aBatches, dataBatches(qb))
-        }
-      }
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(root, true)
-    }
+    // the sink THROUGH its _spark_metadata log — only committed files
+    def sinkCount(dir: String): Long =
+      try spark.read.parquet(s"$dir/sink").count()
+      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    killAndRestart(spark, batches, stopAfter, stageDir, "restart",
+      (dir, src) => EventStreams.hourlyRollupStream(src, watermark)
+        .writeStream.format("parquet").option("path", s"$dir/sink")
+        .outputMode("append"),
+      sinkCount(_) >= 1L, sinkCount, () => (),
+      dir => spark.read.parquet(s"$dir/sink").localCheckpoint(true))
   }
 
   /** KILL-AND-RESTART recovery for the STREAMING INDEX INGEST — the
@@ -583,88 +569,19 @@ object Replay {
     import graft.ops.AnnIndex
     require(deltaBatches.size >= 2,
       s"a replay needs >= 2 micro-batches, got ${deltaBatches.size}")
-    val dir = Option(stageDir).getOrElse(freshStageDir("ivfrestart"))
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    val srcDir = s"$dir/src"
-    val ckDir = s"$dir/checkpoint"
-    val srcPath = new org.apache.hadoop.fs.Path(srcDir)
-    fs.mkdirs(srcPath)
-    try {
-      val seen = scala.collection.mutable.Set.empty[String]
-      val base = System.currentTimeMillis() - 3600000L
-      def stage(range: Range): Unit = range.foreach { k =>
-        deltaBatches(k).coalesce(1).write.mode("append").parquet(srcDir)
-        stampBatch(fs, srcPath, seen, base, k)
-      }
-      val schema = deltaBatches.head.schema
-      def start(avail: Boolean) = {
-        val src = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        val w = src.writeStream
-          .option("checkpointLocation", ckDir)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            AnnIndex.appendToIvfIndex(spark, indexDir, batch,
-              "vec_id", "embedding", gen = batchId + 1L)
-            ()
-          }
-        (if (avail) w.trigger(Trigger.AvailableNow()) else w).start()
-      }
-      def rowsIn(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
-        q.recentProgress.map(_.numInputRows).sum
-      def dataBatches(q: org.apache.spark.sql.streaming.StreamingQuery): Int =
-        q.recentProgress.count(_.numInputRows > 0)
-      def tree(): DataFrame =
-        spark.read.parquet(s"$indexDir/postings.parquet")
-
-      if (stopAfter <= 0) {
-        stage(deltaBatches.indices)
-        withFeedSizedShuffle(spark, fs, srcPath) {
-          val q = start(avail = true)
-          q.awaitTermination()
-          RestartRun(tree(), rowsIn(q), 0L, -1L, dataBatches(q), 0)
-        }
-      } else {
-        require(stopAfter < deltaBatches.size,
-          s"stopAfter=$stopAfter leaves nothing for the restarted query")
-        stage(0 until stopAfter)
-        val expectA = spark.read.parquet(srcDir).count()
-        val (gotA, aBatches) = withFeedSizedShuffle(spark, fs, srcPath) {
-          val qa = start(avail = false)
-          val deadline = System.currentTimeMillis() + 180000L
-          while (rowsIn(qa) < expectA &&
-              System.currentTimeMillis() < deadline)
-            Thread.sleep(100)
-          val got = rowsIn(qa)
-          val aB = dataBatches(qa)
-          qa.stop()
-          qa.awaitTermination()
-          require(got == expectA,
-            s"phase A consumed $got of $expectA staged rows before the " +
-              "stop deadline — cannot call this a post-commit kill")
-          (got, aB)
-        }
-        val gensAtStop = AnnIndex.listGenerations(spark, indexDir)
-          .count(_ > 0L).toLong
-        // hook for reconstructing what a HARD crash (kill -9 — no
-        // finally) leaves behind that a graceful stop() does not: the
-        // orphaned _writer_lock arm plants a dead-pid stamped lock
-        // here and proves phase B reclaims it unaided
-        afterKill()
-        // the rest of the corpus arrives while the stream is DOWN
-        stage(stopAfter until deltaBatches.size)
-        withFeedSizedShuffle(spark, fs, srcPath) {
-          val qb = start(avail = true)
-          qb.awaitTermination()
-          RestartRun(tree(), gotA, rowsIn(qb), gensAtStop,
-            aBatches, dataBatches(qb))
-        }
-      }
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(root, true)
-    }
+    require(stopAfter < deltaBatches.size,
+      s"stopAfter=$stopAfter leaves nothing for the restarted query")
+    killAndRestart(spark, deltaBatches, stopAfter, stageDir, "ivfrestart",
+      (_, src) => src.writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          AnnIndex.appendToIvfIndex(spark, indexDir, batch,
+            "vec_id", "embedding", gen = batchId + 1L)
+          ()
+        },
+      _ => true,
+      _ => AnnIndex.listGenerations(spark, indexDir).count(_ > 0L).toLong,
+      afterKill,
+      _ => spark.read.parquet(s"$indexDir/postings.parquet"))
   }
 
   /** Replay `events` through [[EventStreams.hourlyRollupStream]] in
@@ -676,67 +593,66 @@ object Replay {
   def hourlyRollupReplay(spark: SparkSession, events: DataFrame,
       nBatches: Int = 3, stageDir: String = null): (DataFrame, Int) = {
     require(nBatches >= 2, s"a replay needs ≥ 2 micro-batches, got $nBatches")
-    val dir = Option(stageDir).getOrElse(freshStageDir("rollup"))
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-    try {
-      // one file per micro-batch: a fixed mod-N row partition, each
-      // written as a single part file with an explicit batch mtime
-      val seen = scala.collection.mutable.Set.empty[String]
-      val base = System.currentTimeMillis() - 3600000L
-      for (k <- 0 until nBatches) {
-        events.where(pmod(col("event_id"), lit(nBatches)) === k)
-          .coalesce(1).write.mode("append").parquet(dir)
-        stampBatch(fs, path, seen, base, k)
-      }
-      withFeedSizedShuffle(spark, fs, path) {
-        val src = spark.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        val name = "graft_replay_rollup"
-        spark.catalog.dropTempView(name)
-        val q = EventStreams.hourlyRollupStream(src)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        (spark.table(name), dataBatches)
-      }
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(path, true)
+    withStage(spark, stageDir, "rollup") { (dir, fs) =>
+      stageModBatches(events, "event_id", dir, fs, nBatches)
+      val name = "graft_replay_rollup"
+      val p = drain(spark, fs, dir, events.schema)(src =>
+        toMemory(spark, name, "complete")(EventStreams.hourlyRollupStream(src)))
+      (spark.table(name), dataBatches(p))
     }
   }
 
-  /** Replay `events` through the CUSTOM-STATE streaming path
-    * ([[EventStreams.sessionizeStream]], `flatMapGroupsWithState`) in
-    * time-ordered micro-batches, so the per-user session state machine
-    * itself gets a hash-exact correctness row (q107).
-    *
-    * Determinism/parity with the batch [[EventStreams.sessionize]]:
-    *  - the feed is second-truncated UP FRONT (the batch operator
-    *    truncates internally), so both sides session identical
-    *    timestamps;
-    *  - files split the time RANGE into `nBatches` terciles on the
-    *    truncated ts — the split predicate depends only on ts, so a
-    *    user's equal-ts events can never straddle a boundary, and
-    *    cross-batch arrival is time-ordered per user (the state
-    *    machine's requirement); within a batch the operator sorts by
-    *    (ts, event_id), the batch window's exact order. Batch files
-    *    carry EXPLICIT strictly-increasing mtimes (stampBatch, 10 s
-    *    apart) — the file source orders and groups by timestamp, and
-    *    wall-clock mtimes are not distinct on coarse-granularity
-    *    filesystems; even a hypothetical merge of two batches stays
-    *    correct (the union is still time-ordered after the in-batch
-    *    sort — only an order INVERSION could break parity, and the
-    *    oracle hash would catch it), but the multibatch proof bit
-    *    demands the batches actually stay separate.
-    *  - a final SENTINEL file carries one far-future event per user
-    *    (event_id −1, ts past every real session's gap), forcing the
-    *    state machine to close and emit every user's LAST session;
-    *    the sentinel's own session stays in state and is never
-    *    emitted, so the emitted set is EXACTLY the batch session set.
+  /** The body both curation replays share: classifier weights trained
+    * OFFLINE from the q122 seed convention (doc_id%7==0 positive,
+    * %7==3 negative), the corpus staged as the fixed pmod(doc_id,
+    * nBatches) row partition, and each micro-batch passed through
+    * `gate`, quality-scored, token-counted and appended EXACTLY-ONCE
+    * to the persisted loader layout at `<stage dir>_layout`. Returns
+    * (the layout read back, data batches observed).
     */
+  private def curationReplay(spark: SparkSession, docs: DataFrame,
+      window: Long, nBatches: Int, nBuckets: Int, stageDir: String,
+      tag: String)(gate: DataFrame => DataFrame): (DataFrame, Int) = {
+    import graft.ops.{Selection, TextOps}
+    require(nBatches >= 2, s"a replay needs ≥ 2 micro-batches, got $nBatches")
+    withStage(spark, stageDir, tag, "_layout") { (dir, fs) =>
+      val outDir = s"${dir}_layout"
+      val feed = docs.select(col("doc_id").cast("long").as("doc_id"),
+        col("text"))
+        // the corpus feeds BOTH the classifier training job and the
+        // staging write — evaluate the (tiny relative to the stream
+        // it simulates) fixture scan once
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // offline model training (batch side — the deployment shape); the
+      // cache is released even when training or staging throws, since
+      // the session is shared
+      val (w, defw6) =
+        try {
+          val weights = Selection.collectClassifierWeights(
+            feed.where(col("doc_id") % 7 === 0),
+            feed.where(col("doc_id") % 7 === 3),
+            "doc_id", "text", nBuckets = nBuckets)
+          stageModBatches(feed, "doc_id", dir, fs, nBatches)
+          weights
+        } finally feed.unpersist(blocking = false)
+      val p = drain(spark, fs, dir, feed.schema)(src =>
+        Selection.scoreWithClassifier(
+            gate(src).withColumn("n_tokens",
+              TextOps.tokenCount(col("text")).cast("long")),
+            "doc_id", "text", w, defw6, nBuckets = nBuckets,
+            keepCols = Seq("n_tokens"))
+          .where(col("keep"))
+          .select("doc_id", "n_tokens")
+          .writeStream.foreachBatch(
+            BatchSinks.tokenStreamSink(outDir, "doc_id", "n_tokens", window) _))
+      val layout = spark.read.parquet(outDir)
+        .select("doc_id", "n_tokens", "start_offset",
+          "first_window", "last_window")
+        .localCheckpoint(true) // eager: the dirs are deleted on return
+      (layout, dataBatches(p))
+    }
+  }
+
   /** Replay `docs` through the FULL STREAMING CURATION-TO-LOADER
     * composition (q120's streaming twin): classifier weights trained
     * OFFLINE from the q122 seed convention (doc_id%7==0 positive,
@@ -757,58 +673,9 @@ object Replay {
     */
   def curationLoaderReplay(spark: SparkSession, docs: DataFrame,
       window: Long, nBatches: Int = 3, nBuckets: Int = 1024,
-      stageDir: String = null): (DataFrame, Int) = {
-    import graft.ops.{Selection, TextOps}
-    require(nBatches >= 2, s"a replay needs ≥ 2 micro-batches, got $nBatches")
-    val dir = Option(stageDir).getOrElse(freshStageDir("curation"))
-    val outDir = s"${dir}_layout"
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    if (fs.exists(outPath)) fs.delete(outPath, true)
-    try {
-      val feed = docs.select(col("doc_id").cast("long").as("doc_id"),
-        col("text"))
-        // the corpus feeds BOTH the classifier training job and the
-        // staging write — evaluate the (tiny relative to the stream
-        // it simulates) fixture scan once
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // offline model training (batch side — the deployment shape)
-      val (w, defw6) = Selection.collectClassifierWeights(
-        feed.where(col("doc_id") % 7 === 0),
-        feed.where(col("doc_id") % 7 === 3),
-        "doc_id", "text", nBuckets = nBuckets)
-      stageModBatches(feed, "doc_id", dir, fs, path, nBatches)
-      feed.unpersist(blocking = false)
-      withFeedSizedShuffle(spark, fs, path) {
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        val gated = Selection.scoreWithClassifier(
-            src.withColumn("n_tokens",
-              TextOps.tokenCount(col("text")).cast("long")),
-            "doc_id", "text", w, defw6, nBuckets = nBuckets,
-            keepCols = Seq("n_tokens"))
-          .where(col("keep"))
-          .select("doc_id", "n_tokens")
-        val q = gated.writeStream
-          .foreachBatch(
-            BatchSinks.tokenStreamSink(outDir, "doc_id", "n_tokens", window) _)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        val layout = spark.read.parquet(outDir)
-          .select("doc_id", "n_tokens", "start_offset",
-            "first_window", "last_window")
-          .localCheckpoint(true) // eager: the dirs are deleted below
-        (layout, dataBatches)
-      }
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(path, true)
-      fs.delete(outPath, true)
-    }
-  }
+      stageDir: String = null): (DataFrame, Int) =
+    curationReplay(spark, docs, window, nBatches, nBuckets, stageDir,
+      "curation")(identity)
 
   /** ONE replay of the COMPLETE streaming curation path a production
     * ingest runs — the q133 + q122 + q129 composition the pieces were
@@ -836,68 +703,50 @@ object Replay {
   def curationPipelineReplay(spark: SparkSession, docs: DataFrame,
       benchmark: DataFrame, window: Long, nBatches: Int = 3,
       nBuckets: Int = 1024, n: Int = 3, benchShingles: Long = 4096L,
-      stageDir: String = null): (DataFrame, Int) = {
-    import graft.ops.{Selection, TextOps}
-    require(nBatches >= 2, s"a replay needs ≥ 2 micro-batches, got $nBatches")
-    val dir = Option(stageDir).getOrElse(freshStageDir("curpipe"))
-    val outDir = s"${dir}_layout"
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    if (fs.exists(outPath)) fs.delete(outPath, true)
-    try {
-      val feed = docs.select(col("doc_id").cast("long").as("doc_id"),
-        col("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // offline artifacts (batch side — the deployment shape)
-      val (w, defw6) = Selection.collectClassifierWeights(
-        feed.where(col("doc_id") % 7 === 0),
-        feed.where(col("doc_id") % 7 === 3),
-        "doc_id", "text", nBuckets = nBuckets)
-      stageModBatches(feed, "doc_id", dir, fs, path, nBatches)
-      feed.unpersist(blocking = false)
-      withFeedSizedShuffle(spark, fs, path) {
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        // gate 1: decontamination (bloom, no false negatives)
-        val screened = graft.ops.Dedup.bloomScreen(src, "doc_id", "text",
-            benchmark, "text", n, benchShingles)
-          .where(!col("bloom_hit"))
-        // gate 2: classifier quality score over the survivors
-        val gated = Selection.scoreWithClassifier(
-            screened.withColumn("n_tokens",
-              TextOps.tokenCount(col("text")).cast("long")),
-            "doc_id", "text", w, defw6, nBuckets = nBuckets,
-            keepCols = Seq("n_tokens"))
-          .where(col("keep"))
-          .select("doc_id", "n_tokens")
-        // sink: exactly-once extension of the persisted loader layout
-        val q = gated.writeStream
-          .foreachBatch(
-            BatchSinks.tokenStreamSink(outDir, "doc_id", "n_tokens", window) _)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        val layout = spark.read.parquet(outDir)
-          .select("doc_id", "n_tokens", "start_offset",
-            "first_window", "last_window")
-          .localCheckpoint(true) // eager: the dirs are deleted below
-        (layout, dataBatches)
-      }
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(path, true)
-      fs.delete(outPath, true)
+      stageDir: String = null): (DataFrame, Int) =
+    curationReplay(spark, docs, window, nBatches, nBuckets, stageDir,
+      "curpipe") { src =>
+      // gate 1: decontamination (bloom, no false negatives); the
+      // classifier quality score is gate 2
+      graft.ops.Dedup.bloomScreen(src, "doc_id", "text",
+          benchmark, "text", n, benchShingles)
+        .where(!col("bloom_hit"))
     }
-  }
 
+  /** Replay `events` through the CUSTOM-STATE streaming path
+    * ([[EventStreams.sessionizeStream]], `flatMapGroupsWithState`) in
+    * time-ordered micro-batches, so the per-user session state machine
+    * itself gets a hash-exact correctness row (q107).
+    *
+    * Determinism/parity with the batch [[EventStreams.sessionize]]:
+    *  - the feed is second-truncated UP FRONT (the batch operator
+    *    truncates internally), so both sides session identical
+    *    timestamps;
+    *  - files split the time RANGE into `nBatches` terciles on the
+    *    truncated ts — the split predicate depends only on ts, so a
+    *    user's equal-ts events can never straddle a boundary, and
+    *    cross-batch arrival is time-ordered per user (the state
+    *    machine's requirement); within a batch the operator sorts by
+    *    (ts, event_id), the batch window's exact order. Batch files
+    *    carry EXPLICIT strictly-increasing mtimes ([[frameStager]], 10 s
+    *    apart) — the file source orders and groups by timestamp, and
+    *    wall-clock mtimes are not distinct on coarse-granularity
+    *    filesystems; even a hypothetical merge of two batches stays
+    *    correct (the union is still time-ordered after the in-batch
+    *    sort — only an order INVERSION could break parity, and the
+    *    oracle hash would catch it), but the multibatch proof bit
+    *    demands the batches actually stay separate.
+    *  - a final SENTINEL file carries one far-future event per user
+    *    (event_id −1, ts past every real session's gap), forcing the
+    *    state machine to close and emit every user's LAST session;
+    *    the sentinel's own session stays in state and is never
+    *    emitted, so the emitted set is EXACTLY the batch session set.
+    */
   def sessionizationReplay(spark: SparkSession, events: DataFrame,
       gapMinutes: Int = 30, nBatches: Int = 3,
       stageDir: String = null): (DataFrame, Int) = {
     import spark.implicits._
     require(nBatches >= 2, s"a replay needs ≥ 2 micro-batches, got $nBatches")
-    val dir = Option(stageDir).getOrElse(freshStageDir("sessions"))
     val feed = events.select(
       col("user_id").cast("long").as("user_id"),
       col("event_id").cast("long").as("event_id"),
@@ -905,45 +754,26 @@ object Replay {
     val (tMin, tMax) = feed
       .agg(min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts"))))
       .as[(Long, Long)].head()
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-    try {
+    withStage(spark, stageDir, "sessions") { (dir, fs) =>
       val span = math.max(tMax - tMin, nBatches.toLong)
-      val seen = scala.collection.mutable.Set.empty[String]
-      val base = System.currentTimeMillis() - 3600000L
+      val stage = frameStager(fs, dir)
       for (k <- 0 until nBatches) {
         val lo = tMin + span * k / nBatches
         val hi = tMin + span * (k + 1) / nBatches
-        val part = feed.where(
+        stage(feed.where(
           unix_timestamp(col("ts")) >= lo &&
             (if (k == nBatches - 1) lit(true)
-             else unix_timestamp(col("ts")) < hi))
-        part.coalesce(1).write.mode("append").parquet(dir)
-        stampBatch(fs, path, seen, base, k) // explicit batch order
+             else unix_timestamp(col("ts")) < hi)), k)
       }
       val sentinelTs = tMax + gapMinutes * 60L + 61L
-      feed.select(col("user_id")).distinct()
+      stage(feed.select(col("user_id")).distinct()
         .select(col("user_id"), lit(-1L).as("event_id"),
-          to_timestamp(lit(sentinelTs)).as("ts"))
-        .coalesce(1).write.mode("append").parquet(dir)
-      stampBatch(fs, path, seen, base, nBatches)
-      withFeedSizedShuffle(spark, fs, path) {
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .as[EventStreams.SessionEvent]
-        val name = "graft_replay_sessions"
-        spark.catalog.dropTempView(name)
-        val q = EventStreams.sessionizeStream(src, gapMinutes)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        (spark.table(name), dataBatches)
-      }
-    } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark)
-      fs.delete(path, true)
+          to_timestamp(lit(sentinelTs)).as("ts")), nBatches)
+      val name = "graft_replay_sessions"
+      val p = drain(spark, fs, dir, feed.schema)(src =>
+        toMemory(spark, name, "append")(EventStreams.sessionizeStream(
+          src.as[EventStreams.SessionEvent], gapMinutes)))
+      (spark.table(name), dataBatches(p))
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.FsUtil
 import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -7,6 +8,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
@@ -14,7 +16,20 @@ import scala.jdk.CollectionConverters._
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
 
-  override def afterAll(): Unit = super.afterAll()
+  private val tempDirs = ConcurrentHashMap.newKeySet[Path]()
+
+  /** A fresh directory under the JVM temp dir, named `prefix…`; it is
+    * deleted with everything in it after the suite.
+    */
+  protected def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.asScala.foreach(FsUtil.deleteRecursively)
+    finally super.afterAll()
 
   /** The plan texts (initial and adaptive re-plans) of every SQL
     * execution that submitted a job while `body` ran; a job outside any

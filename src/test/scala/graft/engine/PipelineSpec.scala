@@ -19,7 +19,7 @@ class PipelineSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-pipe").toString
+    tempDir("graft-pipe")
 
   test("run: three stages, per-stage counts, idempotent re-run loads 0 new rows") {
     val root = tmp()

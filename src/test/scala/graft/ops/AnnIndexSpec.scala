@@ -15,7 +15,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }.toDF("vec_id", "embedding")
 
   test("stored-index search equals in-plan ivfTopK under the same centroids") {
-    val dir = Files.createTempDirectory("graft_annidx").toString
+    val dir = tempDir("graft_annidx")
     val e = corpus(40)
     val cents = AnnIndex.buildIvfIndex(e, "vec_id", "embedding",
       s"$dir/ivf", nCells = 4, iters = 3)
@@ -33,7 +33,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("postings layout: hive-partitioned by cell, probe scans prune directories") {
-    val dir = Files.createTempDirectory("graft_annidx2").toString
+    val dir = tempDir("graft_annidx2")
     val e = corpus(40)
     AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf", nCells = 4)
     val post = spark.read.parquet(s"$dir/ivf/postings.parquet")
@@ -58,7 +58,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("build(A) + append(B) search is result-identical to rebuild(A++B) " +
       "under the same stored centroids") {
-    val dir = Files.createTempDirectory("graft_annidx_app").toString
+    val dir = tempDir("graft_annidx_app")
     val all = corpus(48)
     val a = all.where(col("vec_id") % 3 =!= 0)
     val b = all.where(col("vec_id") % 3 === 0)
@@ -92,7 +92,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("append is exactly-once in gen: a replay overwrites itself; a crash " +
       "between postings and meta under-counts until replayed") {
-    val dir = Files.createTempDirectory("graft_annidx_rep").toString
+    val dir = tempDir("graft_annidx_rep")
     val all = corpus(36)
     val a = all.where(col("vec_id") < 24)
     val b = all.where(col("vec_id") >= 24)
@@ -127,7 +127,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("many-query search: no driver collect on the probe side, runtime " +
       "partition pruning in the plan, results identical to the IN-list arm") {
-    val dir = Files.createTempDirectory("graft_annidx_dpp").toString
+    val dir = tempDir("graft_annidx_dpp")
     val e = corpus(40)
     AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf", nCells = 4,
       iters = 3)
@@ -151,7 +151,7 @@ class AnnIndexSpec extends SparkSpecBase {
   test("hardNegativesIndexed: identical to the exact broadcast arm under " +
       "exhaustive probes, cross-label only, null labels match nothing, " +
       "DPP on the probe side") {
-    val dir = Files.createTempDirectory("graft_annidx_hn").toString
+    val dir = tempDir("graft_annidx_hn")
     val e = corpus(40)
       // two labels per cluster so every anchor has same-label near
       // neighbors (the starvation shape pre-filtering exists for);
@@ -189,7 +189,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("append contracts: gen 0 rejected; a rebuild clears stale generations") {
-    val dir = Files.createTempDirectory("graft_annidx_gen").toString
+    val dir = tempDir("graft_annidx_gen")
     val e = corpus(24)
     AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf", nCells = 3)
     intercept[IllegalArgumentException] {
@@ -213,7 +213,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("compaction folds all generations into one negative base; search is " +
       "identical before/after; drift signal and small files reset") {
-    val dir = Files.createTempDirectory("graft_annidx_cmp").toString
+    val dir = tempDir("graft_annidx_cmp")
     val all = corpus(48)
     val a = all.where(col("vec_id") % 3 =!= 0)
     val b1 = all.where(col("vec_id") % 3 === 0 && col("vec_id") % 2 === 0)
@@ -248,7 +248,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("crash between the compacted write and the stale clear leaves a " +
       "search-identical mixed tree; a replayed compaction converges") {
-    val dir = Files.createTempDirectory("graft_annidx_crash").toString
+    val dir = tempDir("graft_annidx_crash")
     val all = corpus(48)
     val a = all.where(col("vec_id") % 3 =!= 0)
     val b = all.where(col("vec_id") % 3 === 0)
@@ -294,7 +294,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("an orphaned _meta generation (crash mid-stale-clear) is purged by " +
       "the replayed compaction and never double-counts base mass") {
-    val dir = Files.createTempDirectory("graft_annidx_orphan").toString
+    val dir = tempDir("graft_annidx_orphan")
     val all = corpus(48)
     val a = all.where(col("vec_id") % 3 =!= 0)
     val b = all.where(col("vec_id") % 3 === 0)
@@ -321,7 +321,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("delete tombstones ids: every search arm excludes them, identically " +
       "to a rebuild of the remaining corpus under frozen centroids") {
-    val dir = Files.createTempDirectory("graft_annidx_del").toString
+    val dir = tempDir("graft_annidx_del")
     val all = corpus(48)
     val cents = AnnIndex.buildIvfIndex(all, "vec_id", "embedding",
       s"$dir/ivf", nCells = 4, iters = 3)
@@ -359,7 +359,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("delete is exactly-once in del; batches accumulate distinct; absent " +
       "ids are a no-op; compaction purges physically and retires the set") {
-    val dir = Files.createTempDirectory("graft_annidx_del2").toString
+    val dir = tempDir("graft_annidx_del2")
     val all = corpus(48)
     AnnIndex.buildIvfIndex(all, "vec_id", "embedding", s"$dir/ivf", nCells = 4)
     val q = all.where(col("vec_id") < 6)
@@ -395,7 +395,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("a full-tombstone compaction refuses loudly and leaves the tree " +
       "readable (empty searches), instead of folding to zero files") {
-    val dir = Files.createTempDirectory("graft_annidx_del5").toString
+    val dir = tempDir("graft_annidx_del5")
     val all = corpus(24)
     AnnIndex.buildIvfIndex(all, "vec_id", "embedding", s"$dir/ivf", nCells = 4)
     AnnIndex.deleteFromIvfIndex(spark, s"$dir/ivf",
@@ -415,7 +415,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("crash orderings cannot resurrect a deleted id: stale tombstones over " +
       "a purged tree are a no-op, and a rebuild retires them with the corpus") {
-    val dir = Files.createTempDirectory("graft_annidx_del3").toString
+    val dir = tempDir("graft_annidx_del3")
     val all = corpus(48)
     AnnIndex.buildIvfIndex(all, "vec_id", "embedding", s"$dir/ivf", nCells = 4)
     val doomed = all.where(col("vec_id") % 4 === 0).select("vec_id")
@@ -447,7 +447,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("filtered search: true ranks within the allowed sub-corpus, identical " +
       "to an index built from the allowed rows under frozen centroids") {
-    val dir = Files.createTempDirectory("graft_annidx_flt").toString
+    val dir = tempDir("graft_annidx_flt")
     val all = corpus(48)
     val allowed = all.where(col("vec_id") % 2 === 0)
     val cents = AnnIndex.buildIvfIndex(all, "vec_id", "embedding",
@@ -490,7 +490,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("maybeRetrain compacts a single-generation tree when tombstones " +
       "have accumulated") {
-    val dir = Files.createTempDirectory("graft_annidx_del4").toString
+    val dir = tempDir("graft_annidx_del4")
     val all = corpus(40)
     val cents = AnnIndex.buildIvfIndex(all, "vec_id", "embedding",
       s"$dir/ivf", nCells = 4)
@@ -506,7 +506,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("maybeRetrain: folds under frozen centroids below tau, rebuilds with " +
       "fresh centroids at tau and above") {
-    val dir = Files.createTempDirectory("graft_annidx_tau").toString
+    val dir = tempDir("graft_annidx_tau")
     val all = corpus(44)
     val a = all.where(col("vec_id") < 40)
     val cents = AnnIndex.buildIvfIndex(a, "vec_id", "embedding", s"$dir/ivf",
@@ -532,7 +532,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("quantized search: exhaustive shortlist equals the exact arm; tight shortlist ranks sanely") {
-    val dir = Files.createTempDirectory("graft_annidx_q").toString
+    val dir = tempDir("graft_annidx_q")
     val e = corpus(40)
     AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf", nCells = 4)
     val q = e.where(col("vec_id") < 6)
@@ -566,7 +566,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("centroids round-trip the trained values exactly") {
-    val dir = Files.createTempDirectory("graft_annidx3").toString
+    val dir = tempDir("graft_annidx3")
     val e = corpus(24)
     val trained = AnnIndex.buildIvfIndex(e, "vec_id", "embedding",
       s"$dir/ivf", nCells = 3, iters = 2)
@@ -574,7 +574,7 @@ class AnnIndexSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       AnnIndex.searchIvfIndex(spark,
         { // an index whose centroid table is empty
-          val d2 = Files.createTempDirectory("graft_annidx4").toString
+          val d2 = tempDir("graft_annidx4")
           spark.emptyDataFrame
             .select(lit(0).as("cell"), array().cast("array<double>").as("centroid"))
             .limit(0).write.parquet(s"$d2/centroids.parquet")
@@ -584,7 +584,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("corrupt vectors quantize to null codes but still land in a cell") {
-    val dir = Files.createTempDirectory("graft_annidx5").toString
+    val dir = tempDir("graft_annidx5")
     val e = corpus(12).union(
       Seq((99L, Array(Float.NaN, 0f, 0f, 0f))).toDF("vec_id", "embedding"))
     AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf", nCells = 3)
@@ -596,7 +596,7 @@ class AnnIndexSpec extends SparkSpecBase {
   test("every index mutation is single-writer: a held lock fails the " +
       "second writer loudly with the holder line, mutates nothing, and " +
       "breakIndexLock recovers a crashed holder") {
-    val dir = Files.createTempDirectory("graft_annlock").toString
+    val dir = tempDir("graft_annlock")
     val idx = s"$dir/ivf"
     val e = corpus(24)
     AnnIndex.buildIvfIndex(e, "vec_id", "embedding", idx, nCells = 3)
@@ -654,7 +654,7 @@ class AnnIndexSpec extends SparkSpecBase {
   test("a crash-orphaned writer lock (dead pid, this host) self-heals: " +
       "the next mutation reclaims it unaided, while a live holder's " +
       "lock still refuses every entry point") {
-    val dir = Files.createTempDirectory("graft_annreclaim").toString
+    val dir = tempDir("graft_annreclaim")
     val idx = s"$dir/ivf"
     AnnIndex.buildIvfIndex(corpus(24), "vec_id", "embedding", idx, nCells = 3)
     val fs = new org.apache.hadoop.fs.Path(idx)
@@ -715,7 +715,7 @@ class AnnIndexSpec extends SparkSpecBase {
       "its distributed write runs aborts at the commit instant — the " +
       "tree is untouched, its completed stage never renamed, and the " +
       "usurper's lock survives") {
-    val dir = Files.createTempDirectory("graft_annfence").toString
+    val dir = tempDir("graft_annfence")
     val idx = s"$dir/ivf"
     AnnIndex.buildIvfIndex(corpus(24), "vec_id", "embedding", idx, nCells = 3)
     val before = spark.read.parquet(s"$idx/postings.parquet")
@@ -777,7 +777,7 @@ class AnnIndexSpec extends SparkSpecBase {
       "(the sub-k norm) rides to the exhaustive width and returns the " +
       "true filtered top-k — never a starved result; every neighbor " +
       "is allowed and rows match the fixed filtered search") {
-    val dir = Files.createTempDirectory("graft_annfconv").toString
+    val dir = tempDir("graft_annfconv")
     val e = corpus(40)
     AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf",
       nCells = 4, iters = 3)
@@ -820,7 +820,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("converged ladder: a sub-k result identical at the first two " +
       "widths is not accepted; it rides to the exhaustive width") {
-    val dir = Files.createTempDirectory("graft_annsubk").toString
+    val dir = tempDir("graft_annsubk")
     val e = corpus(40)
     AnnIndex.buildIvfIndex(e, "vec_id", "embedding", s"$dir/ivf",
       nCells = 4, iters = 3)
@@ -848,7 +848,7 @@ class AnnIndexSpec extends SparkSpecBase {
       "CONCURRENT reader never observes a torn quantizer/postings mix " +
       "while a full rebuild runs, the pointer advances atomically, the " +
       "old tree stays searchable until vacuum reclaims it") {
-    val dir = Files.createTempDirectory("graft_annzdt").toString
+    val dir = tempDir("graft_annzdt")
     val root = s"$dir/idx"
     val small = corpus(24)
     val full = corpus(48)

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.{FilterFileSystem, Path, RawLocalFileSystem}
 
 import graft.SparkSpecBase
@@ -33,7 +31,7 @@ class StagedCommitSpec extends SparkSpecBase {
   test("commitStaged swaps old for new through a tombstone rename: " +
       "success installs the stage, removes the old tree AND its tomb; " +
       "a first commit (no old target) just renames the stage in") {
-    val base = Files.createTempDirectory("graft_staged").toString
+    val base = tempDir("graft_staged")
     val fence = ownedFence(base)
     // first commit: no old target
     mkTree(s"$base/.stage_t_aaaa", "NEW1")
@@ -55,7 +53,7 @@ class StagedCommitSpec extends SparkSpecBase {
   test("a failed stage->target rename RESTORES the old tree from the " +
       "tombstone: the target is old-or-new, never absent (r14 ADVICE " +
       "on the delete-then-rename gap)") {
-    val base = Files.createTempDirectory("graft_staged2").toString
+    val base = tempDir("graft_staged2")
     val fence = ownedFence(base)
     mkTree(s"$base/target", "OLD")
     mkTree(s"$base/.stage_t_cccc", "NEW")
@@ -86,7 +84,7 @@ class StagedCommitSpec extends SparkSpecBase {
       "suppressed note naming the tomb (r15 ADVICE: the old tree is " +
       "stranded and the target absent — the error must say so, not " +
       "imply the old tree was put back)") {
-    val base = Files.createTempDirectory("graft_staged4").toString
+    val base = tempDir("graft_staged4")
     val fence = ownedFence(base)
     mkTree(s"$base/target", "OLD")
     mkTree(s"$base/.stage_t_eeee", "NEW")
@@ -118,7 +116,7 @@ class StagedCommitSpec extends SparkSpecBase {
   test("a fence broken before the commit aborts with the target " +
       "untouched; purgeStages under a broken fence throws before " +
       "deleting anything") {
-    val base = Files.createTempDirectory("graft_staged3").toString
+    val base = tempDir("graft_staged3")
     val lock = new Path(s"$base/_lock")
     val stamp = FsLock.holderStamp("staged-commit-spec")
     assert(FsLock.tryAcquire(fs, lock, stamp))

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class ZOrderSpec extends SparkSpecBase {
   import spark.implicits._
@@ -57,8 +56,8 @@ class ZOrderSpec extends SparkSpecBase {
   }
 
   test("z-order layout prunes both dimensions; linear sort only one") {
-    val zDir = Files.createTempDirectory("graft_z").toString
-    val xDir = Files.createTempDirectory("graft_x").toString
+    val zDir = tempDir("graft_z")
+    val xDir = tempDir("graft_x")
     ZOrder.zorderByN(grid, Seq("x", "y"), numFiles = 16, bitsPer = 7)
       .write.mode("overwrite").parquet(zDir)
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")

@@ -155,6 +155,31 @@ class ReplaySpec extends SparkSpecBase {
     assert(got == expected, s"\n$got\nvs\n$expected")
   }
 
+  test("curation replays release their cached feed when staging fails") {
+    // every id is ≡ 0 mod 3: with nBatches = 3, staging's empty-batch
+    // require fires AFTER classifier training has filled the feed cache
+    val docs = Seq(0L, 3L, 21L, 24L).map { i =>
+      (i, if (i % 7 == 0) "the quick brown fox jumps over the lazy dog"
+          else "BUY NOW!!! 100% FREE $$$ CLICK CLICK")
+    }.toDF("doc_id", "text")
+    val bench = Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
+    val cachedBefore = cachedIds
+    val runs = Seq[() => Any](
+      () => Replay.curationLoaderReplay(spark, docs, window = 16L,
+        nBatches = 3, nBuckets = 64),
+      () => Replay.curationPipelineReplay(spark, docs, bench, window = 16L,
+        nBatches = 3, nBuckets = 64, n = 3, benchShingles = 64L))
+    runs.foreach { run =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("micro-batch 1 is empty"), e.getMessage)
+      // a subset, not equal sizes: the context cleaner may drop an
+      // earlier case's checkpointed RDD in the meantime
+      assert((cachedIds -- cachedBefore).isEmpty,
+        "a failed curation replay left its feed cached in the session")
+    }
+  }
+
   test("streamed takedowns tombstone exactly-once across ≥3 micro-batches " +
       "(injected replay included); search equals rebuild(remaining)") {
     import graft.ops.AnnIndex
